@@ -27,20 +27,16 @@ EPOCH_MS = 1_700_000_000_000  # fixed publish stamp, so staged bytes repeat
 # analytics_session: the data and the pinned query list. The data is a copy
 # of the deterministic TPC-H-style test tables at scale factor 0.01 (seed 42).
 ANALYTICS_DATA = os.path.join(HERE, "data", "sf0.01")
-# headline queries: scan-agg, star join, search-doc build, LSH dedup,
-# brute-force ANN, sessionization
+# headline queries: scan-agg and a six-table star join. The list is short
+# because a run must fit an untimed priming pass and a timed one in about
+# a minute; the other headline and driver-loop queries did not fit.
 HEADLINE_QUERIES = (
     "q1_pricing_summary",
     "q5_region_volume",
-    "search_doc_flagship",
-    "dedup_minhash_lsh",
-    "ann_brute_force_topk",
-    "sessionize_batch",
 )
-# driver-loop queries: eager register iterations on the driver. They run
-# last, in this order: whichever runs first pays ~4 s of warm-up for the
-# loop's code paths, so a seed that moved them would move wall_s.
-DRIVER_LOOP_QUERIES = ("hyperball_reach", "pca_top_components")
+# driver-loop query: eager register iterations on the driver (57 small
+# jobs). It runs last, so the seed never moves it.
+DRIVER_LOOP_QUERIES = ("hyperball_reach",)
 ANALYTICS_QUERIES = HEADLINE_QUERIES + DRIVER_LOOP_QUERIES
 ANALYTICS_WARMUP = ("q1_pricing_summary",)
 
@@ -63,6 +59,11 @@ class CatalogRefresh:
             read_tables_with_columns)
         read_tables_with_columns(spark, f"{self.fx}/sample_table.csv",
                                  f"{self.fx}/sample_col.csv").count()
+
+    def prime(self, spark, tr) -> None:
+        """Only the warmup: the timed pass stays the first run of the job
+        in the process, as a nightly refresh is."""
+        self.warmup(spark)
 
     def trace_points(self) -> list[tuple[object, str, str]]:
         from amundsendatabuilder_spark.jobs import CatalogJob
@@ -142,6 +143,19 @@ class AnalyticsSession:
         for q in ANALYTICS_WARMUP:
             QUERIES[q](spark, ANALYTICS_DATA).collect()
         spark.catalog.clearCache()
+
+    def prime(self, spark, tr) -> None:
+        """Run every query once, untimed, so the timed pass meets compiled
+        code: the first run of the list spent about twice the CPU of later
+        ones, mostly on JIT and code generation."""
+        from amundsendatabuilder_spark.plans.oracle_suite import QUERIES
+        for q in self.order:
+            try:
+                with tr.span(f"prime.{q}"):
+                    QUERIES[q](spark, ANALYTICS_DATA).collect()
+            except Exception:  # the timed pass counts the failure
+                traceback.print_exc()
+            spark.catalog.clearCache()
 
     def trace_points(self) -> list[tuple[object, str, str]]:
         from amundsendatabuilder_spark.plans import oracle_suite
