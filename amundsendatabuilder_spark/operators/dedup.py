@@ -290,14 +290,15 @@ def simhash_signatures(docs: DataFrame, id_col: str = "doc_id",
     signed votes (+1 if bit set, -1 otherwise) are summed; sign of the sum
     is the signature bit. Pure explode+groupBy — no UDF.
     """
-    # r16 (ADVICE r15): the signature builder shifts an INT literal, and
-    # Java's << masks its shift amount to 5 bits — a bits>32 caller
-    # would silently get corrupted signatures (all current call sites
-    # use bits<=16; the 64-bit family goes through
-    # simhash_hamming_pairs_wide's BIGINT-safe path). Guard, don't trust.
-    assert bits <= 32, (
-        "simhash_signatures: bits > 32 would overflow the int shiftleft "
-        "— use simhash_hamming_pairs_wide's BIGINT path")
+    # The signature builder shifts an INT literal: Java's << masks its
+    # shift amount to 5 bits, and shiftleft(1, 31) already sets the sign
+    # bit, so bits=32 gives negative signatures that break arithmetic-
+    # shift banding (all current call sites use bits<=16; the 64-bit
+    # family goes through simhash_hamming_pairs_wide's BIGINT-safe path).
+    if bits > 31:
+        raise ValueError(
+            "simhash_signatures: bits > 31 would overflow the int shiftleft "
+            "— use simhash_hamming_pairs_wide's BIGINT path")
     from amundsendatabuilder_spark.session import ensure_parallelism
     nibbles = bits // 4
     toks = ensure_parallelism(docs).select(

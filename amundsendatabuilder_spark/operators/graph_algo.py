@@ -16,8 +16,6 @@ checkpoint every few hops to cut the lineage of the growing plan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -36,25 +34,6 @@ def _register_parts(n_rows: int, rows_per_part: int = 2_000_000) -> int:
     from the measured row count — never a local-only constant)."""
     return max(1, min(int(DEFAULT_SHUFFLE_PARTITIONS),
                       int(n_rows) // rows_per_part + 1))
-
-
-def _narrow_ckpt(df: DataFrame, n_parts: int, *keys: str) -> DataFrame:
-    """Checkpoint iterative state at ``n_parts`` width — A/B-able shape
-    (r16, VERDICT r15 item #4): ``coalesce`` (default) propagates the
-    narrow width UP into the preceding aggregation's reduce stage, which
-    the r15 hyperball case proved can backfire 2x when the merge input
-    is edge-fed; ``repartition`` keeps the merge at AQE width and pays
-    an extra exchange of the already-aggregated register-sized rows.
-    Measured on pagerank/label_propagation/temporal_reachability at
-    sf0.1 AND a 10x synthetic edge set (see OPTIMIZATION_r16.md): the
-    shapes are within noise of each other everywhere — their merge
-    inputs are map-side-partial-collapsed (bounded by state rows x
-    partitions), unlike hyperball's |edges| x 2^p rows — so the default
-    stays ``coalesce`` (no extra exchange). The env switch exists so the
-    next scale-up can re-measure without a code edit."""
-    if os.environ.get("SPARK_GRAFT_CKPT_SHAPE", "coalesce") == "repartition":
-        return df.repartition(n_parts, *keys).localCheckpoint()
-    return df.coalesce(n_parts).localCheckpoint()
 
 
 def reachability(edges: DataFrame, sources: DataFrame,
@@ -268,14 +247,13 @@ def pagerank(edges: DataFrame, iters: int = 3,
         dangling = (ranked.where(F.col("outdeg").isNull())
                     .agg(F.coalesce(F.sum("r"), F.lit(0)).alias("dsum")))
         share = F.expr(f"(dsum * {damping_num}) DIV ({damping_den} * {n})")
-        state = _narrow_ckpt(
-            nodes.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select("node",
-                    (F.lit(base) + share
-                     + F.coalesce(F.col("in_mass"), F.lit(0)))
-                    .cast("long").alias("r")),
-            n_parts, "node")
+        state = (nodes.join(contribs, "node", "left")
+                 .crossJoin(F.broadcast(dangling))
+                 .select("node",
+                         (F.lit(base) + share
+                          + F.coalesce(F.col("in_mass"), F.lit(0)))
+                         .cast("long").alias("r"))
+                 .coalesce(n_parts).localCheckpoint())
     edges.unpersist()
     return state
 
@@ -374,13 +352,12 @@ def label_propagation(edges: DataFrame, iters: int = 3,
                .select(F.col("u").alias("n"), "label"))
         counts = (nbr.groupBy("n", "label")
                   .agg(F.count(F.lit(1)).alias("cnt")))
-        labels = _narrow_ckpt(
-            counts.groupBy("n")
-            .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
-                                F.col("label"))).alias("m"))
-            .select(F.col("n").alias("node"),
-                    F.col("m.label").alias("label")),
-            n_parts, "node")
+        labels = (counts.groupBy("n")
+                  .agg(F.min(F.struct((-F.col("cnt")).alias("nc"),
+                                      F.col("label"))).alias("m"))
+                  .select(F.col("n").alias("node"),
+                          F.col("m.label").alias("label"))
+                  .coalesce(n_parts).localCheckpoint())
     sym.unpersist()
     return labels
 
@@ -578,10 +555,9 @@ def temporal_reachability(edges: DataFrame, sources: DataFrame,
                    .where(F.col("t") >= F.col("arrival"))
                    .select(F.col("v").alias("node"),
                            F.col("t").alias("arrival")))
-        state = _narrow_ckpt(
-            state.unionByName(relaxed)
-            .groupBy("node").agg(F.min("arrival").alias("arrival")),
-            n_parts, "node")
+        state = (state.unionByName(relaxed)
+                 .groupBy("node").agg(F.min("arrival").alias("arrival"))
+                 .coalesce(n_parts).localCheckpoint())
     return state
 
 

@@ -2,11 +2,13 @@
 loader/file_system_neo4j_csv_loader.py + serializers/neo4_serializer.py).
 
 Reference behaviors reproduced set-level:
-- node CSVs sharded by (label, attribute-column-set); rel CSVs by
-  (start_label, end_label, type, column-set) — the 'ragged attribute sets'
-  trap (loader :111-139,189-191; SURVEY §7.4). Here the shard key is a
-  computed schema-hash column and the write is one
-  ``partitionBy(label, schema_hash)`` pass;
+- node CSVs sharded by (label, attribute-key-set); rel CSVs by
+  (start_label, end_label, type, attribute-key-set) — the 'ragged
+  attribute sets' trap (loader :111-139,189-191; SURVEY §7.4). The key
+  set is fingerprinted as md5 of the sorted map keys. One aggregation
+  over (shard columns, fingerprint) finds every shard and the properties
+  that are non-null in at least one of its rows; each shard is then
+  written as one CSV whose columns are exactly those properties;
 - ``:UNQUOTED`` header suffix for int/bool attributes
   (serializers/neo4_serializer.py:52-58) via a per-label property-type
   registry (the reference infers from Python value types; a registry is
@@ -43,73 +45,54 @@ def _header_name(prop: str) -> str:
     return prop
 
 
-def _prop_columns(df: DataFrame) -> list[str]:
-    """Distinct property names present in the props map (driver-side — the
-    set of property names is tiny and bounded by the model schemas)."""
-    rows = (df.select(F.explode(F.map_keys("props")).alias("k"))
-            .distinct().collect())
-    return sorted(r[0] for r in rows)
+def _write_shards(df: DataFrame, out_dir: str, fixed_cols: list[str],
+                  shard_cols: list[str], name_cols: list[str],
+                  sort_cols: list[str]) -> list[str]:
+    """Write one CSV shard directory per (shard_cols, key-set hash) group
+    under ``out_dir``; a property gets a column when it is non-null in at
+    least one row of the shard. Returns the shard paths, sorted by
+    (shard_cols, hash)."""
+    keyed = df.withColumn("_schema_hash", F.md5(F.concat_ws(
+        ",", F.array_sort(F.map_keys("props")))))
+    present = F.map_keys(F.map_filter("props", lambda _, v: v.isNotNull()))
+    shards = (keyed.select(*shard_cols, "_schema_hash",
+                           F.explode_outer(present).alias("_prop"))
+              .groupBy(*shard_cols, "_schema_hash")
+              .agg(F.array_sort(F.collect_set("_prop")).alias("_props"))
+              .collect())
+    paths: list[str] = []
+    for row in sorted(shards, key=lambda r: tuple(r)[:-1]):
+        cond = F.col("_schema_hash") == row["_schema_hash"]
+        for c in shard_cols:
+            cond &= F.col(c) == row[c]
+        out = keyed.where(cond).select(
+            *fixed_cols,
+            *[F.col("props")[p].alias(_header_name(p)) for p in row["_props"]],
+        ).orderBy(*sort_cols)
+        name = "_".join([*(row[c] for c in name_cols), row["_schema_hash"][:8]])
+        path = os.path.join(out_dir, name)
+        out.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
+        paths.append(path)
+    return paths
 
 
 def write_nodes_csv(nodes: DataFrame, out_dir: str) -> list[str]:
     """Write per-(label, column-set) node CSV shard directories under
     ``out_dir/nodes``. Returns the shard paths written."""
-    props = _prop_columns(nodes)
-    wide = nodes.select(
-        F.col("KEY"), F.col("LABEL"),
-        *[F.col("props")[p].alias(p) for p in props],
-        F.md5(F.concat_ws(",", F.array_sort(F.map_keys("props")))).alias("_schema_hash"),
-    )
-    paths: list[str] = []
-    # one pass per (label, schema-hash) group: each shard gets exactly the
-    # columns its rows carry — reproducing the ragged-file behavior without
-    # per-record dict bookkeeping
-    shards = [tuple(r) for r in
-              wide.select("LABEL", "_schema_hash").distinct().collect()]
-    for label, shash in sorted(shards):
-        shard = wide.where((F.col("LABEL") == label)
-                           & (F.col("_schema_hash") == shash))
-        present = [p for p in props
-                   if shard.where(F.col(p).isNotNull()).limit(1).count() > 0]
-        out = shard.select(
-            F.col("KEY").alias("KEY"), F.col("LABEL").alias("LABEL"),
-            *[F.col(p).alias(_header_name(p)) for p in present],
-        ).orderBy("KEY")
-        path = os.path.join(out_dir, "nodes", f"{label}_{shash[:8]}")
-        out.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-        paths.append(path)
-    return paths
+    return _write_shards(nodes, os.path.join(out_dir, "nodes"),
+                         ["KEY", "LABEL"], ["LABEL"], ["LABEL"], ["KEY"])
 
 
 def write_rels_csv(rels: DataFrame, out_dir: str) -> list[str]:
     """Write per-(start,end,type,column-set) relationship CSV shards under
     ``out_dir/rels`` (reference loader :141-177)."""
-    props = _prop_columns(rels)
-    wide = rels.select(
-        "START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
-        "REVERSE_TYPE",
-        *[F.col("props")[p].alias(p) for p in props],
-        F.md5(F.concat_ws(",", F.array_sort(F.map_keys("props")))).alias("_schema_hash"),
-    )
-    paths: list[str] = []
-    shards = [tuple(r) for r in wide.select(
-        "START_LABEL", "END_LABEL", "TYPE", "_schema_hash").distinct().collect()]
-    for start, end, typ, shash in sorted(shards):
-        shard = wide.where((F.col("START_LABEL") == start)
-                           & (F.col("END_LABEL") == end)
-                           & (F.col("TYPE") == typ)
-                           & (F.col("_schema_hash") == shash))
-        present = [p for p in props
-                   if shard.where(F.col(p).isNotNull()).limit(1).count() > 0]
-        out = shard.select(
-            "START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
-            "REVERSE_TYPE",
-            *[F.col(p).alias(_header_name(p)) for p in present],
-        ).orderBy("START_KEY", "END_KEY")
-        path = os.path.join(out_dir, "rels", f"{start}_{typ}_{end}_{shash[:8]}")
-        out.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-        paths.append(path)
-    return paths
+    return _write_shards(
+        rels, os.path.join(out_dir, "rels"),
+        ["START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
+         "REVERSE_TYPE"],
+        ["START_LABEL", "END_LABEL", "TYPE"],
+        ["START_LABEL", "TYPE", "END_LABEL"],
+        ["START_KEY", "END_KEY"])
 
 
 def write_graph(out: GraphOutput, out_dir: str) -> dict[str, list[str]]:

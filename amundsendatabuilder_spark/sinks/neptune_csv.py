@@ -21,9 +21,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark.models.base import GraphOutput
-from amundsendatabuilder_spark.sinks.graph_csv import UNQUOTED_PROPS, _prop_columns
+from amundsendatabuilder_spark.sinks.graph_csv import UNQUOTED_PROPS
 
 _NEPTUNE_TYPES = {"int": "Long(single)", "bool": "Bool(single)"}
+
+
+def _prop_columns(df: DataFrame) -> list[str]:
+    """Distinct property names present in the props map (driver-side — the
+    set of property names is tiny and bounded by the model schemas)."""
+    rows = (df.select(F.explode(F.map_keys("props")).alias("k"))
+            .distinct().collect())
+    return sorted(r[0] for r in rows)
 
 
 def _typed_header(prop: str) -> str:

@@ -3,6 +3,7 @@ mirroring the reference's tests/unit/models/ strategy (SURVEY §5)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import FIXTURES
@@ -150,6 +151,33 @@ def test_graph_validation(tables_df):
     out = expand_tables(tables_df)
     checks = validate_graph(out, strict=True)  # should not raise
     assert all(df.limit(1).count() == 0 for df in checks.values())
+
+
+@pytest.mark.parametrize("check", ["node_key_null", "node_label_not_title",
+                                   "rel_type_not_upper", "rel_key_null"])
+def test_graph_validation_strict_raises(spark, check):
+    from amundsendatabuilder_spark.models.base import GraphOutput, validate_graph
+    node = ("k1", "Table", {})
+    rel = ("k1", "Table", "k2", "Column", "COLUMN", "COLUMN_OF", {})
+    bad = {"node_key_null": ([(None, "Table", {})], []),
+           "node_label_not_title": ([("k3", "table", {})], []),
+           "rel_type_not_upper": ([], [rel[:4] + ("column",) + rel[5:]]),
+           "rel_key_null": ([], [(None,) + rel[1:]])}
+    extra_nodes, extra_rels = bad[check]
+
+    def graph(nodes, rels):
+        return GraphOutput(
+            spark.createDataFrame(
+                nodes, "KEY string, LABEL string, props map<string,string>"),
+            spark.createDataFrame(
+                rels, "START_KEY string, START_LABEL string, END_KEY string, "
+                      "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+                      "props map<string,string>"))
+
+    validate_graph(graph([node], [rel]), strict=True)  # clean: no raise
+    with pytest.raises(ValueError, match=check):
+        validate_graph(graph([node] + extra_nodes, [rel] + extra_rels),
+                       strict=True)
 
 
 def test_expand_users_manager_self_join(spark):

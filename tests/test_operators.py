@@ -48,6 +48,9 @@ def test_simhash_identical_docs_same_sig(docs):
     assert sigs[1] == sigs[4]
     assert sigs[1] != sigs[3]
     assert 0 <= sigs[1] < 2 ** 16
+    # bits=32 would shift into the int sign bit
+    with pytest.raises(ValueError, match="bits > 31"):
+        simhash_signatures(docs, bits=32)
 
 
 def test_embedding_near_duplicates(spark):

@@ -1,6 +1,7 @@
 """Sink tests: graph CSV sharding with :UNQUOTED headers, ES JSON sorted
 keys + alias-swap ordering, publish batching, staleness sweep guard."""
 
+import csv
 import glob
 import json
 import os
@@ -25,6 +26,47 @@ def test_graph_csv_shards(tables_df, tmp_path):
     # nodes (name+is_view) land in different files
     labels = {os.path.basename(p).split("_")[0] for p in paths["nodes"]}
     assert {"Table", "Column", "Tag", "Badge", "Database"} <= labels
+
+
+def _shard_rows(path):
+    with open(glob.glob(os.path.join(path, "*.csv"))[0]) as f:
+        return list(csv.reader(f))
+
+
+def test_graph_csv_ragged_null_props(spark, tmp_path):
+    """A property gets a shard column when it is non-null in at least one
+    of the shard's rows, even when the maps carry null-valued entries."""
+    from amundsendatabuilder_spark.models.base import GraphOutput
+    from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+
+    def props(i):
+        return {"name": f"n{i}", "never": None,
+                "sort_order": str(i) if i % 2 else None}
+
+    nodes = spark.createDataFrame(
+        [(f"k{i}", "Thing", props(i)) for i in (3, 1, 2)],
+        "KEY string, LABEL string, props map<string,string>")
+    rels = spark.createDataFrame(
+        [(f"k{i}", "Thing", "e", "Other", "HAS", "HAS_OF", props(i))
+         for i in (2, 3, 1)],
+        "START_KEY string, START_LABEL string, END_KEY string, "
+        "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+        "props map<string,string>")
+    paths = write_graph(GraphOutput(nodes, rels), str(tmp_path))
+    assert len(paths["nodes"]) == 1 and len(paths["rels"]) == 1
+    assert os.path.basename(paths["nodes"][0]).startswith("Thing_")
+    assert os.path.basename(paths["rels"][0]).startswith("Thing_HAS_Other_")
+    assert _shard_rows(paths["nodes"][0]) == [
+        ["KEY", "LABEL", "name", "sort_order:UNQUOTED"],
+        ["k1", "Thing", "n1", "1"],
+        ["k2", "Thing", "n2", ""],
+        ["k3", "Thing", "n3", "3"]]
+    assert _shard_rows(paths["rels"][0]) == [
+        ["START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
+         "REVERSE_TYPE", "name", "sort_order:UNQUOTED"],
+        ["k1", "Thing", "e", "Other", "HAS", "HAS_OF", "n1", "1"],
+        ["k2", "Thing", "e", "Other", "HAS", "HAS_OF", "n2", ""],
+        ["k3", "Thing", "e", "Other", "HAS", "HAS_OF", "n3", "3"]]
 
 
 def test_es_json_sorted_keys(spark, tmp_path):
