@@ -65,17 +65,31 @@ class CatalogJob:
             batch_size: int = 500,
             create_only_labels: frozenset[str] = frozenset()) -> dict:
         """Stage and/or publish; returns a summary dict (the statsd
-        success/fail counter analog, reference job/job.py:78-86)."""
+        success/fail counter analog, reference job/job.py:78-86) with the
+        seconds of each phase: ``graph_s`` (union, validate, stamp),
+        ``count_s`` (cache and count), ``stage_s`` and ``publish_s``
+        (writers and finalizers); a phase with nothing to do records ~0."""
         t0 = time.time()
         summary: dict = {"publish_tag": self.publish_tag}
+        last = t0
+
+        def lap(phase: str) -> None:
+            nonlocal last
+            now = time.time()
+            summary[phase] = round(now - last, 2)
+            last = now
+
         try:
             graph = self.graph()
+            lap("graph_s")
             graph.nodes.cache(), graph.rels.cache()
             summary["nodes"] = graph.nodes.count()
             summary["rels"] = graph.rels.count()
+            lap("count_s")
             if stage_dir is not None:
                 from amundsendatabuilder_spark.sinks.graph_csv import write_graph
                 summary["staged"] = write_graph(graph, stage_dir)
+            lap("stage_s")
             if node_writer is not None:
                 from amundsendatabuilder_spark.plans.publish import publish_nodes
                 publish_nodes(graph.nodes, node_writer, batch_size,
@@ -85,6 +99,7 @@ class CatalogJob:
                 publish_rels(graph.rels, rel_writer, batch_size)
             for fn in self._finalizers:
                 fn()
+            lap("publish_s")
             summary["status"] = "success"
             return summary
         except Exception:

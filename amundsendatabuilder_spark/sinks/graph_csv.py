@@ -5,10 +5,7 @@ Reference behaviors reproduced set-level:
 - node CSVs sharded by (label, attribute-key-set); rel CSVs by
   (start_label, end_label, type, attribute-key-set) — the 'ragged
   attribute sets' trap (loader :111-139,189-191; SURVEY §7.4). The key
-  set is fingerprinted as md5 of the sorted map keys. One aggregation
-  over (shard columns, fingerprint) finds every shard and the properties
-  that are non-null in at least one of its rows; each shard is then
-  written as one CSV whose columns are exactly those properties;
+  set is fingerprinted as md5 of the sorted map keys;
 - ``:UNQUOTED`` header suffix for int/bool attributes
   (serializers/neo4_serializer.py:52-58) via a per-label property-type
   registry (the reference infers from Python value types; a registry is
@@ -16,11 +13,27 @@ Reference behaviors reproduced set-level:
 - output ordering is canonical (sorted), an intentional semantics-
   preserving difference from the reference's extraction-order files
   (SURVEY §7.4).
+
+The whole graph is staged with two Spark actions:
+1. one aggregation over nodes and rels together finds every shard and
+   the properties that are non-null in at least one of its rows;
+2. one write. Each row becomes its shard's CSV line via ``to_csv`` over
+   exactly that shard's columns (the CSV writer's own generator and
+   defaults, so quoting matches it byte for byte); one header line per
+   shard is added; the lines are partitioned by (kind, shard), sorted
+   within each partition and written as text. The local staging tree is
+   then moved into ``out_dir/{nodes,rels}/{shard}/part-*.csv``, one part
+   file per shard.
 """
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+from functools import reduce
+from typing import NamedTuple
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -45,56 +58,116 @@ def _header_name(prop: str) -> str:
     return prop
 
 
-def _write_shards(df: DataFrame, out_dir: str, fixed_cols: list[str],
-                  shard_cols: list[str], name_cols: list[str],
-                  sort_cols: list[str]) -> list[str]:
-    """Write one CSV shard directory per (shard_cols, key-set hash) group
-    under ``out_dir``; a property gets a column when it is non-null in at
-    least one row of the shard. Returns the shard paths, sorted by
-    (shard_cols, hash)."""
-    keyed = df.withColumn("_schema_hash", F.md5(F.concat_ws(
-        ",", F.array_sort(F.map_keys("props")))))
+class _Kind(NamedTuple):
+    """How one side of the graph is sharded: ``fixed`` columns lead every
+    row, shards are keyed by ``shard`` columns plus the key-set hash and
+    named by ``dir_name`` columns plus the hash's first 8 hex digits, and
+    rows are sorted by ``sort`` columns."""
+    name: str
+    fixed: list[str]
+    shard: list[str]
+    dir_name: list[str]
+    sort: list[str]
+
+
+_NODES = _Kind("nodes", ["KEY", "LABEL"], ["LABEL"], ["LABEL"], ["KEY"])
+_RELS = _Kind("rels",
+              ["START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
+               "REVERSE_TYPE"],
+              ["START_LABEL", "END_LABEL", "TYPE"],
+              ["START_LABEL", "TYPE", "END_LABEL"],
+              ["START_KEY", "END_KEY"])
+
+
+def _tag(df: DataFrame, kind: _Kind) -> DataFrame:
+    """Add each row's kind, shard directory name, shard order key and
+    sort key."""
+    h = F.md5(F.concat_ws(",", F.array_sort(F.map_keys("props"))))
+    return df.select(
+        *kind.fixed, "props", F.lit(kind.name).alias("_kind"),
+        F.concat_ws("_", *kind.dir_name, F.substring(h, 1, 8)).alias("_dir"),
+        F.array(*kind.shard, h).alias("_order"),
+        F.array(*kind.sort).alias("_sort"))
+
+
+def _stage(out_dir: str, sides: list[tuple[_Kind, DataFrame]]
+           ) -> dict[str, list[str]]:
+    """Stage each (kind, frame) side as ragged CSV shards under
+    ``out_dir/{kind}``, replacing shard directories of the same name.
+    Returns each kind's shard paths, sorted by (shard columns, hash)."""
+    tagged = [(kind, _tag(df, kind)) for kind, df in sides]
     present = F.map_keys(F.map_filter("props", lambda _, v: v.isNotNull()))
-    shards = (keyed.select(*shard_cols, "_schema_hash",
-                           F.explode_outer(present).alias("_prop"))
-              .groupBy(*shard_cols, "_schema_hash")
-              .agg(F.array_sort(F.collect_set("_prop")).alias("_props"))
-              .collect())
-    paths: list[str] = []
-    for row in sorted(shards, key=lambda r: tuple(r)[:-1]):
-        cond = F.col("_schema_hash") == row["_schema_hash"]
-        for c in shard_cols:
-            cond &= F.col(c) == row[c]
-        out = keyed.where(cond).select(
-            *fixed_cols,
-            *[F.col("props")[p].alias(_header_name(p)) for p in row["_props"]],
-        ).orderBy(*sort_cols)
-        name = "_".join([*(row[c] for c in name_cols), row["_schema_hash"][:8]])
-        path = os.path.join(out_dir, name)
-        out.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
-        paths.append(path)
-    return paths
+    shards = sorted(
+        reduce(DataFrame.unionByName,
+               [t.select("_kind", "_dir", "_order",
+                         F.explode_outer(present).alias("_prop"))
+                for _, t in tagged])
+        .groupBy("_kind", "_dir", "_order")
+        .agg(F.array_sort(F.collect_set("_prop")).alias("_props"))
+        .collect(), key=lambda r: r["_order"])
+    out = {kind.name: [os.path.join(out_dir, kind.name, r["_dir"])
+                       for r in shards if r["_kind"] == kind.name]
+           for kind, _ in sides}
+    if not shards:
+        return out
+
+    lines, headers = [], []
+    for kind, t in tagged:
+        groups: dict[tuple[str, ...], list[str]] = {}
+        for r in shards:
+            if r["_kind"] == kind.name:
+                groups.setdefault(tuple(r["_props"]), []).append(r["_dir"])
+                headers.append((kind.name, r["_dir"], 0, None, ",".join(
+                    [*kind.fixed, *map(_header_name, r["_props"])])))
+        if not groups:  # an empty side has no shard and no when() branch
+            continue
+        value = None
+        for props, dirs in groups.items():
+            line = F.to_csv(F.struct(
+                *kind.fixed,
+                *[F.col("props")[p].alias(_header_name(p)) for p in props]))
+            cond = F.col("_dir").isin(dirs)
+            value = (F.when(cond, line) if value is None
+                     else value.when(cond, line))
+        lines.append(t.select("_kind", "_dir", F.lit(1).alias("_h"), "_sort",
+                              value.alias("value")))
+    lines.append(sides[0][1].sparkSession.createDataFrame(
+        headers, "_kind string, _dir string, _h int, _sort array<string>, "
+                 "value string"))
+    tmp = os.path.join(out_dir, "_staging")
+    (reduce(DataFrame.unionByName, lines)
+     .repartition("_kind", "_dir")
+     .sortWithinPartitions("_kind", "_dir", "_h", "_sort")
+     .select("_kind", "_dir", "value")
+     .write.mode("overwrite").partitionBy("_kind", "_dir").text(tmp))
+
+    # tmp/_kind=K/_dir=D/part-*.txt -> out_dir/K/D/part-*.csv
+    for src in glob.glob(os.path.join(glob.escape(tmp), "_kind=*",
+                                       "_dir=*")):
+        kind_part, dir_part = src.split(os.sep)[-2:]
+        dst = os.path.join(out_dir, kind_part[len("_kind="):],
+                           unquote(dir_part[len("_dir="):]))
+        shutil.rmtree(dst, ignore_errors=True)
+        os.makedirs(dst)
+        for part in glob.glob(os.path.join(glob.escape(src), "part-*")):
+            os.replace(part, os.path.join(
+                dst, os.path.splitext(os.path.basename(part))[0] + ".csv"))
+    shutil.rmtree(tmp)
+    return out
 
 
 def write_nodes_csv(nodes: DataFrame, out_dir: str) -> list[str]:
     """Write per-(label, column-set) node CSV shard directories under
     ``out_dir/nodes``. Returns the shard paths written."""
-    return _write_shards(nodes, os.path.join(out_dir, "nodes"),
-                         ["KEY", "LABEL"], ["LABEL"], ["LABEL"], ["KEY"])
+    return _stage(out_dir, [(_NODES, nodes)])["nodes"]
 
 
 def write_rels_csv(rels: DataFrame, out_dir: str) -> list[str]:
     """Write per-(start,end,type,column-set) relationship CSV shards under
     ``out_dir/rels`` (reference loader :141-177)."""
-    return _write_shards(
-        rels, os.path.join(out_dir, "rels"),
-        ["START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
-         "REVERSE_TYPE"],
-        ["START_LABEL", "END_LABEL", "TYPE"],
-        ["START_LABEL", "TYPE", "END_LABEL"],
-        ["START_KEY", "END_KEY"])
+    return _stage(out_dir, [(_RELS, rels)])["rels"]
 
 
 def write_graph(out: GraphOutput, out_dir: str) -> dict[str, list[str]]:
-    return {"nodes": write_nodes_csv(out.nodes, out_dir),
-            "rels": write_rels_csv(out.rels, out_dir)}
+    """Stage nodes and rels with one shard aggregation and one write."""
+    return _stage(out_dir, [(_NODES, out.nodes), (_RELS, out.rels)])

@@ -428,14 +428,11 @@ def main() -> None:
         return med
 
     # calibrate AFTER warmup, BEFORE the timed queries — and AGAIN after
-    # the last query: the r12 adjudication measured the box drifting
-    # +-40% WITHIN a session, so one probe per run under-states drift;
-    # start/end pairs bound it. r16 (VERDICT r15 item #7): a THIRD probe
-    # fires mid-headline (after the 13th headline query) so a storm
-    # INSIDE the headline window — which the r15 brackets missed — is
-    # detectable from the record; it is reported only, never folded into
-    # the value_calib_adjusted mean (the bracket-mean formula is pinned
-    # cross-round).
+    # the last query: the box can drift +-40% within a session, so
+    # start/end pairs bound it. A third probe fires after the middle
+    # headline query so a storm inside the headline window shows in the
+    # record; it is reported only, never folded into the
+    # value_calib_adjusted mean (the bracket-mean formula is pinned).
     calib = calibration_probe(spark)
     print(f"# calibration_probe: {calib}s", file=sys.stderr)
 
@@ -443,7 +440,7 @@ def main() -> None:
     extended = _extended_to_run()
     for i, name in enumerate(HEADLINE + extended):
         timings[name] = bench(name)
-        if i == 12:  # after the 13th headline query
+        if i == len(HEADLINE) // 2:
             calib_mid = calibration_probe(spark)
             print(f"# calibration_probe_mid: {calib_mid}s", file=sys.stderr)
 

@@ -14,6 +14,10 @@ def test_job_compose_stage_and_finalize(spark, tables_df, tmp_path):
     assert summary["status"] == "success"
     assert summary["nodes"] > 0 and summary["rels"] > 0
     assert finalized == [True]
+    phases = [summary[k] for k in ("graph_s", "count_s", "stage_s",
+                                   "publish_s")]
+    assert all(s >= 0 for s in phases) and summary["stage_s"] > 0
+    assert sum(phases) <= summary["elapsed_sec"] + 0.05
     # every node carries the tag
     tagged = job.graph().nodes.where(
         "props['published_tag'] = 't1'").count()

@@ -69,6 +69,80 @@ def test_graph_csv_ragged_null_props(spark, tmp_path):
         ["k3", "Thing", "e", "Other", "HAS", "HAS_OF", "n3", "3"]]
 
 
+def test_graph_csv_nodes_only(spark, tmp_path):
+    """A graph with no rels stages its node shards and no rel shard."""
+    from amundsendatabuilder_spark.models.base import GraphOutput, _empty_rels
+    from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+    nodes = spark.createDataFrame(
+        [("k1", "Thing", {"name": "a"})],
+        "KEY string, LABEL string, props map<string,string>")
+    paths = write_graph(GraphOutput(nodes, _empty_rels(spark)), str(tmp_path))
+    assert paths["rels"] == [] and len(paths["nodes"]) == 1
+    assert _shard_rows(paths["nodes"][0]) == [
+        ["KEY", "LABEL", "name"], ["k1", "Thing", "a"]]
+    assert sorted(os.listdir(tmp_path)) == ["nodes"]
+
+
+def test_graph_csv_quoting_matches_csv_writer(spark, tmp_path):
+    """A staged shard is byte-equal to the DataFrame CSV writer's output
+    for the same columns and row order."""
+    from amundsendatabuilder_spark.models.base import GraphOutput, _empty_rels
+    from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+    values = ["a,b", 'say "hi"', "two\nlines", "crlf\r\nend",
+              "  padded  ", "", None, "naïve – 東京", "back\\slash", '"']
+    nodes = spark.createDataFrame(
+        [(f"k{i:02d}", "Thing", {"name": f"n{i}", "v": v})
+         for i, v in enumerate(values)],
+        "KEY string, LABEL string, props map<string,string>")
+    (shard,) = write_graph(GraphOutput(nodes, _empty_rels(spark)),
+                           str(tmp_path / "staged"))["nodes"]
+    oracle = str(tmp_path / "oracle")
+    (nodes.select("KEY", "LABEL", nodes.props["name"].alias("name"),
+                  nodes.props["v"].alias("v"))
+     .orderBy("KEY").coalesce(1).write.option("header", True).csv(oracle))
+
+    def part_bytes(path):
+        (part,) = glob.glob(os.path.join(path, "part-*.csv"))
+        with open(part, "rb") as f:
+            return f.read()
+    assert part_bytes(shard) == part_bytes(oracle)
+
+
+def test_graph_csv_restage_replaces_shards(spark, tmp_path):
+    """Staging twice into one directory leaves only the second run's rows
+    and no staging directories; the staged graph still reads back."""
+    from amundsendatabuilder_spark.models.base import GraphOutput
+    from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+    from amundsendatabuilder_spark.sources.graph import read_staged_graph
+
+    def graph(n):
+        nodes = spark.createDataFrame(
+            [(f"k{i}", "Thing", {"name": f"n{i}"}) for i in range(n)],
+            "KEY string, LABEL string, props map<string,string>")
+        rels = spark.createDataFrame(
+            [(f"k{i}", "Thing", "k0", "Thing", "HAS", "HAS_OF", {})
+             for i in range(1, n)],
+            "START_KEY string, START_LABEL string, END_KEY string, "
+            "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+            "props map<string,string>")
+        return GraphOutput(nodes, rels)
+
+    out = str(tmp_path)
+    first = write_graph(graph(5), out)
+    second = write_graph(graph(3), out)
+    assert second == first
+    assert _shard_rows(second["nodes"][0])[1:] == [
+        ["k0", "Thing", "n0"], ["k1", "Thing", "n1"], ["k2", "Thing", "n2"]]
+    assert len(_shard_rows(second["rels"][0])) == 3
+    for shard in second["nodes"] + second["rels"]:
+        assert len(glob.glob(os.path.join(shard, "part-*.csv"))) == 1
+    dirs = [d for _, ds, _ in os.walk(out) for d in ds]
+    assert not [d for d in dirs if d == "_staging" or "=" in d]
+    g = read_staged_graph(spark, out)
+    assert sorted(r.KEY for r in g.nodes.collect()) == ["k0", "k1", "k2"]
+    assert g.rels.count() == 2
+
+
 def test_es_json_sorted_keys(spark, tmp_path):
     from amundsendatabuilder_spark.sinks.es_json import write_documents
     df = spark.createDataFrame([(1, "b", "a")], "zz int, mm string, aa string")
