@@ -57,10 +57,16 @@ def leakage_safe_split(docs: DataFrame, pairs: DataFrame,
     side, even though the assignment is a projection OF docs. Keeping
     the columns here makes "train slice of the corpus" a filter, not a
     join. Default () keeps the certified mapping-table output exactly.
+    ``keep`` must not name an output or join column (``id_col``,
+    group_key, split, component): that raises ValueError.
     """
     from amundsendatabuilder_spark.operators.graph_algo import (
         connected_components)
     assert abs(sum(w for _n, w in weights) - 1.0) < 1e-9
+    clash = set(keep) & {id_col, "group_key", "split", "component"}
+    if clash:
+        raise ValueError(f"leakage_safe_split keep= overlaps its own "
+                         f"columns: {sorted(clash)}")
     comps = connected_components(pairs, src_col=pair_cols[0],
                                  dst_col=pair_cols[1])
     joined = docs.select(F.col(id_col), *[F.col(c) for c in keep]).join(

@@ -774,15 +774,15 @@ def embedding_near_duplicates(emb: DataFrame, id_col: str = "vec_id",
     # dedup_embedding_cosine_bucketed's 6.2 s in one 3-task job). The
     # pinned width (explicit N => AQE leaves it) keyed by id_a is
     # reused by BOTH the distinct and the id_a-side verify join, so no
-    # exchange is added at any scale. Width = conf/env session shuffle
-    # width, never a local constant.
-    from amundsendatabuilder_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+    # exchange is added at any scale. Width = the live session's
+    # shuffle width, never a local constant.
+    from amundsendatabuilder_spark.session import shuffle_width
     cands = (sigs.alias("x").join(
         sigs.alias("y"),
         (F.col("x.band") == F.col("y.band")) & (F.col("x.sig") == F.col("y.sig"))
         & (F.col("x.id") < F.col("y.id")))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .repartition(int(DEFAULT_SHUFFLE_PARTITIONS), "id_a")
+        .repartition(shuffle_width(sigs.sparkSession), "id_a")
         .distinct())
     return (cands.join(a, "id_a").join(b, "id_b")
             .withColumn("cos", cos)
@@ -1058,14 +1058,14 @@ def jaccard_prefix_join(docs: DataFrame, threshold_num: int = 3,
     # shares the box gracefully. Pinned width (explicit N => AQE leaves
     # it) keyed by doc_a: the (doc_a, doc_b, ...) distinct AND the
     # doc_a-side verify join both reuse this one exchange, so nothing
-    # is added at cluster scale. Width = conf/env session shuffle width.
-    from amundsendatabuilder_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+    # is added at cluster scale. Width = the live session's shuffle width.
+    from amundsendatabuilder_spark.session import shuffle_width
     cands = (a.join(b, "tok")
              .where((F.col("doc_a") < F.col("doc_b"))
                     & (F.col("szb") * td >= F.col("sza") * tn)
                     & (F.col("szb") * tn <= F.col("sza") * td))
              .select("doc_a", "doc_b", "sza", "szb")
-             .repartition(int(DEFAULT_SHUFFLE_PARTITIONS), "doc_a")
+             .repartition(shuffle_width(a.sparkSession), "doc_a")
              .distinct())
     # Verify with array_intersect over each doc's (already-distinct)
     # token set instead of re-exploding candidate x token rows through a

@@ -16,23 +16,22 @@ checkpoint every few hops to cut the lineage of the growing plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from amundsendatabuilder_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+from amundsendatabuilder_spark.session import shuffle_width
 
 
-def _register_parts(n_rows: int, rows_per_part: int = 2_000_000) -> int:
-    """Partition count for an n_rows iteration-state checkpoint (r15,
-    guide §2.4/§5 + the connected_components n_parts lesson generalized):
-    localCheckpoint materializes the PRE-AQE-coalesce partitioning, so a
-    15k-row label/rank/register table checkpointed every round costs a
-    full shuffle-width task wave per round for nothing. State rows here
-    are ~16–50 bytes, so ~2M rows/partition keeps partitions in the
-    tens-of-MB range; the cap at the configured shuffle width means
-    cluster-scale graphs keep full parallelism (scale-adaptive, derived
-    from the measured row count — never a local-only constant)."""
-    return max(1, min(int(DEFAULT_SHUFFLE_PARTITIONS),
+def _register_parts(spark: SparkSession, n_rows: int,
+                    rows_per_part: int = 2_000_000) -> int:
+    """Partition count for an n_rows iteration-state checkpoint.
+    localCheckpoint materializes the pre-AQE-coalesce partitioning, so a
+    small label/rank/register table checkpointed every round at the full
+    shuffle width costs a task wave per round for nothing. State rows
+    are ~16-50 bytes, so ~2M rows per partition keeps partitions in the
+    tens of MB; the cap at the live session's shuffle width keeps
+    cluster-scale graphs fully parallel."""
+    return max(1, min(shuffle_width(spark),
                       int(n_rows) // rows_per_part + 1))
 
 
@@ -165,7 +164,7 @@ def connected_components_small(edges: DataFrame,
     # for nothing. ~200k edges per partition; grows with the graph.
     n_edges = sym.count()
     edges.unpersist()  # sym is materialized now; the input cache is done
-    n_parts = max(1, min(int(DEFAULT_SHUFFLE_PARTITIONS),
+    n_parts = max(1, min(shuffle_width(sym.sparkSession),
                          n_edges // 200_000 + 1))
     labels = (sym.select("a").distinct()
               .select(F.col("a").alias("node"), F.col("a").alias("component")))
@@ -228,7 +227,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
     # r15: rank/degree state is (node, long) rows — checkpoint at a
     # node-count-derived width instead of a full shuffle-width task wave
     # per iteration (see _register_parts)
-    n_parts = _register_parts(n)
+    n_parts = _register_parts(edges.sparkSession, n)
     outdeg = (edges.groupBy(F.col("src").alias("node"))
               .agg(F.count(F.lit(1)).alias("outdeg"))
               .coalesce(n_parts).localCheckpoint())
@@ -304,8 +303,8 @@ def triangle_counts(edges: DataFrame,
     # (3.6 s/32 tasks vs 1.3 s spread). The (a, b) key spreads wedge
     # work evenly; at cluster scale the wedge join re-exchanges these
     # 16-byte rows by its own keys regardless, so the even spread costs
-    # nothing extra. Width = conf/env session shuffle width.
-    o = (o.repartition(int(DEFAULT_SHUFFLE_PARTITIONS), "a", "b")
+    # nothing extra. Width = the live session's shuffle width.
+    o = (o.repartition(shuffle_width(o.sparkSession), "a", "b")
          .localCheckpoint())
     w = (o.alias("e1")
          .join(o.alias("e2"), F.col("e1.b") == F.col("e2.a"))
@@ -344,7 +343,7 @@ def label_propagation(edges: DataFrame, iters: int = 3,
            .distinct().localCheckpoint())
     # r15: label state is (node, long) — size its per-sweep checkpoints
     # to the materialized edge count, not the shuffle-width constant
-    n_parts = _register_parts(sym.count())
+    n_parts = _register_parts(sym.sparkSession, sym.count())
     labels = (sym.select(F.col("u").alias("node")).distinct()
               .select("node", F.col("node").alias("label")))
     for _ in range(iters):
@@ -442,7 +441,8 @@ def hash_walks(edges: DataFrame, walk_len: int = 3,
                 else adj.select(F.col("u").alias("start")))
     # r15: the frontier is (start, walk, cur) — ~walks_per_node x nodes
     # small rows; size its per-step checkpoints to that count
-    n_parts = _register_parts(adj.count() * walks_per_node)
+    n_parts = _register_parts(adj.sparkSession,
+                              adj.count() * walks_per_node)
     frontier = (start_df.select(
         "start",
         F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1)))
@@ -498,7 +498,7 @@ def feature_propagation(edges: DataFrame, feats: DataFrame,
                                       F.col("u").alias("v")))
            .distinct().localCheckpoint())
     # r15: feature state is (node, long) — register-sized checkpoints
-    n_parts = _register_parts(sym.count())
+    n_parts = _register_parts(sym.sparkSession, sym.count())
     deg = sym.groupBy(F.col("u").alias(node_col)).agg(
         F.count(F.lit(1)).alias("deg"))
     state = feats.select(F.col(node_col),
@@ -549,7 +549,7 @@ def temporal_reachability(edges: DataFrame, sources: DataFrame,
                            F.lit(0).cast("long").alias("arrival"))
     # r15: arrival state is (node, long), bounded by reached nodes —
     # register-sized checkpoints (see _register_parts)
-    n_parts = _register_parts(e.count())
+    n_parts = _register_parts(e.sparkSession, e.count())
     for _ in range(rounds):
         relaxed = (e.join(state, e["u"] == state["node"])
                    .where(F.col("t") >= F.col("arrival"))
@@ -600,7 +600,7 @@ def k_core(edges: DataFrame, k: int = 3, rounds: int = 5,
            .distinct().localCheckpoint())
     # r15: survivor edge state only shrinks — checkpoint at an
     # edge-count-derived width, not the shuffle-width constant
-    n_parts = _register_parts(sym.count())
+    n_parts = _register_parts(sym.sparkSession, sym.count())
     for _ in range(rounds):
         keep = (sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
                 .where(F.col("deg") >= k).select("u"))
@@ -609,6 +609,54 @@ def k_core(edges: DataFrame, k: int = 3, rounds: int = 5,
                .select("u", "v").coalesce(n_parts).localCheckpoint())
     return (sym.groupBy(F.col("u").alias("node"))
             .agg(F.count(F.lit(1)).cast("long").alias("core_degree")))
+
+
+def _hyperball_estimates(edges: DataFrame, iters: int, p: int,
+                         src_col: str, dst_col: str) -> DataFrame:
+    """The HyperBall register loop shared by hyperball_neighborhood and
+    hyperball_harmonic: (radius, node, e6) for radius 0..iters, e6 the
+    node's ball-size estimate quantized to 1e6-scaled BIGINT.
+
+    Registers derive from md5(node) (the sketches.py layout — seedless,
+    engine-reproducible) and merge by MAX along edges, one edge join per
+    round; each round localCheckpoints the nodes x 2^p register table so
+    lineage stays flat, and the join shuffles (node, bucket, rho) tuples
+    only — never neighbor lists. The edge list is checkpointed once (the
+    loop reads it 1 + iters times), and every round's registers are
+    folded by ONE hll_estimate keyed by (radius, node), whose inlined
+    constants let the DuckDB twin replay the float math bit-for-bit.
+    """
+    from amundsendatabuilder_spark.functions.scalars import round_half_away
+    from amundsendatabuilder_spark.operators.profiling import (
+        require_register_width)
+    from amundsendatabuilder_spark.operators.sketches import (
+        hll_estimate, hll_terms)
+    # every round shuffles |edges| x 2^p rows, so an over-wide p raises
+    # at plan time, before round one
+    require_register_width(1 << p, f"hyperball registers per node (p={p})")
+    e = edges.select(F.col(src_col).alias("e_src"),
+                     F.col(dst_col).alias("e_dst")).localCheckpoint()
+    nodes = (e.select(F.col("e_src").alias("node"))
+             .unionByName(e.select(F.col("e_dst").alias("node")))
+             .distinct())
+    regs = (hll_terms(nodes, "node", p)
+            .groupBy("node", "bucket").agg(F.max("rho").alias("r"))
+            .localCheckpoint())
+    n_parts = _register_parts(edges.sparkSession, regs.count())
+    allr = regs.withColumn("radius", F.lit(0))
+    for radius in range(1, iters + 1):
+        nbr = (e.join(regs.withColumnRenamed("node", "e_dst"), "e_dst")
+               .select(F.col("e_src").alias("node"), "bucket", "r"))
+        # repartition above the max-merge, not coalesce: the merge reads
+        # |edges| x 2^p rows and must keep its AQE width
+        regs = (regs.unionByName(nbr)
+                .groupBy("node", "bucket").agg(F.max("r").alias("r"))
+                .repartition(n_parts, "node", "bucket").localCheckpoint())
+        allr = allr.unionByName(regs.withColumn("radius", F.lit(radius)))
+    return (hll_estimate(allr, ("radius", "node"), p)
+            .select("radius", "node",
+                    round_half_away(F.col("approx_distinct") * 1e6, 0)
+                    .cast("long").alias("e6")))
 
 
 def hyperball_neighborhood(edges: DataFrame, iters: int = 3, p: int = 4,
@@ -626,78 +674,32 @@ def hyperball_neighborhood(edges: DataFrame, iters: int = 3, p: int = 4,
     sketches.hll_registers (whose hash layout and estimator it reuses
     verbatim).
 
-    Returns one row per radius 0..iters: (radius, n_nodes,
-    total_reach, avg_reach) — the corpus neighborhood function (sum /
-    mean of per-node ball-size estimates, 6dp). Per-node estimates
-    quantize to 1e6-scaled BIGINT before the cross-node sum
+    Returns one row per radius 0..iters, in radius order: (radius,
+    n_nodes, total_reach, avg_reach) — the corpus neighborhood function
+    (sum / mean of per-node ball-size estimates, 6dp). Per-node
+    estimates quantize to 1e6-scaled BIGINT before the cross-node sum
     (order-free); radius 0 is exactly n_nodes by construction (each
-    register set sketches {v}).
-
-    Determinism/scale shape: registers derive from md5(node) (the
-    sketches.py layout — seedless, engine-reproducible); each round
-    localCheckpoints the nodes x 2^p register table (hash_walks'
-    convention) so lineage stays flat; the per-round join shuffles
-    (node, bucket, rho) tuples only — never neighbor lists. Estimates
-    use hll_estimate's inlined constants so the DuckDB twin replays
-    the float math bit-for-bit.
+    register set sketches {v}). The registers and estimates come from
+    _hyperball_estimates.
     """
     from amundsendatabuilder_spark.functions.scalars import round_half_away
-    from amundsendatabuilder_spark.operators.profiling import (
-        require_register_width)
-    from amundsendatabuilder_spark.operators.sketches import (
-        hll_estimate, hll_terms)
-    # register-domain contract (r10 verdict item #4): the frontier state
-    # is nodes x 2^p single-byte-ish registers and every round shuffles
-    # |edges| x 2^p rows — 2^p is the multiplier on the WHOLE iteration,
-    # so an over-wide p raises at plan time, before round one
-    require_register_width(1 << p, f"hyperball registers per node (p={p})")
-    nodes = (edges.select(F.col(src_col).alias("node"))
-             .unionByName(edges.select(F.col(dst_col).alias("node")))
-             .distinct())
-    regs = (hll_terms(nodes, "node", p)
-            .groupBy("node", "bucket").agg(F.max("rho").alias("r"))
-            .localCheckpoint())
-    e = edges.select(F.col(src_col).alias("e_src"),
-                     F.col(dst_col).alias("e_dst"))
-
-    def _radius_row(regs_df: DataFrame, radius: int) -> DataFrame:
-        est = hll_estimate(regs_df, ("node",), p)
-        q = est.select(
-            round_half_away(F.col("approx_distinct") * 1e6, 0)
-            .cast("long").alias("e6"))
-        return q.agg(
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.sum("e6").alias("s_e6")).select(
-            F.lit(radius).cast("int").alias("radius"), "n_nodes",
-            round_half_away(F.col("s_e6").cast("double") / 1e6, 6)
-            .alias("total_reach"),
-            round_half_away(F.col("s_e6").cast("double")
-                            / F.col("n_nodes").cast("double") / 1e6, 6)
-            .alias("avg_reach"))
-
-    # r15: the register table is nodes x 2^p small rows — size per-round
-    # checkpoints to its materialized count (see _register_parts). The
-    # width collapse is a repartition ABOVE the agg, not a coalesce on
-    # it: coalesce would run the max-merge reduce itself at n_parts
-    # tasks, and unlike the label/rank registers this merge's INPUT is
-    # |edges| x 2^p rows per round — serializing it costs far more than
-    # the checkpoint task wave saves (measured: effective_diameter ~2x
-    # slower with the coalesce). repartition keeps the merge at AQE
-    # width with map-side partials intact and only the register-sized
-    # checkpoint write narrows.
-    n_parts = _register_parts(regs.count())
-    frames = [_radius_row(regs, 0)]
-    for radius in range(1, iters + 1):
-        nbr = (e.join(regs.withColumnRenamed("node", "e_dst"), "e_dst")
-               .select(F.col("e_src").alias("node"), "bucket", "r"))
-        regs = (regs.unionByName(nbr)
-                .groupBy("node", "bucket").agg(F.max("r").alias("r"))
-                .repartition(n_parts, "node", "bucket").localCheckpoint())
-        frames.append(_radius_row(regs, radius))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    est = _hyperball_estimates(edges, iters, p, src_col, dst_col)
+    # one node-less row per radius: an edgeless graph still gets every
+    # radius row (n_nodes 0, NULL reach)
+    radii = edges.sparkSession.createDataFrame(
+        [(r,) for r in range(iters + 1)], "radius int")
+    return (est.unionByName(radii, allowMissingColumns=True)
+            .groupBy("radius")
+            .agg(F.count("node").cast("long").alias("n_nodes"),
+                 F.sum("e6").alias("s_e6"))
+            .select(
+                "radius", "n_nodes",
+                round_half_away(F.col("s_e6").cast("double") / 1e6, 6)
+                .alias("total_reach"),
+                round_half_away(F.col("s_e6").cast("double")
+                                / F.col("n_nodes").cast("double") / 1e6, 6)
+                .alias("avg_reach"))
+            .orderBy("radius"))
 
 
 def degree_assortativity(edges: DataFrame, src_col: str = "src",
@@ -757,60 +759,28 @@ def hyperball_harmonic(edges: DataFrame, iters: int = 3, p: int = 4,
     Vigna 2013, §3) — the centrality a catalog ranks lineage hubs by
     without ever materializing shortest paths. Returns the top ``k``
     nodes: (node, harmonic_centrality), 6dp, ties broken by node id.
+    ``iters`` must be at least 1 (H sums over radii 1..iters).
 
-    Determinism/scale shape: the per-round register state and
-    estimates are hyperball_neighborhood's (nodes x 2^p rows,
-    localCheckpoint per round); the telescoped radius weights are
-    folded to EXACT integer coefficients on the 1e6-quantized per-node
-    estimates — for iters=3: 6 H = 3 N1 + N2 + 2 N3 - 6 N0 — so the
-    centrality is a conditional integer sum per node, one division at
-    the end, and the top-k runs as TakeOrderedAndProject on the
-    (rounded value, node) key, never a global sort.
+    Determinism/scale shape: the per-(radius, node) estimates are
+    _hyperball_estimates' (the registers hyperball_neighborhood sums);
+    the telescoped radius weights are folded to EXACT integer
+    coefficients on the 1e6-quantized per-node estimates — for
+    iters=3: 6 H = 3 N1 + N2 + 2 N3 - 6 N0 — so the centrality is a
+    conditional integer sum per node, one division at the end, and the
+    top-k runs as TakeOrderedAndProject on the (rounded value, node)
+    key, never a global sort.
     """
     import math
     from amundsendatabuilder_spark.functions.scalars import round_half_away
-    from amundsendatabuilder_spark.operators.profiling import (
-        require_register_width)
-    from amundsendatabuilder_spark.operators.sketches import (
-        hll_estimate, hll_terms)
-    require_register_width(1 << p, f"hyperball registers per node (p={p})")
+    if iters < 1:
+        raise ValueError(f"hyperball_harmonic needs iters >= 1, got {iters}")
     lcm = math.lcm(*range(1, iters + 1))
     # telescoped coefficient of N_r in lcm * H
     coef = {0: -lcm}
     for r in range(1, iters):
         coef[r] = lcm // r - lcm // (r + 1)
     coef[iters] = lcm // iters
-    nodes = (edges.select(F.col(src_col).alias("node"))
-             .unionByName(edges.select(F.col(dst_col).alias("node")))
-             .distinct())
-    regs = (hll_terms(nodes, "node", p)
-            .groupBy("node", "bucket").agg(F.max("rho").alias("r"))
-            .localCheckpoint())
-    e = edges.select(F.col(src_col).alias("e_src"),
-                     F.col(dst_col).alias("e_dst"))
-
-    def _per_node(regs_df: DataFrame, radius: int) -> DataFrame:
-        return (hll_estimate(regs_df, ("node",), p)
-                .select("node", F.lit(radius).alias("radius"),
-                        round_half_away(F.col("approx_distinct") * 1e6, 0)
-                        .cast("long").alias("e6")))
-
-    # r15: same register-sized checkpoint treatment as
-    # hyperball_neighborhood — repartition above the agg, NOT coalesce
-    # on it (the max-merge input is |edges| x 2^p rows; see the
-    # neighborhood loop's comment)
-    n_parts = _register_parts(regs.count())
-    frames = [_per_node(regs, 0)]
-    for radius in range(1, iters + 1):
-        nbr = (e.join(regs.withColumnRenamed("node", "e_dst"), "e_dst")
-               .select(F.col("e_src").alias("node"), "bucket", "r"))
-        regs = (regs.unionByName(nbr)
-                .groupBy("node", "bucket").agg(F.max("r").alias("r"))
-                .repartition(n_parts, "node", "bucket").localCheckpoint())
-        frames.append(_per_node(regs, radius))
-    allr = frames[0]
-    for f in frames[1:]:
-        allr = allr.unionByName(f)
+    allr = _hyperball_estimates(edges, iters, p, src_col, dst_col)
     w = F.col("e6") * F.when(
         F.col("radius") == 0, F.lit(coef[0])).otherwise(
         F.coalesce(*[F.when(F.col("radius") == r, F.lit(c))

@@ -1312,16 +1312,16 @@ def mutual_nn_pairs(emb: DataFrame, planes: list[list[float]],
     # alone) keys the exchange by src, which a hash-partitioning-subset
     # argument makes reusable by BOTH the (src, nbr) distinct AND the
     # per-src top-1 aggregation below — so this does not add an
-    # exchange, it replaces the distinct's own. Width = the session
-    # shuffle width (conf/env-derived, never a local constant).
-    from amundsendatabuilder_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+    # exchange, it replaces the distinct's own. Width = the live
+    # session's shuffle width, never a local constant.
+    from amundsendatabuilder_spark.session import shuffle_width
     cand = (sigs.alias("x").join(
         sigs.alias("y"),
         (F.col("x.band") == F.col("y.band"))
         & (F.col("x.sig") == F.col("y.sig"))
         & (F.col("x.id") != F.col("y.id")))
         .select(F.col("x.id").alias("src"), F.col("y.id").alias("nbr"))
-        .repartition(int(DEFAULT_SHUFFLE_PARTITIONS), "src")
+        .repartition(shuffle_width(sigs.sparkSession), "src")
         .distinct())
     v = (emb.select(F.col(id_col).alias("_id"),
                     F.col(vec_col).cast("array<double>").alias("_v"))

@@ -14,8 +14,6 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def get_spark(app_name: str = "amundsendatabuilder_spark",
               master: str | None = None,
@@ -32,7 +30,7 @@ def get_spark(app_name: str = "amundsendatabuilder_spark",
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+                str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # r15 (guide §2.2/§9 + Spark's own tuning doc): respect the
@@ -80,6 +78,13 @@ def get_spark(app_name: str = "amundsendatabuilder_spark",
     return spark
 
 
+def shuffle_width(spark: SparkSession) -> int:
+    """The live session's ``spark.sql.shuffle.partitions`` — the width
+    every pinned repartition uses, so it follows the session a caller
+    built (or re-configured), not the env var at import time."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def ensure_parallelism(df, min_partitions: int | None = None):
     """Repartition iff the plan's current partitioning is narrower than the
     cluster's parallelism. Small single-row-group parquet files scan as ONE
@@ -88,7 +93,7 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     of the raw input is far cheaper than that. On well-partitioned input
     (any real 100 TB table) the condition is false and this is a no-op —
     the check reads only plan metadata, it triggers no job."""
-    target = min_partitions or int(DEFAULT_SHUFFLE_PARTITIONS)
+    target = min_partitions or shuffle_width(df.sparkSession)
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

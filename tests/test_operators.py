@@ -2888,6 +2888,16 @@ def test_leakage_safe_split_is_deterministic_and_rate_shaped(spark):
     assert 300 < n_train < 480  # ~80% of 500, generous band
 
 
+@pytest.mark.parametrize("col", ["doc_id", "group_key", "split", "component"])
+def test_leakage_safe_split_keep_collision_raises(spark, col):
+    from amundsendatabuilder_spark.operators.curation import (
+        leakage_safe_split)
+    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    with pytest.raises(ValueError, match=rf"\['{col}'\]"):
+        leakage_safe_split(docs, pairs, keep=("text", col))
+
+
 def test_epoch_shuffle_shards_is_a_permutation_per_epoch(spark):
     from amundsendatabuilder_spark.operators.curation import (
         epoch_shuffle_shards)
@@ -3956,9 +3966,9 @@ def test_hyperball_neighborhood_python_twin(spark):
     # directed line graph 1 -> 2 -> 3 -> 4 -> 5
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 5)], "src long, dst long")
-    out = {r.radius: r
-           for r in hyperball_neighborhood(edges, iters=3, p=4).collect()}
-    assert sorted(out) == [0, 1, 2, 3]
+    rows = hyperball_neighborhood(edges, iters=3, p=4).collect()
+    assert [r.radius for r in rows] == [0, 1, 2, 3]
+    out = {r.radius: r for r in rows}
     # python twin: same md5 layout (1 hex bucket, 15 hex rest), max-merge
     p, m = 4, 16
 
@@ -4005,6 +4015,11 @@ def test_hyperball_neighborhood_python_twin(spark):
     # neighborhood function is monotone in the radius
     assert (out[0].total_reach <= out[1].total_reach
             <= out[2].total_reach <= out[3].total_reach)
+    # an edgeless graph still gets one (empty) row per radius
+    empty = spark.createDataFrame([], "src long, dst long")
+    assert [(r.radius, r.n_nodes, r.total_reach) for r in
+            hyperball_neighborhood(empty, iters=1, p=4).collect()] == [
+        (0, 0, None), (1, 0, None)]
 
 
 def test_degree_assortativity_known_values(spark):
@@ -4084,6 +4099,9 @@ def test_hyperball_harmonic_python_twin(spark):
     assert order == sorted(expect, key=lambda v: (-expect[v], v))
     # a never-growing ball telescopes to exactly 0
     assert got[5] == 0.0
+    # H sums over radii 1..iters: iters=0 is rejected by name
+    with pytest.raises(ValueError, match="iters"):
+        hyperball_harmonic(edges, iters=0, p=4)
 
 
 def test_dup_affinity_matrix_known_values(spark):
@@ -4843,6 +4861,21 @@ def test_register_guard_graph_family(spark, monkeypatch):
         graph_algo.hyperball_harmonic(edges, iters=1, p=4)
     with pytest.raises(ValueError, match="register domain"):
         graph_algo.hyperball_effective_diameter(edges, iters=1, p=4)
+
+
+def test_ensure_parallelism_follows_live_shuffle_width(spark):
+    from amundsendatabuilder_spark.session import (
+        ensure_parallelism, shuffle_width)
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    width = int(before) + 3
+    try:
+        spark.conf.set(key, str(width))
+        assert shuffle_width(spark) == width
+        one = spark.range(10).coalesce(1)
+        assert ensure_parallelism(one).rdd.getNumPartitions() == width
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_register_guard_classifier_family(spark, monkeypatch):
