@@ -34,11 +34,10 @@ class CatalogJob:
     """
 
     def __init__(self, spark: SparkSession, publish_tag: str,
-                 epoch_ms: int | None = None, strict_validation: bool = True):
+                 epoch_ms: int | None = None):
         self.spark = spark
         self.publish_tag = publish_tag
         self.epoch_ms = epoch_ms if epoch_ms is not None else int(time.time() * 1000)
-        self.strict_validation = strict_validation
         self._outputs: list[GraphOutput] = []
         self._finalizers: list[Callable[[], None]] = []
 
@@ -54,9 +53,8 @@ class CatalogJob:
         return self
 
     def graph(self) -> GraphOutput:
-        assert self._outputs, "no model expansions added"
         out = union_graphs(*self._outputs)
-        validate_graph(out, strict=self.strict_validation)
+        validate_graph(out, strict=True)
         return stamp_publish_tag(out, self.publish_tag, self.epoch_ms)
 
     def run(self, stage_dir: str | None = None,

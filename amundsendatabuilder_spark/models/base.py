@@ -16,6 +16,7 @@ set-level instead of per-record asserts.
 
 from __future__ import annotations
 
+import functools
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
@@ -43,32 +44,26 @@ def _props_map(props: dict[str, Column]) -> Column:
 
 
 def make_nodes(df: DataFrame, label: str, key: Column,
-               props: dict[str, Column] | None = None,
-               distinct: bool = True) -> DataFrame:
-    """Project a model DataFrame into standardized node rows.
-
-    ``distinct=True`` reproduces the reference's serialized-node dedup set
-    (databuilder/models/table_metadata.py:323-326) — but set-level and
-    order-free: identical (key,label,props) rows collapse; differing props
-    for one key are resolved by the sink's last-write/merge semantics.
-    """
-    out = df.select(
+               props: dict[str, Column] | None = None) -> DataFrame:
+    """Project a model DataFrame into standardized node rows, dropping
+    null keys. Rows are not deduped here: ``union_graphs`` is the one
+    dedup, once per graph side."""
+    return df.select(
         key.alias(NODE_KEY),
         F.lit(label).alias(NODE_LABEL),
         _props_map(props or {}).alias("props"),
     ).where(F.col(NODE_KEY).isNotNull())
-    return out.dropDuplicates([NODE_KEY, NODE_LABEL]) if distinct else out
 
 
 def make_rels(df: DataFrame, start_label: str, end_label: str,
               start_key: Column, end_key: Column,
               rel_type: str, reverse_type: str,
-              props: dict[str, Column] | None = None,
-              distinct: bool = True) -> DataFrame:
-    """Project a model DataFrame into standardized relationship rows (the
+              props: dict[str, Column] | None = None) -> DataFrame:
+    """Project a model DataFrame into standardized relationship rows,
+    dropping null endpoints; ``union_graphs`` dedups them (the
     bidirectional pair is materialized by the sink, reference:
     publisher/neo4j_csv_publisher.py:235-287)."""
-    out = df.select(
+    return df.select(
         start_key.alias(REL_START_KEY),
         F.lit(start_label).alias(REL_START_LABEL),
         end_key.alias(REL_END_KEY),
@@ -77,9 +72,6 @@ def make_rels(df: DataFrame, start_label: str, end_label: str,
         F.lit(reverse_type).alias(REL_REVERSE_TYPE),
         _props_map(props or {}).alias("props"),
     ).where(F.col(REL_START_KEY).isNotNull() & F.col(REL_END_KEY).isNotNull())
-    if distinct:
-        out = out.dropDuplicates([REL_START_KEY, REL_END_KEY, REL_TYPE])
-    return out
 
 
 def _empty_nodes(spark) -> DataFrame:
@@ -95,14 +87,17 @@ def _empty_rels(spark) -> DataFrame:
 
 
 def union_graphs(*outputs: GraphOutput) -> GraphOutput:
-    """Union many model expansions into one graph. unionByName keeps this
-    safe as models evolve; the final global dedup reproduces cross-model
-    node dedup (e.g. the same Tag emitted by tables and dashboards)."""
-    nodes = rels = None
-    for out in outputs:
-        nodes = out.nodes if nodes is None else nodes.unionByName(out.nodes)
-        rels = out.rels if rels is None else rels.unionByName(out.rels)
-    assert nodes is not None and rels is not None
+    """Union model expansions into one graph and dedup it: the one dedup of
+    the model layer, once per side on (KEY, LABEL) and (START_KEY, END_KEY,
+    TYPE). It is the set-level form of the reference's class-level
+    serialized-key set (databuilder/models/table_metadata.py:323-326), so it
+    also collapses cross-model repeats (e.g. the same User emitted by users
+    and usage). Differing props for one key resolve to one arbitrary row.
+    unionByName keeps this safe as models evolve."""
+    if not outputs:
+        raise ValueError("union_graphs needs at least one model expansion")
+    nodes = functools.reduce(DataFrame.unionByName, (o.nodes for o in outputs))
+    rels = functools.reduce(DataFrame.unionByName, (o.rels for o in outputs))
     return GraphOutput(nodes.dropDuplicates([NODE_KEY, NODE_LABEL]),
                        rels.dropDuplicates([REL_START_KEY, REL_END_KEY, REL_TYPE]))
 

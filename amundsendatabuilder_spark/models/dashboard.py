@@ -1,7 +1,8 @@
 """Dashboard model family (reference: databuilder/models/dashboard/*):
 group/dashboard metadata, owner, usage, query, execution (with the
 '_last_execution' / '_last_successful_execution' sentinel keys), last
-modified timestamp, dashboard->table links.
+modified timestamp, dashboard->table links. Each expansion projects its rows
+and ends in ``union_graphs``, the one dedup per graph side.
 """
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark import keys
-from amundsendatabuilder_spark.models.base import GraphOutput, make_nodes, make_rels
+from amundsendatabuilder_spark.models.base import GraphOutput, make_nodes, make_rels, union_graphs
 from amundsendatabuilder_spark.models.misc import USER_LABEL
 from amundsendatabuilder_spark.models.table_metadata import TABLE_LABEL
 
@@ -66,7 +67,7 @@ def expand_dashboards(df: DataFrame) -> GraphOutput:
     nodes = group_nodes.unionByName(dash_nodes).unionByName(desc_nodes) \
         .unionByName(gdesc_nodes)
     rels = group_dash.unionByName(dash_desc).unionByName(group_desc_rel)
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_dashboard_owners(df: DataFrame) -> GraphOutput:
@@ -76,7 +77,7 @@ def expand_dashboard_owners(df: DataFrame) -> GraphOutput:
     nodes = make_nodes(d, USER_LABEL, F.col("email"), {"email": F.col("email")})
     rels = make_rels(d, USER_LABEL, DASHBOARD_LABEL, F.col("email"),
                      F.col("_dash_key"), "OWNER", "OWNER_OF")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_dashboard_usage(df: DataFrame) -> GraphOutput:
@@ -88,7 +89,7 @@ def expand_dashboard_usage(df: DataFrame) -> GraphOutput:
     rels = make_rels(d, DASHBOARD_LABEL, USER_LABEL, F.col("_dash_key"),
                      F.col("email"), "READ_BY", "READ",
                      {"read_count": F.col("view_count")})
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_dashboard_queries(df: DataFrame) -> GraphOutput:
@@ -104,7 +105,7 @@ def expand_dashboard_queries(df: DataFrame) -> GraphOutput:
          "url": F.col("url"), "query_text": F.col("query_text")})
     rels = make_rels(d, DASHBOARD_LABEL, "Query", F.col("_dash_key"),
                      F.col("_query_key"), "HAS_QUERY", "QUERY_OF")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_dashboard_charts(df: DataFrame) -> GraphOutput:
@@ -134,7 +135,7 @@ def expand_dashboard_charts(df: DataFrame) -> GraphOutput:
          "type": F.col("chart_type"), "url": F.col("chart_url")})
     rels = make_rels(d, "Query", "Chart", F.col("_query_key"),
                      F.col("_chart_key"), "HAS_CHART", "CHART_OF")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_dashboard_executions(df: DataFrame) -> GraphOutput:
@@ -152,7 +153,7 @@ def expand_dashboard_executions(df: DataFrame) -> GraphOutput:
          "state": F.col("execution_state")})
     rels = make_rels(d, DASHBOARD_LABEL, "Execution", F.col("_dash_key"),
                      F.col("_exec_key"), "EXECUTED", "EXECUTION_OF")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_dashboard_last_modified(df: DataFrame) -> GraphOutput:
@@ -167,7 +168,7 @@ def expand_dashboard_last_modified(df: DataFrame) -> GraphOutput:
          "name": F.lit("last_updated_timestamp")})
     rels = make_rels(d, DASHBOARD_LABEL, "Timestamp", F.col("_dash_key"),
                      F.col("_ts_key"), "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_dashboard_tables(df: DataFrame, spark) -> GraphOutput:
@@ -182,4 +183,4 @@ def expand_dashboard_tables(df: DataFrame, spark) -> GraphOutput:
          .where(F.col("tbl") != ""))
     rels = make_rels(d, DASHBOARD_LABEL, TABLE_LABEL, F.col("_dash_key"),
                      F.col("tbl"), "DASHBOARD_WITH_TABLE", "TABLE_OF_DASHBOARD")
-    return GraphOutput(_empty_nodes(spark), rels)
+    return union_graphs(GraphOutput(_empty_nodes(spark), rels))

@@ -1,7 +1,8 @@
 """Mechanical model expansions (SURVEY §7.3 phase 2): watermark, stats,
 last-updated, owner, source, application, usage, lineage, schema
 description, standalone badges/tags. Each mirrors one reference model's
-node/relationship emission with the documented input schema.
+node/relationship emission with the documented input schema, projects its
+rows and ends in ``union_graphs``, the one dedup per graph side.
 """
 
 from __future__ import annotations
@@ -10,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark import keys
-from amundsendatabuilder_spark.models.base import GraphOutput, make_nodes, make_rels
+from amundsendatabuilder_spark.models.base import GraphOutput, make_nodes, make_rels, union_graphs
 from amundsendatabuilder_spark.models.table_metadata import COLUMN_LABEL, TABLE_LABEL
 
 USER_LABEL = "User"  # reference: models/user.py:22
@@ -38,7 +39,7 @@ def expand_watermarks(df: DataFrame) -> GraphOutput:
          "create_time": F.col("create_time")})
     rels = make_rels(d, "Watermark", TABLE_LABEL, F.col("_wm_key"),
                      F.col("_tbl_key"), "BELONG_TO_TABLE", "WATERMARK")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_column_stats(df: DataFrame) -> GraphOutput:
@@ -57,7 +58,7 @@ def expand_column_stats(df: DataFrame) -> GraphOutput:
          "start_epoch": F.col("start_epoch"), "end_epoch": F.col("end_epoch")})
     rels = make_rels(d, "Stat", COLUMN_LABEL, F.col("_stat_key"),
                      F.col("_col_key"), "STAT_OF", "STAT")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_last_updated(df: DataFrame) -> GraphOutput:
@@ -75,7 +76,7 @@ def expand_last_updated(df: DataFrame) -> GraphOutput:
          "name": F.lit("last_updated_timestamp")})
     rels = make_rels(d, TABLE_LABEL, "Timestamp", F.col("_tbl_key"),
                      F.col("_ts_key"), "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_table_source(df: DataFrame) -> GraphOutput:
@@ -92,7 +93,7 @@ def expand_table_source(df: DataFrame) -> GraphOutput:
         {"source": F.col("source"), "source_type": F.col("source_type")})
     rels = make_rels(d, "Source", TABLE_LABEL, F.col("_src_key"),
                      F.col("_tbl_key"), "SOURCE_OF", "SOURCE")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_table_owners(df: DataFrame) -> GraphOutput:
@@ -109,7 +110,7 @@ def expand_table_owners(df: DataFrame) -> GraphOutput:
                        {"email": F.col("email")})
     rels = make_rels(d, USER_LABEL, TABLE_LABEL, F.col("email"),
                      F.col("_tbl_key"), "OWNER", "OWNER_OF")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_applications(df: DataFrame) -> GraphOutput:
@@ -130,7 +131,7 @@ def expand_applications(df: DataFrame) -> GraphOutput:
          "name": F.lit("Airflow"), "description": F.lit("Airflow with id")})
     rels = make_rels(d, TABLE_LABEL, "Application", F.col("_tbl_key"),
                      F.col("_app_key"), "DERIVED_FROM", "GENERATES")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_column_usage(df: DataFrame, spark=None) -> GraphOutput:
@@ -144,7 +145,7 @@ def expand_column_usage(df: DataFrame, spark=None) -> GraphOutput:
     rels = make_rels(d, TABLE_LABEL, USER_LABEL, F.col("_tbl_key"),
                      F.col("user_email"), "READ_BY", "READ",
                      {"read_count": F.col("read_count")})
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 def expand_table_lineage(df: DataFrame, spark) -> GraphOutput:
@@ -155,7 +156,7 @@ def expand_table_lineage(df: DataFrame, spark) -> GraphOutput:
     rels = make_rels(df, TABLE_LABEL, TABLE_LABEL,
                      F.col("source_table_key"), F.col("target_table_key"),
                      "HAS_DOWNSTREAM", "HAS_UPSTREAM")
-    return GraphOutput(_empty_nodes(spark), rels)
+    return union_graphs(GraphOutput(_empty_nodes(spark), rels))
 
 
 def expand_column_lineage(df: DataFrame, spark) -> GraphOutput:
@@ -165,7 +166,7 @@ def expand_column_lineage(df: DataFrame, spark) -> GraphOutput:
     rels = make_rels(df, COLUMN_LABEL, COLUMN_LABEL,
                      F.col("source_column_key"), F.col("target_column_key"),
                      "HAS_DOWNSTREAM", "HAS_UPSTREAM")
-    return GraphOutput(_empty_nodes(spark), rels)
+    return union_graphs(GraphOutput(_empty_nodes(spark), rels))
 
 
 def expand_schema_descriptions(df: DataFrame) -> GraphOutput:
@@ -181,7 +182,7 @@ def expand_schema_descriptions(df: DataFrame) -> GraphOutput:
                               {"name": F.col("schema")})
     rels = make_rels(d, "Schema", "Description", F.col("schema_key"),
                      desc_key, "DESCRIPTION", "DESCRIPTION_OF")
-    return GraphOutput(schema_nodes.unionByName(nodes), rels)
+    return union_graphs(GraphOutput(schema_nodes.unionByName(nodes), rels))
 
 
 def expand_badges(df: DataFrame, spark) -> GraphOutput:
@@ -199,7 +200,7 @@ def expand_badges(df: DataFrame, spark) -> GraphOutput:
                        {"category": F.col("category")})
     rels = make_rels(d, TABLE_LABEL, "Badge", F.col("_tbl_key"),
                      F.col("badge"), "HAS_BADGE", "BADGE_FOR")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))
 
 
 # Badge start-key patterns per start label (reference: models/badge.py:52-59
@@ -255,4 +256,4 @@ def expand_users(df: DataFrame) -> GraphOutput:
                         & (F.col("manager_email") != ""))
     rels = make_rels(managers, USER_LABEL, USER_LABEL, F.col("email"),
                      F.col("manager_email"), "MANAGE_BY", "MANAGE")
-    return GraphOutput(nodes, rels)
+    return union_graphs(GraphOutput(nodes, rels))

@@ -14,9 +14,11 @@ sources/csv_source.py produce exactly this):
                          sort_order int, badges array<string>>>
 
 The expansion is pure column algebra: key templates from keys.py, one
-``explode`` for columns, one for tags/badges, ``dropDuplicates`` for the
-low-cardinality parents (set-level replacement for the reference's
-class-level serialized-key set, table_metadata.py:323-326 — SURVEY §7.4).
+``explode`` for columns, one for tags/badges. It only projects rows: the
+low-cardinality parents repeat once per table until the closing
+``union_graphs``, the one dedup per graph side (set-level replacement for
+the reference's class-level serialized-key set, table_metadata.py:323-326 —
+SURVEY §7.4).
 """
 
 from __future__ import annotations
@@ -73,7 +75,7 @@ def expand_tables(tables: DataFrame) -> GraphOutput:
         t, TABLE_LABEL, F.col("_table_key"),
         {"name": F.col("name"),
          "is_view": F.coalesce(F.col("is_view"), F.lit(False))})
-    # deduped low-cardinality parents (reference :490-509)
+    # low-cardinality parents (reference :490-509)
     db_nodes = make_nodes(t, DATABASE_LABEL, F.col("_db_key"),
                           {"name": F.col("database")})
     cluster_nodes = make_nodes(t, CLUSTER_LABEL, F.col("_cluster_key"),
@@ -87,20 +89,17 @@ def expand_tables(tables: DataFrame) -> GraphOutput:
     is_default_src = (F.col("description_source").isNull()
                       | (F.col("description_source") == "")
                       | (F.col("description_source") == "description"))
-    desc_nodes = (
-        desc.select(
-            keys.description_key(F.col("_table_key"), F.col("description_source"))
-            .alias("KEY"),
-            F.when(is_default_src, F.lit(DESCRIPTION_LABEL))
-            .otherwise(F.lit(PROG_DESCRIPTION_LABEL)).alias("LABEL"),
-            F.map_filter(
-                F.create_map(
-                    F.lit("description"), F.col("description"),
-                    F.lit("description_source"),
-                    F.coalesce(F.col("description_source"), F.lit("description"))),
-                lambda _, v: v.isNotNull()).alias("props"))
-        .dropDuplicates(["KEY", "LABEL"])
-    )
+    desc_nodes = desc.select(
+        keys.description_key(F.col("_table_key"), F.col("description_source"))
+        .alias("KEY"),
+        F.when(is_default_src, F.lit(DESCRIPTION_LABEL))
+        .otherwise(F.lit(PROG_DESCRIPTION_LABEL)).alias("LABEL"),
+        F.map_filter(
+            F.create_map(
+                F.lit("description"), F.col("description"),
+                F.lit("description_source"),
+                F.coalesce(F.col("description_source"), F.lit("description"))),
+            lambda _, v: v.isNotNull()).alias("props"))
 
     tag_rows = t.select("_table_key", F.explode("tags").alias("tag"))
     tag_nodes = make_nodes(tag_rows, TAG_LABEL, keys.tag_key(F.col("tag")),
@@ -144,19 +143,16 @@ def expand_tables(tables: DataFrame) -> GraphOutput:
     schema_table = make_rels(t, SCHEMA_LABEL, TABLE_LABEL,
                              F.col("_schema_key"), F.col("_table_key"),
                              "TABLE", "TABLE_OF")
-    table_desc = (
-        desc.select(
-            F.col("_table_key").alias("START_KEY"),
-            F.lit(TABLE_LABEL).alias("START_LABEL"),
-            keys.description_key(F.col("_table_key"), F.col("description_source"))
-            .alias("END_KEY"),
-            F.when(is_default_src, F.lit(DESCRIPTION_LABEL))
-            .otherwise(F.lit(PROG_DESCRIPTION_LABEL)).alias("END_LABEL"),
-            F.lit("DESCRIPTION").alias("TYPE"),
-            F.lit("DESCRIPTION_OF").alias("REVERSE_TYPE"),
-            F.create_map().cast("map<string,string>").alias("props"))
-        .dropDuplicates(["START_KEY", "END_KEY", "TYPE"])
-    )
+    table_desc = desc.select(
+        F.col("_table_key").alias("START_KEY"),
+        F.lit(TABLE_LABEL).alias("START_LABEL"),
+        keys.description_key(F.col("_table_key"), F.col("description_source"))
+        .alias("END_KEY"),
+        F.when(is_default_src, F.lit(DESCRIPTION_LABEL))
+        .otherwise(F.lit(PROG_DESCRIPTION_LABEL)).alias("END_LABEL"),
+        F.lit("DESCRIPTION").alias("TYPE"),
+        F.lit("DESCRIPTION_OF").alias("REVERSE_TYPE"),
+        F.create_map().cast("map<string,string>").alias("props"))
     # reference :534-543: Table-[TAGGED_BY]->Tag, reverse TAG
     table_tag = make_rels(tag_rows, TABLE_LABEL, TAG_LABEL,
                           F.col("_table_key"), F.col("tag"),

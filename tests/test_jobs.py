@@ -39,6 +39,15 @@ def test_job_validation_failure_skips_finalizers(spark):
     assert finalized == []
 
 
+def test_empty_job_raises_value_error(spark):
+    from amundsendatabuilder_spark.jobs import CatalogJob
+    from amundsendatabuilder_spark.models.base import union_graphs
+    with pytest.raises(ValueError, match="at least one model expansion"):
+        union_graphs()
+    with pytest.raises(ValueError, match="at least one model expansion"):
+        CatalogJob(spark, publish_tag="t3").run()
+
+
 def test_chained_fanout_ordering(spark):
     """The reference's integration scenario (tests/integration/
     test_chained_trainsformers_task.py:48-80): a chain of fan-out ->

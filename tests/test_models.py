@@ -243,6 +243,79 @@ def test_expand_dashboard_charts(spark):
                for r in out.rels.collect())
 
 
+# Each misc/dashboard expansion and its reference_sample_data CSV; the two
+# with no CSV there read the inline CSVs below.
+_STANDALONE_EXPANSIONS = [
+    ("misc", "expand_watermarks", "sample_watermark.csv"),
+    ("misc", "expand_column_stats", None),
+    ("misc", "expand_last_updated", "sample_table_last_updated.csv"),
+    ("misc", "expand_table_source", "sample_source.csv"),
+    ("misc", "expand_table_owners", "sample_table_owner.csv"),
+    ("misc", "expand_applications", "sample_application.csv"),
+    ("misc", "expand_column_usage", "sample_column_usage.csv"),
+    ("misc", "expand_table_lineage", "sample_table_lineage.csv"),
+    ("misc", "expand_column_lineage", "sample_column_lineage.csv"),
+    ("misc", "expand_schema_descriptions", "sample_schema_description.csv"),
+    ("misc", "expand_badges", "sample_badges.csv"),
+    ("misc", "expand_users", "sample_user.csv"),
+    ("dashboard", "expand_dashboards", "sample_dashboard_base.csv"),
+    ("dashboard", "expand_dashboard_owners", "sample_dashboard_owner.csv"),
+    ("dashboard", "expand_dashboard_usage", "sample_dashboard_usage.csv"),
+    ("dashboard", "expand_dashboard_queries", "sample_dashboard_query.csv"),
+    ("dashboard", "expand_dashboard_charts", None),
+    ("dashboard", "expand_dashboard_executions",
+     "sample_dashboard_last_execution.csv"),
+    ("dashboard", "expand_dashboard_last_modified",
+     "sample_dashboard_last_modified.csv"),
+    ("dashboard", "expand_dashboard_tables", "sample_dashboard_table.csv"),
+]
+_INLINE_CSVS = {
+    "expand_column_stats":
+        "db,cluster,schema,table_name,col_name,stat_name,stat_val,"
+        "start_epoch,end_epoch\n"
+        "hive,gold,core,orders,id,nulls,0,1,2\n"
+        "hive,gold,core,orders,id,max,9,1,2\n",
+    "expand_dashboard_charts":
+        "product,cluster,dashboard_group_id,dashboard_id,query_id,chart_id,"
+        "chart_name,chart_type,chart_url\n"
+        "mode,gold,grp1,d1,q1,c1,Revenue,line,\n"
+        "mode,gold,grp1,d1,q1,,Orders,bar,\n",
+}
+
+
+@pytest.mark.parametrize("module,name,csv", _STANDALONE_EXPANSIONS,
+                         ids=[n for _, n, _ in _STANDALONE_EXPANSIONS])
+def test_standalone_expansion_dedups(spark, tmp_path, module, name, csv):
+    """An expansion called on its own returns a deduped graph: fed its
+    input twice, it emits each node (KEY, LABEL) and each rel (START_KEY,
+    END_KEY, TYPE) once, and the same key sets as one copy gives."""
+    import importlib
+    import inspect
+
+    from amundsendatabuilder_spark.sources.csv_source import read_csv
+    expand = getattr(importlib.import_module(
+        f"amundsendatabuilder_spark.models.{module}"), name)
+    if csv is None:
+        path = tmp_path / "input.csv"
+        path.write_text(_INLINE_CSVS[name])
+    else:
+        path = os.path.join(FIXTURES, "reference_sample_data", csv)
+    df = read_csv(spark, str(path))
+    extra = {"spark": spark} if "spark" in inspect.signature(expand).parameters else {}
+
+    def side_keys(frame):
+        out = expand(frame, **extra)
+        return ([tuple(r) for r in out.nodes.select("KEY", "LABEL").collect()],
+                [tuple(r) for r in out.rels.select(
+                    "START_KEY", "END_KEY", "TYPE").collect()])
+
+    once, twice = side_keys(df), side_keys(df.unionByName(df))
+    assert once[0] or once[1]
+    for one, two in zip(once, twice):
+        assert len(two) == len(set(two))
+        assert set(two) == set(one)
+
+
 def test_badge_key_validation(spark):
     import pytest as _pytest
     from amundsendatabuilder_spark.models.misc import validate_badge_keys
