@@ -3,11 +3,12 @@
 
 The reference's volcano pull loop (extract one record -> transform -> load)
 disappears: a job here is a declarative composition
-``sources -> model expansions -> union -> stamp -> stage/publish`` whose
-execution Spark schedules lazily. The reference's LIFO closer and statsd
-counters map to a try/finally summary; publisher on-success callbacks map
-to 'finalize runs only after every write action completed'
-(reference publisher/base_publisher.py:35-41).
+``sources -> model expansions -> union -> stamp -> profile -> stage/publish``
+whose execution Spark schedules lazily; the profile is the one aggregation
+that validates, counts and shards the graph before any write. The
+reference's LIFO closer and statsd counters map to a try/finally summary;
+publisher on-success callbacks map to 'finalize runs only after every
+write action completed' (reference publisher/base_publisher.py:35-41).
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-from amundsendatabuilder_spark.models.base import GraphOutput, union_graphs, validate_graph
+from amundsendatabuilder_spark.models.base import GraphOutput, graph_profile, union_graphs
 from amundsendatabuilder_spark.plans.publish import stamp_publish_tag
 
 log = logging.getLogger(__name__)
@@ -53,8 +54,9 @@ class CatalogJob:
         return self
 
     def graph(self) -> GraphOutput:
+        """The union of every added expansion, stamped with the publish tag
+        (lazy; ``run`` validates it)."""
         out = union_graphs(*self._outputs)
-        validate_graph(out, strict=True)
         return stamp_publish_tag(out, self.publish_tag, self.epoch_ms)
 
     def run(self, stage_dir: str | None = None,
@@ -64,12 +66,18 @@ class CatalogJob:
             create_only_labels: frozenset[str] = frozenset()) -> dict:
         """Stage and/or publish; returns a summary dict (the statsd
         success/fail counter analog, reference job/job.py:78-86) with the
-        seconds of each phase: ``graph_s`` (union, validate, stamp),
-        ``count_s`` (cache and count), ``stage_s`` and ``publish_s``
-        (writers and finalizers); a phase with nothing to do records ~0."""
+        seconds of each phase: ``graph_s`` (union, stamp), ``count_s``
+        (cache and ``graph_profile``), ``stage_s`` and ``publish_s``
+        (writers and finalizers); a phase with nothing to do records ~0.
+
+        The cached graph is read twice: once by ``graph_profile``, whose one
+        aggregation validates it (raising before any write, publish or
+        finalizer), gives the ``nodes``/``rels`` counts and finds the shards
+        ``write_graph`` stages; and once by the writers."""
         t0 = time.time()
         summary: dict = {"publish_tag": self.publish_tag}
         last = t0
+        graph = None
 
         def lap(phase: str) -> None:
             nonlocal last
@@ -81,12 +89,13 @@ class CatalogJob:
             graph = self.graph()
             lap("graph_s")
             graph.nodes.cache(), graph.rels.cache()
-            summary["nodes"] = graph.nodes.count()
-            summary["rels"] = graph.rels.count()
+            profile = graph_profile(graph)
+            for side in ("nodes", "rels"):
+                summary[side] = sum(p.rows for p in profile if p.side == side)
             lap("count_s")
             if stage_dir is not None:
                 from amundsendatabuilder_spark.sinks.graph_csv import write_graph
-                summary["staged"] = write_graph(graph, stage_dir)
+                summary["staged"] = write_graph(graph, stage_dir, profile)
             lap("stage_s")
             if node_writer is not None:
                 from amundsendatabuilder_spark.plans.publish import publish_nodes
@@ -105,5 +114,8 @@ class CatalogJob:
             log.exception("catalog job failed")
             raise
         finally:
+            if graph is not None:
+                graph.nodes.unpersist(blocking=False)
+                graph.rels.unpersist(blocking=False)
             summary["elapsed_sec"] = round(time.time() - t0, 2)
             log.info("job summary: %s", summary)

@@ -6,5 +6,6 @@ iterators (reference: databuilder/models/graph_serializable.py:21-66).
 """
 
 from amundsendatabuilder_spark.models.base import (  # noqa: F401
-    GraphOutput, make_nodes, make_rels, union_graphs, validate_graph,
+    GraphOutput, graph_profile, make_nodes, make_rels, union_graphs,
+    validate_graph,
 )

@@ -68,7 +68,7 @@ def _with_keys(tables: DataFrame) -> DataFrame:
 def expand_tables(tables: DataFrame) -> GraphOutput:
     """TableMetadata DataFrame -> (nodes, rels), semantics of
     databuilder/models/table_metadata.py:427-598."""
-    t = _with_keys(tables).cache()
+    t = _with_keys(tables)
 
     # --- nodes ------------------------------------------------------------
     table_nodes = make_nodes(
@@ -112,7 +112,7 @@ def expand_tables(tables: DataFrame) -> GraphOutput:
     cols = cols.withColumn(
         "_col_key",
         keys.column_key(F.col("database"), F.col("cluster"), F.col("schema"),
-                        F.col("name"), F.col("c.name"))).cache()
+                        F.col("name"), F.col("c.name")))
     col_nodes = make_nodes(
         cols, COLUMN_LABEL, F.col("_col_key"),
         {"name": F.col("c.name"), "col_type": F.col("c.col_type"),

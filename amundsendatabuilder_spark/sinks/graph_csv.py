@@ -15,8 +15,12 @@ Reference behaviors reproduced set-level:
   (SURVEY §7.4).
 
 The whole graph is staged with two Spark actions:
-1. one aggregation over nodes and rels together finds every shard and
-   the properties that are non-null in at least one of its rows;
+1. ``models.base.graph_profile``, one aggregation over nodes and rels
+   together, validates the graph and finds every shard, its row count and
+   the properties that are non-null in at least one of its rows.
+   ``CatalogJob.run`` computes it once and passes it in; ``write_graph``
+   computes it when it is not given, so an invalid graph raises before
+   anything is written;
 2. one write. Each row becomes its shard's CSV line via ``to_csv`` over
    exactly that shard's columns (the CSV writer's own generator and
    defaults, so quoting matches it byte for byte); one header line per
@@ -38,7 +42,9 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from amundsendatabuilder_spark.models.base import GraphOutput
+from amundsendatabuilder_spark.models.base import (
+    GraphOutput, ShardProfile, _empty_nodes, _empty_rels, graph_profile,
+    props_key_hash)
 
 # property-name -> neo4j-unquoted type, per the models in models/*.py
 # (reference derives this from Python int/bool values at serialize time,
@@ -59,66 +65,69 @@ def _header_name(prop: str) -> str:
 
 
 class _Kind(NamedTuple):
-    """How one side of the graph is sharded: ``fixed`` columns lead every
-    row, shards are keyed by ``shard`` columns plus the key-set hash and
-    named by ``dir_name`` columns plus the hash's first 8 hex digits, and
-    rows are sorted by ``sort`` columns."""
+    """How one side of the graph is staged: ``fixed`` columns lead every
+    row, shards (keyed by ``models.base.SHARD_KEY[name]`` plus the props
+    key-set hash) are named by ``dir_name`` columns plus the hash's first 8
+    hex digits, and rows are sorted by ``sort`` columns."""
     name: str
     fixed: list[str]
-    shard: list[str]
     dir_name: list[str]
     sort: list[str]
 
 
-_NODES = _Kind("nodes", ["KEY", "LABEL"], ["LABEL"], ["LABEL"], ["KEY"])
+_NODES = _Kind("nodes", ["KEY", "LABEL"], ["LABEL"], ["KEY"])
 _RELS = _Kind("rels",
               ["START_KEY", "START_LABEL", "END_KEY", "END_LABEL", "TYPE",
                "REVERSE_TYPE"],
-              ["START_LABEL", "END_LABEL", "TYPE"],
               ["START_LABEL", "TYPE", "END_LABEL"],
               ["START_KEY", "END_KEY"])
 
 
+def _dir(kind: _Kind, shard: ShardProfile) -> str:
+    """A profiled shard's directory name; ``_tag`` derives the same name
+    per row (``concat_ws`` skips nulls, as this does)."""
+    parts = [shard.key[c] for c in kind.dir_name] + [shard.key_hash[:8]]
+    return "_".join(p for p in parts if p is not None)
+
+
 def _tag(df: DataFrame, kind: _Kind) -> DataFrame:
-    """Add each row's kind, shard directory name, shard order key and
-    sort key."""
-    h = F.md5(F.concat_ws(",", F.array_sort(F.map_keys("props"))))
+    """Add each row's kind, shard directory name and sort key."""
     return df.select(
         *kind.fixed, "props", F.lit(kind.name).alias("_kind"),
-        F.concat_ws("_", *kind.dir_name, F.substring(h, 1, 8)).alias("_dir"),
-        F.array(*kind.shard, h).alias("_order"),
+        F.concat_ws("_", *kind.dir_name,
+                    F.substring(props_key_hash(), 1, 8)).alias("_dir"),
         F.array(*kind.sort).alias("_sort"))
 
 
-def _stage(out_dir: str, sides: list[tuple[_Kind, DataFrame]]
-           ) -> dict[str, list[str]]:
-    """Stage each (kind, frame) side as ragged CSV shards under
-    ``out_dir/{kind}``, replacing shard directories of the same name.
-    Returns each kind's shard paths, sorted by (shard columns, hash)."""
-    tagged = [(kind, _tag(df, kind)) for kind, df in sides]
-    present = F.map_keys(F.map_filter("props", lambda _, v: v.isNotNull()))
-    shards = sorted(
-        reduce(DataFrame.unionByName,
-               [t.select("_kind", "_dir", "_order",
-                         F.explode_outer(present).alias("_prop"))
-                for _, t in tagged])
-        .groupBy("_kind", "_dir", "_order")
-        .agg(F.array_sort(F.collect_set("_prop")).alias("_props"))
-        .collect(), key=lambda r: r["_order"])
-    out = {kind.name: [os.path.join(out_dir, kind.name, r["_dir"])
-                       for r in shards if r["_kind"] == kind.name]
-           for kind, _ in sides}
+def write_graph(out: GraphOutput, out_dir: str,
+                profile: list[ShardProfile] | None = None
+                ) -> dict[str, list[str]]:
+    """Stage nodes and rels as ragged CSV shards under
+    ``out_dir/{nodes,rels}`` with one write, replacing shard directories of
+    the same name. ``profile`` is ``graph_profile(out)``; it is computed
+    here when not given, which raises on an invalid graph before anything
+    is written. Returns each side's shard paths, sorted by (shard key,
+    key-set hash)."""
+    if profile is None:
+        profile = graph_profile(out)
+    shards = sorted(profile, key=lambda p: [*(v or "" for v in p.key.values()),
+                                            p.key_hash])
+    sides = [(_NODES, out.nodes), (_RELS, out.rels)]
+    staged = {kind.name: [os.path.join(out_dir, kind.name, _dir(kind, p))
+                          for p in shards if p.side == kind.name]
+              for kind, _ in sides}
     if not shards:
-        return out
+        return staged
 
     lines, headers = [], []
-    for kind, t in tagged:
+    for kind, df in sides:
         groups: dict[tuple[str, ...], list[str]] = {}
-        for r in shards:
-            if r["_kind"] == kind.name:
-                groups.setdefault(tuple(r["_props"]), []).append(r["_dir"])
-                headers.append((kind.name, r["_dir"], 0, None, ",".join(
-                    [*kind.fixed, *map(_header_name, r["_props"])])))
+        for p in shards:
+            if p.side == kind.name:
+                d = _dir(kind, p)
+                groups.setdefault(tuple(p.props), []).append(d)
+                headers.append((kind.name, d, 0, None, ",".join(
+                    [*kind.fixed, *map(_header_name, p.props)])))
         if not groups:  # an empty side has no shard and no when() branch
             continue
         value = None
@@ -129,9 +138,10 @@ def _stage(out_dir: str, sides: list[tuple[_Kind, DataFrame]]
             cond = F.col("_dir").isin(dirs)
             value = (F.when(cond, line) if value is None
                      else value.when(cond, line))
-        lines.append(t.select("_kind", "_dir", F.lit(1).alias("_h"), "_sort",
-                              value.alias("value")))
-    lines.append(sides[0][1].sparkSession.createDataFrame(
+        lines.append(_tag(df, kind).select(
+            "_kind", "_dir", F.lit(1).alias("_h"), "_sort",
+            value.alias("value")))
+    lines.append(out.nodes.sparkSession.createDataFrame(
         headers, "_kind string, _dir string, _h int, _sort array<string>, "
                  "value string"))
     tmp = os.path.join(out_dir, "_staging")
@@ -153,21 +163,18 @@ def _stage(out_dir: str, sides: list[tuple[_Kind, DataFrame]]
             os.replace(part, os.path.join(
                 dst, os.path.splitext(os.path.basename(part))[0] + ".csv"))
     shutil.rmtree(tmp)
-    return out
+    return staged
 
 
 def write_nodes_csv(nodes: DataFrame, out_dir: str) -> list[str]:
     """Write per-(label, column-set) node CSV shard directories under
     ``out_dir/nodes``. Returns the shard paths written."""
-    return _stage(out_dir, [(_NODES, nodes)])["nodes"]
+    return write_graph(GraphOutput(nodes, _empty_rels(nodes.sparkSession)),
+                       out_dir)["nodes"]
 
 
 def write_rels_csv(rels: DataFrame, out_dir: str) -> list[str]:
     """Write per-(start,end,type,column-set) relationship CSV shards under
     ``out_dir/rels`` (reference loader :141-177)."""
-    return _stage(out_dir, [(_RELS, rels)])["rels"]
-
-
-def write_graph(out: GraphOutput, out_dir: str) -> dict[str, list[str]]:
-    """Stage nodes and rels with one shard aggregation and one write."""
-    return _stage(out_dir, [(_NODES, out.nodes), (_RELS, out.rels)])
+    return write_graph(GraphOutput(_empty_nodes(rels.sparkSession), rels),
+                       out_dir)["rels"]

@@ -11,24 +11,27 @@ splicing)."""
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from amundsendatabuilder_spark.models.base import GraphOutput
+from amundsendatabuilder_spark.models.base import GraphOutput, _empty_nodes, _empty_rels
 
 
 def read_staged_graph(spark: SparkSession, staged_dir: str) -> GraphOutput:
     """Load a graph staged by sinks/graph_csv.write_graph back into
     (nodes, rels) DataFrames. Shard CSVs are ragged (per-column-set), so
     each shard is read with its own header and non-standard columns fold
-    back into the props map."""
-    def load(kind: str, fixed: list[str]) -> DataFrame:
+    back into the props map. Shards are read multi-line, since the sink
+    quotes values that hold newlines; a side with no shards (the sink
+    writes no directory for it) reads back empty."""
+    def load(kind: str, fixed: list[str], empty) -> DataFrame:
         base = os.path.join(staged_dir, kind)
-        out = None
-        for shard in sorted(os.listdir(base)):
-            df = (spark.read.option("header", True)
+        frames = []
+        for shard in sorted(os.listdir(base)) if os.path.isdir(base) else []:
+            df = (spark.read.options(header=True, multiLine=True)
                   .csv(os.path.join(base, shard)))
             prop_cols = [c for c in df.columns if c not in fixed]
             pairs = []
@@ -37,14 +40,15 @@ def read_staged_graph(spark: SparkSession, staged_dir: str) -> GraphOutput:
                 pairs.extend([F.lit(name), F.col(f"`{c}`").cast("string")])
             props = (F.map_filter(F.create_map(*pairs), lambda _, v: v.isNotNull())
                      if pairs else F.create_map().cast("map<string,string>"))
-            norm = df.select(*[F.col(c) for c in fixed], props.alias("props"))
-            out = norm if out is None else out.unionByName(norm)
-        assert out is not None, f"no {kind} shards under {staged_dir}"
-        return out
+            frames.append(df.select(*[F.col(c) for c in fixed],
+                                    props.alias("props")))
+        if not frames:
+            return empty(spark)
+        return functools.reduce(DataFrame.unionByName, frames)
 
-    nodes = load("nodes", ["KEY", "LABEL"])
+    nodes = load("nodes", ["KEY", "LABEL"], _empty_nodes)
     rels = load("rels", ["START_KEY", "START_LABEL", "END_KEY", "END_LABEL",
-                         "TYPE", "REVERSE_TYPE"])
+                         "TYPE", "REVERSE_TYPE"], _empty_rels)
     return GraphOutput(nodes, rels)
 
 

@@ -39,6 +39,63 @@ def test_job_validation_failure_skips_finalizers(spark):
     assert finalized == []
 
 
+NODE_SCHEMA = "KEY string, LABEL string, props map<string,string>"
+REL_SCHEMA = ("START_KEY string, START_LABEL string, END_KEY string, "
+              "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+              "props map<string,string>")
+
+
+def test_job_validation_failure_writes_nothing(spark, tmp_path):
+    """An invalid graph raises naming the check before any write: a staging
+    run leaves no shard or staging directory and runs no finalizer, and the
+    publish-only path, validated by the same profile, calls no writer."""
+    from amundsendatabuilder_spark.jobs import CatalogJob
+    from amundsendatabuilder_spark.models.base import GraphOutput
+    nodes = spark.createDataFrame([("k1", "Table", {"name": "t"})],
+                                  NODE_SCHEMA)
+    rels = spark.createDataFrame(
+        [("k1", "Table", "k2", "Column", "column", "COLUMN_OF", {})],
+        REL_SCHEMA)
+    calls = []
+    job = (CatalogJob(spark, publish_tag="t4")
+           .add(GraphOutput(nodes, rels))
+           .on_success(lambda: calls.append("finalizer")))
+    stage = tmp_path / "g"
+    with pytest.raises(ValueError, match="rel_type_not_upper"):
+        job.run(stage_dir=str(stage))
+    assert not stage.exists()
+    with pytest.raises(ValueError, match="rel_type_not_upper"):
+        job.run(node_writer=lambda *a: calls.append("node"),
+                rel_writer=lambda *a: calls.append("rel"))
+    assert calls == []
+
+
+def test_job_counts_match_count(spark, tmp_path):
+    """The summary's node and rel counts come from the profile and equal
+    count() of the graph: rows without props, rows with several props,
+    null-valued props and duplicate rows (collapsed by the union)."""
+    from amundsendatabuilder_spark.jobs import CatalogJob
+    from amundsendatabuilder_spark.models.base import GraphOutput
+    nodes = spark.createDataFrame(
+        [("k0", "Thing", {}), ("k1", "Thing", {"a": "1", "b": "2", "c": "3"}),
+         ("k1", "Thing", {"a": "1", "b": "2", "c": "3"}),
+         ("k2", "Thing", {"a": None}), ("k3", "Other", {"a": "x", "b": "y"})],
+        NODE_SCHEMA)
+    rels = spark.createDataFrame(
+        [("k0", "Thing", "k1", "Thing", "HAS", "HAS_OF", {}),
+         ("k0", "Thing", "k1", "Thing", "HAS", "HAS_OF", {}),
+         ("k1", "Thing", "k3", "Other", "HAS", "HAS_OF",
+          {"w": "1", "v": "2"}),
+         ("k2", "Thing", "k3", "Other", "HAS", "HAS_OF", {"w": None})],
+        REL_SCHEMA)
+    job = CatalogJob(spark, publish_tag="t5").add(GraphOutput(nodes, rels))
+    summary = job.run(stage_dir=str(tmp_path / "g"))
+    graph = job.graph()
+    assert (summary["nodes"], summary["rels"]) == (4, 3)
+    assert summary["nodes"] == graph.nodes.count()
+    assert summary["rels"] == graph.rels.count()
+
+
 def test_empty_job_raises_value_error(spark):
     from amundsendatabuilder_spark.jobs import CatalogJob
     from amundsendatabuilder_spark.models.base import union_graphs

@@ -180,6 +180,40 @@ def test_graph_validation_strict_raises(spark, check):
                        strict=True)
 
 
+def test_graph_profile_counts_groups_and_props(spark):
+    """graph_profile groups rows by the CSV sink's shard key (side, labels,
+    type, props key-set hash) and counts each row once, whether it has no
+    props, several props, only null-valued props or a duplicate."""
+    from amundsendatabuilder_spark.models.base import GraphOutput, graph_profile
+    nodes = spark.createDataFrame(
+        [("k0", "Thing", {}), ("k1", "Thing", {}),
+         ("k2", "Thing", {"a": "1", "b": "2", "c": "3"}),
+         ("k2", "Thing", {"a": "1", "b": "2", "c": "3"}),
+         ("k3", "Thing", {"a": None, "b": "x", "c": None}),
+         ("k4", "Thing", {"n": None})],
+        "KEY string, LABEL string, props map<string,string>")
+    rels = spark.createDataFrame(
+        [("k0", "Thing", "k1", "Thing", "HAS", "HAS_OF", {}),
+         ("k1", "Thing", "k2", "Thing", "HAS", "HAS_OF", {"w": "1", "v": "2"}),
+         ("k2", "Thing", "k3", "Thing", "OWNS", "OWNED_BY", {"w": "1"})],
+        "START_KEY string, START_LABEL string, END_KEY string, "
+        "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+        "props map<string,string>")
+    profile = graph_profile(GraphOutput(nodes, rels))
+    got = sorted((p.side, tuple(p.key.values()), tuple(p.props), p.rows)
+                 for p in profile)
+    assert got == [
+        ("nodes", ("Thing",), (), 1),
+        ("nodes", ("Thing",), (), 2),
+        ("nodes", ("Thing",), ("a", "b", "c"), 3),
+        ("rels", ("Thing", "Thing", "HAS"), (), 1),
+        ("rels", ("Thing", "Thing", "HAS"), ("v", "w"), 1),
+        ("rels", ("Thing", "Thing", "OWNS"), ("w",), 1)]
+    assert sum(p.rows for p in profile if p.side == "nodes") == nodes.count()
+    assert sum(p.rows for p in profile if p.side == "rels") == rels.count()
+    assert graph_profile(GraphOutput(nodes.limit(0), rels.limit(0))) == []
+
+
 def test_expand_users_manager_self_join(spark):
     from amundsendatabuilder_spark.models.misc import expand_users
     from amundsendatabuilder_spark.sources.csv_source import read_csv

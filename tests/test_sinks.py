@@ -70,9 +70,11 @@ def test_graph_csv_ragged_null_props(spark, tmp_path):
 
 
 def test_graph_csv_nodes_only(spark, tmp_path):
-    """A graph with no rels stages its node shards and no rel shard."""
+    """A graph with no rels stages its node shards and no rel shard, and
+    reads back with an empty rels side."""
     from amundsendatabuilder_spark.models.base import GraphOutput, _empty_rels
     from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+    from amundsendatabuilder_spark.sources.graph import read_staged_graph
     nodes = spark.createDataFrame(
         [("k1", "Thing", {"name": "a"})],
         "KEY string, LABEL string, props map<string,string>")
@@ -81,6 +83,55 @@ def test_graph_csv_nodes_only(spark, tmp_path):
     assert _shard_rows(paths["nodes"][0]) == [
         ["KEY", "LABEL", "name"], ["k1", "Thing", "a"]]
     assert sorted(os.listdir(tmp_path)) == ["nodes"]
+    g = read_staged_graph(spark, str(tmp_path))
+    assert [tuple(r) for r in g.nodes.collect()] == [("k1", "Thing", {"name": "a"})]
+    assert g.rels.count() == 0
+    assert g.rels.schema == _empty_rels(spark).schema
+
+
+def test_staged_graph_reads_multiline_values(spark, tmp_path):
+    """Prop values holding newlines, CRLFs, commas and quotes read back
+    unchanged: one node per staged row, no row split at a quoted
+    newline."""
+    from amundsendatabuilder_spark.models.base import GraphOutput
+    from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+    from amundsendatabuilder_spark.sources.graph import read_staged_graph
+    values = ["line one\nline two", "crlf\r\nend", "a,b", 'say "hi"', '"',
+              'all, "of"\r\nthem']
+    nodes = spark.createDataFrame(
+        [(f"k{i}", "Description", {"description": v})
+         for i, v in enumerate(values)],
+        "KEY string, LABEL string, props map<string,string>")
+    rels = spark.createDataFrame(
+        [(f"k{i}", "Description", "t", "Table", "DESCRIPTION_OF",
+          "DESCRIPTION", {"note": v}) for i, v in enumerate(values)],
+        "START_KEY string, START_LABEL string, END_KEY string, "
+        "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+        "props map<string,string>")
+    write_graph(GraphOutput(nodes, rels), str(tmp_path))
+    g = read_staged_graph(spark, str(tmp_path))
+    assert sorted((r.KEY, r.LABEL, r.props["description"])
+                  for r in g.nodes.collect()) == [
+        (f"k{i}", "Description", v) for i, v in enumerate(values)]
+    assert sorted((r.START_KEY, r.END_KEY, r.props["note"])
+                  for r in g.rels.collect()) == [
+        (f"k{i}", "t", v) for i, v in enumerate(values)]
+
+
+def test_write_graph_invalid_raises_before_writing(spark, tmp_path):
+    """write_graph validates through graph_profile when it is not handed a
+    profile: an invalid graph raises naming the check and writes nothing."""
+    from amundsendatabuilder_spark.models.base import GraphOutput, _empty_nodes
+    from amundsendatabuilder_spark.sinks.graph_csv import write_graph
+    rels = spark.createDataFrame(
+        [("k1", "Thing", "k2", "Thing", "has", "HAS_OF", {"name": "a"})],
+        "START_KEY string, START_LABEL string, END_KEY string, "
+        "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+        "props map<string,string>")
+    out = tmp_path / "staged"
+    with pytest.raises(ValueError, match="rel_type_not_upper"):
+        write_graph(GraphOutput(_empty_nodes(spark), rels), str(out))
+    assert not out.exists()
 
 
 def test_graph_csv_quoting_matches_csv_writer(spark, tmp_path):
