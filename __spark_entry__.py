@@ -9,12 +9,13 @@ operator class of SURVEY §2 plus the training-data pipeline operators.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from amundsendatabuilder_spark.plans.oracle_suite import ORACLES, QUERIES  # noqa: E402
 

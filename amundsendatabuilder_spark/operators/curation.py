@@ -893,8 +893,8 @@ def logreg_train(docs: DataFrame, iters: int = 4, lr: float = 0.5,
     fastText-style linear filter modern corpus pipelines train on
     curated-vs-crawl labels and then sweep across 100 TB, here trained
     WITHOUT collecting anything to the driver: the weight vector is a
-    256-row register (the pca_power_iteration discipline) and each GD
-    round is two shuffles (per-doc margins, per-bucket gradients).
+    256-row register and each GD round is two shuffles (per-doc
+    margins, per-bucket gradients).
 
     ``label``: a boolean Column (default: lang == 'en'); y in {0, 1}.
 
@@ -971,10 +971,8 @@ def logreg_train(docs: DataFrame, iters: int = 4, lr: float = 0.5,
     # single-partition BY DESIGN: it runs over the register (<= declared
     # rows by contract), never the corpus, and the localCheckpoint
     # materializes it exactly once.
-    # r15: the weight vector is a <=declared-row register — checkpoint
-    # it (and each round's update below) as ONE partition instead of a
-    # full shuffle-width task wave per round (the _power_iterate
-    # discipline)
+    # one-partition checkpoints (here and per round below): each round
+    # runs one task over the register, not a shuffle-width task wave
     w = (feats.select("bucket").distinct()
          .select("bucket", guard_register_domain(
              F.lit(0).cast("long"),

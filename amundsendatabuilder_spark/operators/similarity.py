@@ -19,6 +19,10 @@ results are stable across engines/partitionings.
 
 from __future__ import annotations
 
+import hashlib
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -629,46 +633,6 @@ def pq_adc_topk(encoded: DataFrame, codebooks: DataFrame,
             .select("query_id", "neighbor_id", "score", "rank"))
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _interpreted_register_exec(df: DataFrame):
-    """Scope whole-stage codegen OFF around a register-sized execution
-    (r16, guide §1.2 "per-task work"): the eigensolve/Rayleigh plans run
-    over d- to d²-row registers where a task's real work is
-    microseconds, but every fresh plan costs janino 2-3 whole-stage
-    compilations (~7 s across one pca_power_iteration run, measured:
-    iterate+count 11.1 s codegen-on cold / 4.4 s warm / 3.3-4.0 s
-    interpreted). Interpreted execution is strictly faster at this row
-    count and semantically identical (same expressions, same results —
-    execution mode only). Restores the previous value on exit so
-    corpus-scale plans keep codegen."""
-    spark = df.sparkSession
-    key = "spark.sql.codegen.wholeStage"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-def _register_ckpt(df: DataFrame) -> DataFrame:
-    """Materialize a register-sized DataFrame as ONE partition and
-    RESTORE the SinglePartition property afterwards (r16): under AQE,
-    ``localCheckpoint`` reports ``UnknownPartitioning(0)`` on the
-    resulting scan, so every downstream join/aggregate over the register
-    would re-insert exchanges (and every ``AllTuples`` consumer a
-    SinglePartition exchange) even though the RDD is literally one
-    partition. The trailing ``coalesce(1)`` is a physical no-op on a
-    1-partition RDD but lets the planner prove SinglePartition — which
-    is what makes the hinted shuffle-hash register joins and
-    partitionBy()-empty windows in this module plan with ZERO exchanges
-    and ZERO broadcast builds (guide §2.4/§5)."""
-    return df.coalesce(1).localCheckpoint().coalesce(1)
-
-
 def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
                          scale: int = 1_000_000) -> DataFrame:
     """Exact population covariance matrix of the embedding column — the
@@ -734,16 +698,17 @@ def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
         "ELSE CAST(q[i] AS DECIMAL(19,0)) * CAST(q[j] AS DECIMAL(19,0)) "
         "END AS prod))))")
     # the register feeds FOUR consumers (pair entries, s_i, s_j, n) —
-    # materialize it once (d(d+1)/2 + d rows — register-sized, one
-    # partition) or every broadcast build re-runs the corpus explode
-    reg = _register_ckpt(
-        v.select(F.explode(pairs).alias("p"))
-        .select("p.i", F.when(F.col("p.j") < F.col("p.i"), F.lit(-1))
-                .otherwise(F.col("p.j")).cast("int").alias("j"),
-                "p.prod")
-        .groupBy("i", "j")
-        .agg(F.sum(F.col("prod").cast("decimal(38,0)")).alias("sxy"),
-             F.count(F.lit(1)).alias("_cnt")))
+    # materialize it once as one partition (d(d+1)/2 + d rows) or every
+    # consumer re-runs the corpus explode; the trailing no-op coalesce
+    # lets the planner see SinglePartition again after the checkpoint
+    reg = (v.select(F.explode(pairs).alias("p"))
+           .select("p.i", F.when(F.col("p.j") < F.col("p.i"), F.lit(-1))
+                   .otherwise(F.col("p.j")).cast("int").alias("j"),
+                   "p.prod")
+           .groupBy("i", "j")
+           .agg(F.sum(F.col("prod").cast("decimal(38,0)")).alias("sxy"),
+                F.count(F.lit(1)).alias("_cnt"))
+           .coalesce(1).localCheckpoint().coalesce(1))
     p = reg.where(F.col("j") >= 0).select("i", "j", "sxy")
     u = reg.where(F.col("j") == -1).select("i", F.col("sxy").alias("s"))
     # ragged NONZERO dims are not excludable — a short row contributes a
@@ -785,11 +750,8 @@ def embedding_covariance(emb: DataFrame, vec_col: str = "embedding",
     # value exactly like the profiling sites
     rows_bound = F.expr("(CAST(j AS BIGINT) + 1) * (CAST(j AS BIGINT) + 2)"
                         " DIV 2")
-    # r16: every side of these joins derives from the SinglePartition
-    # reg checkpoint, so hinted shuffle-hash joins + a cartesian 1-row
-    # attach plan the whole consumer section as ONE exchange-free,
-    # broadcast-free stage (the three F.broadcast builds each cost a
-    # scheduled job re-scanning reg; see _power_iterate's note)
+    # every side derives from the one-partition reg: the hinted joins plan
+    # exchange- and broadcast-free (each broadcast build was a job)
     return (p.join(si.hint("shuffle_hash"), p["i"] == si["_i"])
             .join(sj.hint("shuffle_hash"), p["j"] == sj["_j"])
             .crossJoin(n.hint("shuffle_replicate_nl"))
@@ -945,153 +907,118 @@ def jl_distortion_audit(emb: DataFrame, planes: list[list[float]],
 def pca_power_iteration(emb: DataFrame, iters: int = 8,
                         vec_col: str = "embedding",
                         cov: "DataFrame | None" = None) -> DataFrame:
-    """Top principal component of the embedding cloud, entirely
-    in-engine: power iteration v <- C v / ||C v|| on the EXACT
-    covariance table from ``embedding_covariance`` — the eigensolve
-    that turns the "distributed half of PCA" into the whole thing
-    without ever collecting the matrix to the driver (at d = 64 the
-    iteration state is a 64-row register; at d = 4096 it still is).
+    """Top principal component of the embedding cloud: power iteration
+    v <- C v / ||C v|| on the EXACT covariance from
+    ``embedding_covariance``. The covariance pass is the only
+    data-sized stage and stays distributed; the d(d+1)/2-row register it
+    yields is collected (capped by REGISTER_DOMAIN_LIMIT) and the
+    eigensolve runs on the driver in exact integer/IEEE arithmetic.
 
     Returns (dim, loading, eigenvalue, n_iters): the unit top
     eigenvector (6dp) with its Rayleigh-quotient eigenvalue (9dp,
-    same on every row). Sign follows the deterministic md5-jittered start vector
+    same on every row; NULL when the vector collapses, e.g. a constant
+    corpus). Sign follows the deterministic md5-jittered start vector
     (power iteration's sign is a convention, not information).
 
-    Determinism/scale shape: the covariance enters as its
-    HASH-VERIFIED 9dp-rounded values (both engines agree bit-for-bit);
-    the vector lives as 1e9-scaled BIGINTs; each matrix-vector product
-    term round(C_ij * v_j) is an exact integer before the per-row sum
-    (order-free), the norm is one double sqrt of a DECIMAL(38,0)
-    square-sum, and renormalization re-quantizes — so all ``iters``
-    rounds replay identically in the DuckDB twin. Each round is one
-    64-row broadcast join; localCheckpoint keeps the plan flat.
+    Determinism: the covariance enters as its hash-verified 9dp values;
+    the vector lives as 1e9-scaled integers; each mat-vec term
+    round(C_ij * v_j) is an exact integer before the per-row sum, the
+    norm is one double sqrt of an exact integer square-sum, and
+    renormalization re-quantizes — so all ``iters`` rounds replay
+    identically in the DuckDB twin. ``cov`` lets a caller that also
+    consumes the covariance pass its (dim_i <= dim_j) triangle in, so
+    the corpus pass runs once.
     """
-    from amundsendatabuilder_spark.functions.scalars import round_half_away
-    # callers that ALSO consume the covariance (explained-variance's
-    # trace) pass their own checkpointed register so the corpus pass —
-    # the only data-sized stage of the whole eigensolve — runs once
     if cov is None:
         cov = embedding_covariance(emb, vec_col=vec_col)
-    # symmetrize the upper triangle into the full matrix. r15: the
-    # symmetrized register is d(d+1) rows (~4k at d=64, ~1M ≈ 30 MB at
-    # d=1k), so it checkpoints as ONE partition — each of the ~iters
-    # broadcast-join jobs then schedules 1 task against it instead of a
-    # 32-task wave (guide §2.4; for d ≥ ~4k shard the register instead).
-    low = (cov.where(F.col("dim_i") != F.col("dim_j"))
-           .select(F.col("dim_j").alias("dim_i"),
-                   F.col("dim_i").alias("dim_j"), "cov"))
-    # shared jitter-start/mat-vec/renormalize core (bit-identical to the
-    # in-line loop this replaced — one arithmetic path for both the
-    # single-component and the deflation entry points); wf is one more
-    # exact mat-vec against the FINAL v for an honest Rayleigh quotient
-    with _interpreted_register_exec(cov):
-        c = _register_ckpt(cov.unionByName(low))
-        v, wf = _power_iterate(c, iters, "pca:")
-    # r16: v and wf are SinglePartition registers — hinted shuffle-hash
-    # join + cartesian 1-row attach plan exchange-free and broadcast-
-    # free (no broadcast-build jobs for d-row tables; see _power_iterate)
-    q = (v.join(wf.hint("shuffle_hash"), "dim")
-         .agg(F.sum((F.col("vi").cast("decimal(19,0)")
-                     * F.col("wi").cast("decimal(19,0)"))
-                    .cast("decimal(38,0)")).alias("vw"),
-              F.sum((F.col("vi").cast("decimal(19,0)")
-                     * F.col("vi").cast("decimal(19,0)"))
-                    .cast("decimal(38,0)")).alias("vv")))
-    lam = F.when(F.col("vv").cast("double") > 0,
-                 round_half_away(F.col("vw").cast("double")
-                                 / F.col("vv").cast("double"), 9))
-    return (v.crossJoin(q.select(lam.alias("eigenvalue"))
-                        .hint("shuffle_replicate_nl"))
-            .select("dim",
-                    round_half_away(F.col("vi").cast("double") / 1e9, 6)
-                    .alias("loading"),
-                    "eigenvalue",
-                    F.lit(int(iters)).alias("n_iters")))
+    dims, v, wf = _power_iterate(_covariance_register(cov), iters, "pca:")
+    lam = _rayleigh(v, wf)
+    return cov.sparkSession.createDataFrame(
+        [(d, _loading(x), lam, int(iters)) for d, x in zip(dims, v)],
+        "dim int NOT NULL, loading double, eigenvalue double, "
+        "n_iters int NOT NULL")
 
 
-def _power_iterate(c: DataFrame, iters: int, seed_prefix: str):
-    """Shared power-iteration core over a symmetrized (dim_i, dim_j,
-    cov) register: md5-jittered dense start (prefix-seeded), ``iters``
-    rounds of integer mat-vec + decimal-norm re-quantization. Returns
-    (v, wf): the final 1e9-scaled eigenvector register and one more
-    exact mat-vec against it (for the Rayleigh quotient) — exactly
-    pca_power_iteration's arithmetic, factored for deflation reuse."""
-    from amundsendatabuilder_spark.functions.scalars import round_half_away
-    jitter = F.conv(F.substring(F.md5(F.concat(
-        F.lit(seed_prefix), F.col("dim").cast("string"))), 1, 4), 16, 10
-    ).cast("long")
-    # r16: the whole iteration is LAZY — no per-round checkpoint at all.
-    # The window-based norm below references the matvec output exactly
-    # ONCE per round (the Window operator computes its aggregates over
-    # its input a single time and attaches them as columns), so the
-    # unrolled plan grows LINEARLY in iters (~6 operators/round) instead
-    # of the exponential blowup that forced r15's checkpoint-per-round:
-    # there, w fed two consumers (norm agg + renormalize) and every
-    # consumer re-planned the subtree. With c a SinglePartition register
-    # and every operator here partitioning-preserving, the ENTIRE
-    # ``iters``-round eigensolve plans as ONE exchange-free,
-    # broadcast-free, single-task job — versus ~3 scheduled jobs (two
-    # broadcast builds + a checkpoint) PER ROUND in r15 (guide §2.4/§5;
-    # per-round eager checkpoints also compounded the checkpoint-
-    # preserved join-size ESTIMATES multiplicatively, see session.py's
-    # maxSinglePartitionBytes note).
-    v = (c.select(F.col("dim_i").alias("dim")).distinct()
-         .select("dim", (F.lit(500_000_000) + jitter * F.lit(10_000))
-                 .cast("long").alias("vi")))
+def _covariance_register(cov: DataFrame) -> dict:
+    """The (dim_i <= dim_j, cov) triangle as the symmetric
+    ``{(i, j): cov}`` map the driver-side eigensolve works on. At most
+    REGISTER_DOMAIN_LIMIT + 1 rows leave the engine, and one past the
+    limit raises before any solving."""
+    from amundsendatabuilder_spark.operators import profiling
+    limit = profiling.REGISTER_DOMAIN_LIMIT
+    rows = cov.select("dim_i", "dim_j", "cov").limit(limit + 1).collect()
+    if len(rows) > limit:
+        raise ValueError(
+            f"register domain for the PCA covariance register exceeded "
+            f"{limit} rows — reduce the embedding dimension")
+    c = {}
+    for i, j, x in rows:
+        c[(i, j)] = c[(j, i)] = x
+    return c
 
-    def matvec(vec):
-        vr = (vec.withColumnRenamed("dim", "vdim")
-              .withColumnRenamed("vi", "vj"))
-        # r16: c and vec are BOTH 1-partition register checkpoints, and
-        # SinglePartition satisfies every required distribution — a
-        # hinted shuffle-hash join therefore plans with ZERO exchanges
-        # and ZERO broadcast builds (the old F.broadcast(vr) paid a
-        # broadcast-build JOB per matvec for a d-row table; at sf0.1
-        # the whole trio was scheduling-latency-bound on exactly those
-        # jobs — guide §5, VERDICT r15 item #3)
-        return (c.join(vr.hint("shuffle_hash"),
-                       c["dim_j"] == F.col("vdim"))
-                .select(c["dim_i"].alias("dim"),
-                        round_half_away(F.col("cov")
-                                        * F.col("vj").cast("double"), 0)
-                        .cast("long").alias("t"))
-                .groupBy("dim").agg(F.sum("t").cast("long").alias("wi"))
-                # physical no-op (input is one partition) that
-                # NORMALIZES the claimed partitioning to SinglePartition:
-                # a join+agg subtree reports a PartitioningCollection
-                # that Spark 4.1's EnsureRequirements re-widens when the
-                # NEXT round joins against it (measured: rounds 2+ and
-                # the Rayleigh join re-inserted 32-way exchanges)
-                .coalesce(1))
 
-    from amundsendatabuilder_spark.operators.profiling import (
-        guard_register_domain)
-    # The norm is a partitionBy()-empty window (requires AllTuples; the
-    # SinglePartition input satisfies it with no exchange) instead of an
-    # agg + crossJoin(broadcast). Arithmetic is unchanged from r15: same
-    # decimal square-sum, same sqrt, same guarded count, same
-    # renormalization expression — only the physical shape differs.
-    win = Window.partitionBy()
+def _round_half_away(x: "float | None", n: int) -> "float | None":
+    """``functions.scalars.round_half_away`` on one Python float: the
+    same floor(x * 10^n + 0.5) on the scaled binary double; None stays
+    None (the engine's NULL)."""
+    if x is None:
+        return None
+    p = float(10 ** n)
+    s = x * p
+    return (math.floor(s + 0.5) if s >= 0 else -math.floor(-s + 0.5)) / p
+
+
+def _loading(vi: "int | None") -> "float | None":
+    return None if vi is None else _round_half_away(vi / 1e9, 6)
+
+
+def _power_iterate(c: dict, iters: int, seed_prefix: str):
+    """Power iteration over a symmetric ``{(i, j): cov}`` register on the
+    driver: md5-jittered start (prefix-seeded), ``iters`` rounds of
+    integer mat-vec + exact-norm re-quantization. Returns (dims, v, wf):
+    the sorted dims, the final 1e9-scaled eigenvector and one more
+    mat-vec against it (for the Rayleigh quotient). Vectors are lists of
+    Python ints, None where the engine holds NULL: a NULL cov or v_j
+    drops its term, and a row with no term left is NULL."""
+    dims = sorted({i for i, _ in c})
+    at = {d: k for k, d in enumerate(dims)}
+    m = np.zeros((len(dims), len(dims)))
+    known = np.zeros(m.shape, dtype=bool)
+    for (i, j), x in c.items():
+        if x is not None:
+            m[at[i], at[j]] = x
+            known[at[i], at[j]] = True
+
+    def matvec(v):
+        t = m * np.array([0.0 if x is None else float(x) for x in v])
+        t = np.where(t >= 0, np.floor(t + 0.5), -np.floor(-t + 0.5))
+        if t.size and np.abs(t).max() * len(dims) >= 2.0 ** 63:
+            raise ArithmeticError("power iteration: mat-vec overflows a long")
+        has = (known & np.array([x is not None for x in v], dtype=bool)
+               ).any(axis=1)
+        return [s if h else None
+                for s, h in zip(t.astype(np.int64).sum(axis=1).tolist(),
+                                has.tolist())]
+
+    v = [500_000_000 + int(hashlib.md5(f"{seed_prefix}{d}".encode())
+                           .hexdigest()[:4], 16) * 10_000 for d in dims]
     for _ in range(int(iters)):
         w = matvec(v)
-        # register-domain guard piggybacked on the norm window the round
-        # already pays for: the iteration state must stay a d-row
-        # register, and the window counts its rows for free
-        nrm = guard_register_domain(
-            F.sqrt(F.sum(
-                (F.col("wi").cast("decimal(19,0)")
-                 * F.col("wi").cast("decimal(19,0)")).cast("decimal(38,0)"))
-                .over(win).cast("double")),
-            F.count(F.lit(1)).over(win),
-            "power-iteration vector register")
-        v = (w.select("dim", F.when(
-                 nrm > 0, round_half_away(
-                     F.col("wi").cast("double") / nrm * 1e9, 0))
-                 .otherwise(F.lit(0)).cast("long").alias("vi")))
-    # materialize ONCE at the end: callers consume v 2-3 times (Rayleigh
-    # join, final projection, deflation) and wf re-enters matvec
-    v = _register_ckpt(v)
-    return v, matvec(v)
+        sq = [x * x for x in w if x is not None]
+        nrm = math.sqrt(float(sum(sq))) if sq else None
+        v = [0 if not nrm else None if x is None
+             else int(_round_half_away(x / nrm * 1e9, 0)) for x in w]
+    return dims, v, matvec(v)
+
+
+def _rayleigh(v: list, w: list) -> "float | None":
+    """Rayleigh quotient v.w / v.v at 9dp from exact integer sums; None
+    when v.v is not positive or no v.w term is known."""
+    vw = [a * b for a, b in zip(v, w) if a is not None and b is not None]
+    vv = [a * a for a in v if a is not None]
+    if not vw or sum(vv) <= 0:
+        return None
+    return _round_half_away(float(sum(vw)) / float(sum(vv)), 9)
 
 
 def pca_top_components(emb: DataFrame, n_components: int = 2,
@@ -1099,77 +1026,32 @@ def pca_top_components(emb: DataFrame, n_components: int = 2,
                        vec_col: str = "embedding") -> DataFrame:
     """Top ``n_components`` principal components by power iteration
     with Hotelling deflation — after each component (lambda, v), the
-    register matrix updates to C <- C - lambda v v^T and the iteration
-    reruns, so the whole truncated eigendecomposition stays in-engine
-    on register-sized tables (the covariance never leaves the
-    cluster, whatever d is).
+    register updates to C <- C - lambda v v^T and the iteration reruns.
+    The covariance is computed in-engine; the collected register is
+    solved and deflated on the driver (see ``pca_power_iteration``).
 
     Returns (component, dim, loading, eigenvalue): 1-based component
     index, unit loadings 6dp, Rayleigh eigenvalues 9dp (non-increasing
     across components up to quantization). Deflated entries re-round
     to the covariance's 9dp grid so every pass replays identically in
-    the twin.
+    the twin; a NULL eigenvalue deflates the register to NULL.
     """
-    from amundsendatabuilder_spark.functions.scalars import round_half_away
-    cov = embedding_covariance(emb)
-    low = (cov.where(F.col("dim_i") != F.col("dim_j"))
-           .select(F.col("dim_j").alias("dim_i"),
-                   F.col("dim_i").alias("dim_j"), "cov"))
-    # r15: register-sized checkpoints coalesce to one partition — see
-    # pca_power_iteration's note (same d(d+1)-row bound, same trade);
-    # r16: the whole register-scale eigensolve (checkpoints, deflation)
-    # executes interpreted — see _interpreted_register_exec
-    frames = []
-    with _interpreted_register_exec(cov):
-        c = _register_ckpt(cov.unionByName(low))
-        for k in range(1, int(n_components) + 1):
-            v, wf = _power_iterate(c, iters, f"pca{k}:")
-            # r16: SinglePartition registers throughout — hinted shuffle-hash
-            # joins and cartesian 1-row attaches replace every broadcast
-            # build (each was a scheduled job per component; see
-            # _power_iterate's note)
-            q = (v.join(wf.hint("shuffle_hash"), "dim")
-                 .agg(F.sum((F.col("vi").cast("decimal(19,0)")
-                             * F.col("wi").cast("decimal(19,0)"))
-                            .cast("decimal(38,0)")).alias("vw"),
-                      F.sum((F.col("vi").cast("decimal(19,0)")
-                             * F.col("vi").cast("decimal(19,0)"))
-                            .cast("decimal(38,0)")).alias("vv")))
-            lam_col = F.when(F.col("vv").cast("double") > 0,
-                             round_half_away(F.col("vw").cast("double")
-                                             / F.col("vv").cast("double"),
-                                             9)).alias("eigenvalue")
-            lamdf = q.select(lam_col)
-            frames.append(
-                v.crossJoin(lamdf.hint("shuffle_replicate_nl"))
-                .select(F.lit(k).alias("component"), "dim",
-                        round_half_away(F.col("vi").cast("double") / 1e9, 6)
-                        .alias("loading"), "eigenvalue"))
-            if k < n_components:
-                # Hotelling deflation on the 9dp grid: C -= lambda v v^T
-                vi_ = (v.withColumnRenamed("dim", "di")
-                       .withColumnRenamed("vi", "va"))
-                vj_ = (v.withColumnRenamed("dim", "dj")
-                       .withColumnRenamed("vi", "vb"))
-                c = (c.join(vi_.hint("shuffle_hash"),
-                            c["dim_i"] == F.col("di"))
-                     .join(vj_.hint("shuffle_hash"),
-                           c["dim_j"] == F.col("dj"))
-                     .crossJoin(lamdf.hint("shuffle_replicate_nl"))
-                     .select(c["dim_i"], c["dim_j"], round_half_away(
-                         F.col("cov") - F.col("eigenvalue")
-                         * (F.col("va").cast("double") / 1e9)
-                         * (F.col("vb").cast("double") / 1e9), 9)
-                         .alias("cov"))
-                     .coalesce(1).localCheckpoint()
-                     # trailing no-op coalesce restores SinglePartition for
-                     # the next component's hinted register joins (see
-                     # _register_ckpt)
-                     .coalesce(1))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    c = _covariance_register(embedding_covariance(emb, vec_col=vec_col))
+    rows = []
+    for k in range(1, int(n_components) + 1):
+        dims, v, wf = _power_iterate(c, iters, f"pca{k}:")
+        lam = _rayleigh(v, wf)
+        rows += [(k, d, _loading(x), lam) for d, x in zip(dims, v)]
+        if k < n_components:
+            # Hotelling deflation on the 9dp grid: C -= lambda v v^T
+            vd = dict(zip(dims, v))
+            c = {(i, j): None if None in (x, lam, vd[i], vd[j])
+                 else _round_half_away(
+                     x - lam * (vd[i] / 1e9) * (vd[j] / 1e9), 9)
+                 for (i, j), x in c.items()}
+    return emb.sparkSession.createDataFrame(
+        rows, "component int NOT NULL, dim int NOT NULL, loading double, "
+        "eigenvalue double")
 
 
 def collapse_exact_vectors(emb: DataFrame, id_col: str = "vec_id",

@@ -11050,10 +11050,10 @@ FROM {last} v CROSS JOIN q"""
 
 @query("pca_power_iteration", _pca_power_oracle())
 def pca_power_iteration_query(spark, sf_dir):
-    """Top principal component by in-engine power iteration
+    """Top principal component by power iteration
     (similarity.pca_power_iteration): hash-verified 9dp covariance in,
-    1e9-quantized eigenvector register out, Rayleigh-quotient
-    eigenvalue — PCA without collecting the matrix to the driver."""
+    solved on the driver, 1e9-quantized eigenvector out, Rayleigh-quotient
+    eigenvalue."""
     from amundsendatabuilder_spark.operators.similarity import (
         pca_power_iteration)
     (emb,) = _t(spark, sf_dir, "embeddings")
@@ -11098,19 +11098,7 @@ def pca_explained_variance_query(spark, sf_dir):
         embedding_covariance, pca_power_iteration)
     (emb,) = _t(spark, sf_dir, "embeddings")
     # ONE covariance corpus pass shared by the eigensolve and the trace
-    # (the pass is the only data-sized stage here; everything downstream
-    # is a d-row register — so it checkpoints as one partition, r15)
-    # trailing no-op coalesce restores the SinglePartition property the
-    # checkpoint loses under AQE (similarity._register_ckpt pattern) so
-    # the trace agg and the eigensolve's register joins plan
-    # exchange-free; the checkpoint itself executes register-scale
-    # consumer joins only (the corpus pass ran inside
-    # embedding_covariance), so it runs interpreted (r16)
-    from amundsendatabuilder_spark.operators.similarity import (
-        _interpreted_register_exec)
-    cov_lazy = embedding_covariance(emb)
-    with _interpreted_register_exec(cov_lazy):
-        cov = cov_lazy.coalesce(1).localCheckpoint().coalesce(1)
+    cov = embedding_covariance(emb)
     lam = (pca_power_iteration(emb, iters=8, cov=cov)
            .agg(F.max("eigenvalue").alias("eigenvalue")))
     tr = (cov
@@ -11118,10 +11106,7 @@ def pca_explained_variance_query(spark, sf_dir):
           .select(round_half_away(F.col("cov") * 1e9, 0).cast("long")
                   .alias("c9"))
           .agg(F.sum("c9").cast("long").alias("tr_e9")))
-    # r16: both sides are 1-partition register derivations — a cartesian
-    # 1-row attach skips the broadcast-build job (see _power_iterate)
-    j = lam.crossJoin(tr.hint("shuffle_replicate_nl"))
-    return j.select(
+    return lam.crossJoin(tr).select(
         "eigenvalue",
         round_half_away(F.col("tr_e9").cast("double") / 1e9, 6)
         .alias("trace"),
@@ -11315,10 +11300,9 @@ c{k + 1} AS MATERIALIZED (
 @query("pca_top_components", _pca_top_oracle())
 def pca_top_components_query(spark, sf_dir):
     """Top-2 principal components by power iteration + Hotelling
-    deflation (similarity.pca_top_components): the truncated
-    eigendecomposition entirely on register-sized tables — deflated
-    entries re-round to the covariance's 9dp grid so both passes
-    replay identically in the unrolled twin."""
+    deflation (similarity.pca_top_components) on the collected
+    covariance register — deflated entries re-round to the covariance's
+    9dp grid so both passes replay identically in the unrolled twin."""
     from amundsendatabuilder_spark.operators.similarity import (
         pca_top_components)
     (emb,) = _t(spark, sf_dir, "embeddings")

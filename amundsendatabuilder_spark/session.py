@@ -44,25 +44,6 @@ def get_spark(app_name: str = "amundsendatabuilder_spark",
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
                 "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r16: EnsureRequirements' single-partition veto (SPARK-41986,
-        # default 128 MB) re-widens any 1-partition child whose
-        # ESTIMATED size exceeds the threshold into a full shuffle.
-        # This engine's only deliberate 1-partition plans are
-        # contract-guarded registers (guard_register_domain /
-        # require_register_width raise past 64k rows ≈ single-digit MB
-        # true size), but Spark's sizeInBytes ESTIMATE for a register
-        # checkpointed from a join-bearing lineage is the PRODUCT of the
-        # input estimates (measured: a 64-row, ~2 KB eigenvector
-        # register estimated at 1.58 GiB after ONE matvec round, and the
-        # estimate compounds per iteration) — so the veto fired on every
-        # iterative register join and silently re-inserted the 32-task
-        # exchange waves r15 removed (guide §2.4/§5). The register
-        # contract, not this heuristic, is what bounds single-partition
-        # work here at every scale; estimates off by 5+ orders of
-        # magnitude make the default threshold meaningless for these
-        # plans.
-        .config("spark.sql.maxSinglePartitionBytes",
-                str((1 << 63) - 1) + "b")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

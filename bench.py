@@ -299,9 +299,8 @@ CHANGED_THIS_ROUND: "list[str]" = [
     # Wave 1 (inherited commit a19bf0c, verified by this session) —
     # mutual_nn_pairs mutuality as a canonical-pair count (top1
     # self-join removed: the whole candidate+scoring+argmax pipeline
-    # previously planned twice); _power_iterate lazy single-plan rounds
-    # (no per-round checkpoint/broadcast-build jobs); covariance pair
-    # generator parallelized + register consumers exchange-free
+    # previously planned twice); PCA register rounds without per-round
+    # jobs; covariance pair generator parallelized
     "embedding_covariance",
     "pca_power_iteration",
     "pca_explained_variance",

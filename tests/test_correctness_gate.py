@@ -8,11 +8,23 @@ These tests pin the gate's type mapping so that class of miss can never
 ship again.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
+import check_correctness  # noqa: E402
 from check_correctness import dtype_problems, duck_type_to_spark  # noqa: E402
+
+
+def test_gate_checks_its_own_tree():
+    """The gate and the package it imports are the ones in the tree this
+    test sits in, so a copy of the repo checks the copy."""
+    gate = os.path.realpath(check_correctness.__file__)
+    assert gate == os.path.realpath(
+        os.path.join(ROOT, "tools", "check_correctness.py"))
+    assert os.path.realpath(check_correctness.ROOT) == os.path.realpath(ROOT)
 
 
 def test_uncast_sum_fixture_is_rejected():

@@ -4470,7 +4470,69 @@ def test_pca_power_iteration_known_direction(spark):
         [(i, [1.0, 1.0]) for i in range(1, 6)],
         "vec_id long, embedding array<float>")
     oc = pca_power_iteration(const, iters=4).collect()
-    assert all(r.loading == 0.0 for r in oc)
+    assert len(oc) == 2
+    assert all(r.loading == 0.0 and r.eigenvalue is None for r in oc)
+    # one vector: the same collapse (NULL eigenvalue); no vector: no rows
+    one = spark.createDataFrame([(1, [0.5, -0.25, 0.125])],
+                                "vec_id long, embedding array<float>")
+    oo = pca_power_iteration(one, iters=4).collect()
+    assert len(oo) == 3
+    assert all(r.loading == 0.0 and r.eigenvalue is None for r in oo)
+    none = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    assert pca_power_iteration(none, iters=4).collect() == []
+
+
+def test_power_iterate_matches_python_loop():
+    """similarity._power_iterate's numpy mat-vec equals a plain
+    Python-int loop term for term (same IEEE products, same floor
+    rounding, exact integer sums) on a random register with NULL
+    entries; a register whose terms overflow a long raises."""
+    import hashlib
+    import math
+    import random
+
+    import pytest
+
+    from amundsendatabuilder_spark.operators.similarity import (
+        _power_iterate)
+
+    def rha0(x):
+        return math.floor(x + 0.5) if x >= 0 else -math.floor(-x + 0.5)
+
+    def reference(c, iters, prefix):
+        dims = sorted({i for i, _ in c})
+
+        def matvec(v):
+            out = []
+            for i in dims:
+                terms = [rha0(c[(i, j)] * float(v[k]))
+                         for k, j in enumerate(dims)
+                         if c.get((i, j)) is not None and v[k] is not None]
+                out.append(sum(terms) if terms else None)
+            return out
+
+        v = [500_000_000 + int(hashlib.md5(f"{prefix}{d}".encode())
+                               .hexdigest()[:4], 16) * 10_000 for d in dims]
+        for _ in range(iters):
+            w = matvec(v)
+            known = [x for x in w if x is not None]
+            nrm = math.sqrt(float(sum(x * x for x in known))) \
+                if known else None
+            v = [0 if not nrm or nrm <= 0 else
+                 None if x is None else rha0(float(x) / nrm * 1e9)
+                 for x in w]
+        return dims, v, matvec(v)
+
+    rnd = random.Random(3)
+    c = {}
+    for i in range(40):
+        for j in range(i, 40):
+            x = None if rnd.random() < 0.05 else round(rnd.uniform(-2, 2), 9)
+            c[(i, j)] = c[(j, i)] = x
+    for iters in (0, 1, 8):
+        assert _power_iterate(c, iters, "t:") == reference(c, iters, "t:")
+    with pytest.raises(ArithmeticError, match="overflows"):
+        _power_iterate({(0, 0): 1e12}, 1, "t:")
 
 
 def test_windowed_minhash_registers_stream(spark):
@@ -4542,6 +4604,17 @@ def test_pca_top_components_orthogonal(spark):
     # orthogonality of the two unit vectors
     dot = sum(c1[d].loading * c2[d].loading for d in c1)
     assert abs(dot) <= 1e-3
+    # one vector: component 1 collapses to a NULL eigenvalue, and
+    # deflating by a NULL lambda nulls the register, so component 2 is
+    # NULL too — 2·d rows, all loadings 0.0; no vector: no rows
+    one = spark.createDataFrame([(1, [0.5, -0.25, 0.125])],
+                                "vec_id long, embedding array<float>")
+    oo = pca_top_components(one, n_components=2, iters=4).collect()
+    assert sorted((r.component, r.dim) for r in oo) == [
+        (k, d) for k in (1, 2) for d in range(3)]
+    assert all(r.loading == 0.0 and r.eigenvalue is None for r in oo)
+    none = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    assert pca_top_components(none, n_components=2).collect() == []
 
 
 def test_hyperball_effective_diameter_line(spark):
@@ -4754,12 +4827,27 @@ def test_register_guard_similarity_family(spark, monkeypatch):
     monkeypatch.setattr(profiling, "REGISTER_DOMAIN_LIMIT", 10)
     with pytest.raises(Exception, match="register domain"):
         similarity.embedding_covariance(emb).collect()
-    # the power-iteration norm agg guards the d-row vector register too
+    # a caller-supplied covariance register (20 dims, 210 rows) leaves
+    # the engine as at most limit + 1 rows and raises before any solving
     cov = spark.createDataFrame(
-        [(i, j, 0.5) for i in range(20) for j in range(20)],
+        [(i, j, 0.5) for i in range(20) for j in range(i, 20)],
         "dim_i int, dim_j int, cov double")
-    with pytest.raises(Exception, match="register domain"):
-        similarity._power_iterate(cov, 1, "t:")[0].collect()
+    collected = []
+    collect = type(cov).collect
+
+    def spy(self):
+        rows = collect(self)
+        collected.append(len(rows))
+        return rows
+
+    def no_solve(*args):
+        raise AssertionError("solved an over-limit register")
+
+    monkeypatch.setattr(type(cov), "collect", spy)
+    monkeypatch.setattr(similarity, "_power_iterate", no_solve)
+    with pytest.raises(ValueError, match="register domain"):
+        similarity.pca_power_iteration(emb, cov=cov)
+    assert collected == [11]
 
 
 def test_register_guard_logreg_family(spark):
@@ -4876,6 +4964,18 @@ def test_ensure_parallelism_follows_live_shuffle_width(spark):
         assert ensure_parallelism(one).rdd.getNumPartitions() == width
     finally:
         spark.conf.set(key, before)
+
+
+def test_session_keeps_single_partition_size_check(spark):
+    """get_spark leaves spark.sql.maxSinglePartitionBytes at Spark's
+    default: no session-wide setting turns the planner's single-partition
+    size check off for every plan."""
+    key = "spark.sql.maxSinglePartitionBytes"
+    jvm = spark._jvm.org.apache.spark
+    to_bytes = jvm.network.util.JavaUtils.byteStringAsBytes
+    entry = jvm.sql.internal.SQLConf.MAX_SINGLE_PARTITION_BYTES()
+    assert not spark.sparkContext.getConf().contains(key)
+    assert to_bytes(spark.conf.get(key)) == to_bytes(entry.defaultValueString())
 
 
 def test_register_guard_classifier_family(spark, monkeypatch):

@@ -40,10 +40,11 @@ import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 BASE_SF = "/root/testdata/sf0.001"
-DEG_ROOT = "/root/repo/.degenerate"
+DEG_ROOT = os.path.join(ROOT, ".degenerate")
 TABLES = ("region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings")
 
@@ -159,7 +160,7 @@ def main() -> int:
     aborts = sorted(k for k, v in results.items() if v["status"] == "ABORT")
     out_path = os.environ.get(
         "SPARK_GRAFT_SWEEP_JSON",
-        f"/root/repo/DEGENERATE_SWEEP_{variant}.json")
+        os.path.join(ROOT, f"DEGENERATE_SWEEP_{variant}.json"))
     with open(out_path, "w") as f:
         json.dump({"variant": variant, "sf_base": BASE_SF,
                    "n": len(results), "n_abort": len(aborts),
