@@ -4491,8 +4491,6 @@ def test_power_iterate_matches_python_loop():
     import math
     import random
 
-    import pytest
-
     from amundsendatabuilder_spark.operators.similarity import (
         _power_iterate)
 
