@@ -7,15 +7,17 @@ Output schemas match the ES document models
 (models/table_elasticsearch_document.py:14-49,
 user_elasticsearch_document.py, dashboard_elasticsearch_document.py).
 
-Plan shape (holds at 100 TB): every 1:N relation is pre-aggregated to one
-row per entity key, then LEFT-joined to the entity spine — one shuffle per
-relation on the spine key, dimension-sized aggregates broadcast, no row
-explosion, no re-aggregation after the join.
+Plan shape (holds at 100 TB), no row explosion in either form: table
+documents are one keyed aggregation — the spine and every 1:N relation
+share one shuffle on the table key. User and dashboard documents, whose
+spines are not deduplicated, pre-aggregate each relation to one row per
+entity key and LEFT-join it to the spine, dimension-sized aggregates
+broadcast.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark import keys
@@ -27,7 +29,8 @@ def build_table_documents(tables: DataFrame,
                           schema_descriptions: DataFrame | None = None,
                           badges: DataFrame | None = None,
                           publish_tag: str | None = None) -> DataFrame:
-    """Table search documents (reference neo4j query :23-62).
+    """Table search documents (reference neo4j query :23-62) as one keyed
+    aggregation.
 
     ``tables``: models/table_metadata.py input (nested columns, tags).
     ``usage``: column_usage rows (table key parts, user_email, read_count).
@@ -36,113 +39,97 @@ def build_table_documents(tables: DataFrame,
     description. ``badges``: badge rows (table key parts, name).
     ``publish_tag`` filters tables to one publish generation — the
     reference's {publish_tag_filter} (:161-175) as a plain predicate.
+
+    The spine rows and the usage, last-updated and badge rows are unioned
+    on the table key and folded by one ``groupBy("key")``: one shuffle for
+    every 1:N relation. Keys without a spine row get no document (the
+    reference's LEFT joins hang off the Table node). Schema descriptions
+    are keyed by schema, so they broadcast-join after the fold.
     """
     t = tables
     if publish_tag is not None and "published_tag" in t.columns:
         t = t.where(F.col("published_tag") == publish_tag)
-    t = t.withColumn("key", keys.table_key(
-        F.col("database"), F.col("cluster"), F.col("schema"), F.col("name")))
+    src = F.col("description_source")
+    is_default = src.isNull() | (src == "") | (src == "description")
+    cols = F.coalesce(F.col("columns"), F.array().cast(
+        "array<struct<name:string,description:string,col_type:string,"
+        "sort_order:int,badges:array<string>>>"))
+    description = F.when(is_default, F.col("description"))
+    prog_desc = F.when(~is_default, F.col("description"))
 
-    # columns + their descriptions come free from the nested struct —
-    # the reference re-joins Column/Description nodes (:43-47); our input
-    # is already nested so it's a projection, not a join
-    spine = t.select(
-        "key", "database", "cluster", "schema", "name",
-        F.format_string("%s.%s", F.col("schema"), F.col("name")).alias("display_name"),
-        F.when(F.col("description_source").isNull()
-               | (F.col("description_source") == "")
-               | (F.col("description_source") == "description"),
-               F.col("description")).alias("description"),
-        F.when(F.col("description_source").isNotNull()
-               & (F.col("description_source") != "")
-               & (F.col("description_source") != "description"),
-               F.col("description")).alias("_prog_desc"),
-        F.coalesce(F.col("tags"), F.array().cast("array<string>")).alias("tags"),
-        F.transform(F.coalesce(F.col("columns"), F.array().cast(
-            "array<struct<name:string,description:string,col_type:string,"
-            "sort_order:int,badges:array<string>>>")),
-            lambda c: c["name"]).alias("column_names"),
-        F.filter(F.transform(F.coalesce(F.col("columns"), F.array().cast(
-            "array<struct<name:string,description:string,col_type:string,"
-            "sort_order:int,badges:array<string>>>")),
-            lambda c: c["description"]), lambda d: d.isNotNull()).alias("column_descriptions"),
-    )
-    # programmatic descriptions aggregate across duplicate table rows
-    # (reference :31-33 collects them)
-    prog = (spine.where(F.col("_prog_desc").isNotNull())
-            .groupBy("key")
-            .agg(F.array_sort(F.collect_list("_prog_desc"))
-                 .alias("programmatic_descriptions")))
+    def key(db="database", table="table_name"):
+        return keys.table_key(F.col(db), F.col("cluster"), F.col("schema"),
+                              F.col(table)).alias("key")
+
     # Deterministic spine winner per key: the reference always takes the
     # default Description node (neo4j_search_data_extractor.py:28-30) and
-    # collects programmatic descriptions separately (:31-33), so prefer the
-    # default-description row over programmatic rows, then rows with a
-    # non-null description, then lexicographic description as a stable
-    # tie-break. Window on the same key the downstream joins shuffle on.
-    w = Window.partitionBy("key").orderBy(
-        F.col("_prog_desc").isNotNull(),   # default-description rows first
-        F.col("description").isNull(),     # then rows that carry a description
-        F.col("description"))              # stable tie-break
-    spine = (spine.withColumn("_rn", F.row_number().over(w))
-             .where(F.col("_rn") == 1)
-             .drop("_rn", "_prog_desc"))
-
+    # collects programmatic descriptions separately (:31-33), so the
+    # struct's min prefers the default-description row over programmatic
+    # rows, then rows with a non-null description, then the lexicographic
+    # description; the payload breaks exact ties. Columns and their
+    # descriptions come free from the nested struct — the reference
+    # re-joins Column/Description nodes (:43-47).
+    rows = [t.select(
+        key(table="name"),
+        F.struct(
+            prog_desc.isNotNull().alias("_programmatic"),
+            description.isNull().alias("_no_description"),
+            description.alias("description"),
+            "database", "cluster", "schema", "name", "tags",
+            F.transform(cols, lambda c: c["name"]).alias("column_names"),
+            F.filter(F.transform(cols, lambda c: c["description"]),
+                     lambda d: d.isNotNull()).alias("column_descriptions"),
+        ).alias("_w"),
+        prog_desc.alias("_prog_desc"))]
     if usage is not None:
-        u = usage.withColumn("key", keys.table_key(
-            F.col("database"), F.col("cluster"), F.col("schema"),
-            F.col("table_name")))
-        usage_agg = (u.groupBy("key")
-                     .agg(F.sum("read_count").cast("long").alias("total_usage"),
-                          F.countDistinct("user_email").alias("unique_usage")))
-        spine = spine.join(usage_agg, "key", "left")
-    else:
-        spine = spine.withColumn("total_usage", F.lit(None).cast("long")) \
-                     .withColumn("unique_usage", F.lit(None).cast("long"))
-
+        rows.append(usage.select(key(), "read_count", "user_email"))
     if last_updated is not None:
-        lu = last_updated.select(
-            keys.table_key(F.col("db"), F.col("cluster"), F.col("schema"),
-                           F.col("table_name")).alias("key"),
-            F.col("last_updated_time_epoch").alias("last_updated_timestamp"))
-        spine = spine.join(F.broadcast(lu.groupBy("key").agg(
-            F.max("last_updated_timestamp").alias("last_updated_timestamp"))),
-            "key", "left")
-    else:
-        spine = spine.withColumn("last_updated_timestamp", F.lit(None).cast("long"))
+        rows.append(last_updated.select(
+            key(db="db"), F.col("last_updated_time_epoch").alias("_last_updated")))
+    if badges is not None:
+        rows.append(badges.select(key(), F.explode(F.transform(
+            F.split(F.col("name"), ","), lambda b: F.lower(F.trim(b))))
+            .alias("_badge")).where(F.col("_badge") != ""))
+    u = rows[0]
+    for r in rows[1:]:
+        u = u.unionByName(r, allowMissingColumns=True)
+    for c, dtype in (("read_count", "long"), ("user_email", "string"),
+                     ("_last_updated", "long"), ("_badge", "string")):
+        if c not in u.columns:
+            u = u.withColumn(c, F.lit(None).cast(dtype))
+    docs = (u.groupBy("key").agg(
+        F.min("_w").alias("_w"),
+        F.array_sort(F.collect_list("_prog_desc")).alias("programmatic_descriptions"),
+        F.sum("read_count").cast("long").alias("total_usage"),
+        F.size(F.collect_set("user_email")).cast("long").alias("unique_usage"),
+        F.max("_last_updated").alias("last_updated_timestamp"),
+        F.array_sort(F.collect_set("_badge")).alias("badges"))
+        .where(F.col("_w").isNotNull())
+        .select("*", "_w.*"))
 
     if schema_descriptions is not None:
         sd = schema_descriptions.select(
             F.col("schema_key"), F.col("description").alias("schema_description"))
-        spine = spine.withColumn("_schema_key", keys.schema_key(
+        docs = docs.withColumn("_schema_key", keys.schema_key(
             F.col("database"), F.col("cluster"), F.col("schema"))) \
             .join(F.broadcast(sd), F.col("_schema_key") == F.col("schema_key"),
                   "left").drop("schema_key", "_schema_key")
     else:
-        spine = spine.withColumn("schema_description", F.lit(None).cast("string"))
+        docs = docs.withColumn("schema_description", F.lit(None).cast("string"))
 
-    if badges is not None:
-        b = badges.withColumn("key", keys.table_key(
-            F.col("database"), F.col("cluster"), F.col("schema"),
-            F.col("table_name")))
-        b = (b.select("key", F.explode(F.split(F.col("name"), ",")).alias("badge"))
-             .select("key", F.lower(F.trim("badge")).alias("badge"))
-             .where(F.col("badge") != "")
-             .groupBy("key").agg(F.array_sort(F.collect_set("badge")).alias("badges")))
-        spine = spine.join(F.broadcast(b), "key", "left")
-    else:
-        spine = spine.withColumn("badges", F.array().cast("array<string>"))
-
-    spine = spine.join(prog, "key", "left")
-    return spine.select(
-        "database", "cluster", "schema", "name", "key", "display_name",
+    # the winner's fields come out of a min, so they are nullable: recompute
+    # display_name and coalesce the arrays to keep the document schema
+    empty = F.array().cast("array<string>")
+    return docs.select(
+        "database", "cluster", "schema", "name", "key",
+        F.format_string("%s.%s", F.col("schema"), F.col("name")).alias("display_name"),
         "description", "schema_description", "last_updated_timestamp",
-        "column_names", "column_descriptions",
+        F.coalesce("column_names", empty).alias("column_names"),
+        F.coalesce("column_descriptions", empty).alias("column_descriptions"),
         F.coalesce("total_usage", F.lit(0)).alias("total_usage"),
-        F.coalesce("unique_usage", F.lit(0)).alias("unique_usage"),
-        "tags",
-        F.coalesce("badges", F.array().cast("array<string>")).alias("badges"),
-        F.coalesce("programmatic_descriptions",
-                   F.array().cast("array<string>")).alias("programmatic_descriptions"),
+        "unique_usage",
+        *[F.coalesce(c, empty).alias(c)
+          for c in ("tags", "badges", "programmatic_descriptions")],
     ).orderBy("name")
 
 

@@ -52,6 +52,11 @@ def get_spark(app_name: str = "amundsendatabuilder_spark",
         # type for; read as long and convert in load_tables
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # UDFs pickle this package's functions by reference: put its parent
+        # directory on the Python workers' path, whatever the working
+        # directory (Spark merges it with any PYTHONPATH already set)
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(
+            os.path.dirname(os.path.abspath(__file__))))
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

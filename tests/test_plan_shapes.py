@@ -3,6 +3,9 @@ properties SURVEY.md promises (broadcast star joins, pushed-down scans)
 asserted on the executed plan string, so a refactor that silently
 degrades a plan fails CI rather than a 100 TB run."""
 
+import os
+import re
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -152,3 +155,27 @@ def test_capped_jaccard_keeps_prefix_shape(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Exchange SinglePartition" not in plan
+
+
+def test_table_documents_fold_in_one_keyed_exchange(spark, tables_df,
+                                                    fixtures_dir):
+    """Table search documents are one keyed aggregation: the spine
+    winner, usage, last-updated, badge and programmatic-description
+    aggregates share ONE hash exchange on the table key. A window on the
+    key or any per-relation groupBy + join adds a second."""
+    from amundsendatabuilder_spark.plans.search_documents import (
+        build_table_documents)
+    from amundsendatabuilder_spark.sources.csv_source import read_csv
+
+    def csv(name):
+        return read_csv(spark, os.path.join(fixtures_dir, name))
+    docs = build_table_documents(
+        tables_df, usage=csv("sample_column_usage.csv"),
+        last_updated=csv("sample_table_last_updated.csv"),
+        schema_descriptions=csv("sample_schema_description.csv"),
+        badges=csv("sample_badges.csv"))
+    docs.collect()
+    # after the action the string lists the final plan, then the initial one
+    plan = _plan(docs).split("== Initial Plan ==")[0]
+    assert "Window" not in plan
+    assert len(re.findall(r"Exchange hashpartitioning\(key#", plan)) <= 1, plan

@@ -124,13 +124,9 @@ def main() -> int:
             only.append(a)
     sf_dir = build_dir(variant)
 
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[8]")
-             .appName(f"degenerate-sweep-{variant}")
-             .config("spark.sql.shuffle.partitions", "8")
-             .config("spark.driver.memory", "8g")
-             .config("spark.ui.showConsoleProgress", "false")
-             .getOrCreate())
+    # the engine's own session settings (UTC, Arrow, broadcast threshold)
+    from amundsendatabuilder_spark.session import get_spark
+    spark = get_spark(f"degenerate-sweep-{variant}", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry
