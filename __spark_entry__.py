@@ -9,78 +9,50 @@ operator class of SURVEY §2 plus the training-data pipeline operators.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _ROOT)
 
 from amundsendatabuilder_spark.plans.oracle_suite import ORACLES, QUERIES  # noqa: E402
 
-# Dict iteration order = presentation order. Round-14 window (50
-# slots): the THIRD and FINAL re-cert-dominated window (r13 verdict
-# item #1 — "the r14 window is mechanical: all 42 oldest rows first,
-# then the round's changed-plan rows per the (b') rule"). Built FROM
-# ``python tools/cert_age.py``'s oldest-first paste-ready list (its r13
-# histogram: 42 rows at r7, 45 at r8, ... — after this window every
-# row's newest driver cert is >= r8, retiring the rotation debt):
-# (a) ALL 42 r7-era rows (the alphabetical tail the r13 window could
-# not fit — dedup_ngram_jaccard_capped .. watermark_min_max), then
-# (b') the rows whose plan changed this round: embedding_covariance's
-# ragged-dims assert now passes an EMPTY post-filter register through
-# (coalesce(cond, true), r13 ADVICE — the PCA trio inherits the plan),
-# and the four corpus-level-empty denominator guards (r13 verdict item
-# #2) the degenerate-corpus sweep found: quality_decile_table's
-# tok_n, padding_waste_report's slot_tokens, concat_window_packing's
-# n_windows, mixture_epochs' avail_tokens — outputs identical on
-# healthy data, plans changed, so all eight re-certify.
-# HONEST ARITHMETIC: THREE further rows changed this round —
-# cluster_label_nmi's bucket subscript went NULL-tolerant (F.get, the
-# emptyvecs sweep), and ks_drift_stat / ks_time_drift guard the
-# one-sided-sample division (the oneevent sweep) — making 42 + 11
-# candidates for 50 slots. The r14 Done bar is "every row's newest
-# cert >= r8", so the 42 r7 rows all stay; the three late-changed
-# rows (newest certs r9/r10+, outputs hash-identical on healthy data,
-# green on the r14 LOCAL gate at two scale factors and at sf0.1) are
-# FIRST IN LINE for the r15 window: ks_drift_stat (r9-era anyway),
-# ks_time_drift, cluster_label_nmi. Names not registered are skipped
-# by ``_ordered``.
-_PRIORITY = [
-    # (a) r7-era re-certs — the final rotation debt (42 rows, verbatim
-    # from tools/cert_age.py oldest-first)
-    "dedup_ngram_jaccard_capped", "dedup_simhash", "doc_fingerprint",
-    "embedding_label_centroids", "embedding_norms", "epoch_transform",
-    "graph_expand_tables", "graph_pagerank", "hash_sample_stratified",
-    "interval_overlap_join", "json_props_extract", "kmeans_centroids",
-    "lang_id", "last_updated_max", "lineage_asof_diff",
-    "literal_replace_transform", "markov_transitions_ppm",
-    "multimodal_resize", "numeric_corr_matrix", "pii_scrub",
-    "pivot_status_by_priority", "publish_diff", "quality_metrics",
-    "quality_quantile_filter", "repetition_metrics", "revenue_share",
-    "right_join_tables", "rollup_orders", "self_join_same_region",
-    "session_bounce_rate", "sessionize_batch", "shard_watermarks",
-    "skew_salted_collect", "skew_salted_join", "staleness_guard_ratio",
-    "tag_normalize_explode", "template_substitution",
-    "token_shard_packing", "top_customer_per_segment",
-    "usage_hash_count", "vocab_topk", "watermark_min_max",
-    # (b') plans changed in round 14 — re-certify per the r11 rule:
-    # the covariance family's empty-register escape, plus the four
-    # corpus-level-empty denominator guards the r14 degenerate-corpus
-    # sweep (tools/degenerate_sweep.py, DEGENERATE_SWEEP_allempty.json)
-    # found and fixed — outputs identical on healthy data
-    "embedding_covariance", "pca_power_iteration",
-    "pca_explained_variance", "pca_top_components",
-    "quality_decile_table", "mixture_epochs", "padding_waste_report",
-    "concat_window_packing",
-]
+
+def newest_green_certs(root: str = _ROOT) -> dict[str, int]:
+    """Each query's newest round in ``root``'s ``CORRECTNESS_r<N>.json``
+    files in which it passed (``err`` is None and ``rows_match``).
+    Unreadable files are skipped."""
+    newest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if not m:
+            continue
+        try:
+            with open(path, encoding="utf-8") as f:
+                rows = json.load(f)
+        except (OSError, ValueError):
+            continue
+        rnd = int(m.group(1))
+        for name, row in rows.items():
+            if (isinstance(row, dict) and row.get("err") is None
+                    and row.get("rows_match")):
+                newest[name] = max(newest.get(name, 0), rnd)
+    return newest
 
 
-def _ordered(mapping: dict) -> dict:
-    out = {k: mapping[k] for k in _PRIORITY if k in mapping}
-    out.update((k, v) for k, v in mapping.items() if k not in out)
-    return out
+def _ordered(mapping: dict, root: str = _ROOT) -> dict:
+    """``mapping`` ordered oldest newest-cert first (never certified =
+    round 0), registry order breaking ties. The driver certifies the
+    first 50, so every new CORRECTNESS file rotates the window."""
+    newest = newest_green_certs(root)
+    return {k: mapping[k]
+            for k in sorted(mapping, key=lambda k: newest.get(k, 0))}
 
 
 def entry(spark: SparkSession) -> DataFrame:

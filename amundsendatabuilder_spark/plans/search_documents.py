@@ -233,13 +233,15 @@ def build_dashboard_documents(dashboards: DataFrame,
     relation pre-aggregates to one sorted-distinct array per dashboard
     key before the broadcast LEFT join — no row explosion on the spine.
     """
-    d = dashboards.withColumn("key", keys.dashboard_key(
-        F.col("product"), F.col("cluster"), F.col("dashboard_group_id"),
-        F.col("dashboard_id")))
+    def keyed(df: DataFrame) -> DataFrame:
+        return df.withColumn("key", keys.dashboard_key(
+            F.col("product"), F.col("cluster"), F.col("dashboard_group_id"),
+            F.col("dashboard_id")))
+
     group_desc = (F.col("dashboard_group_description")
                   if "dashboard_group_description" in dashboards.columns
                   else F.lit(None).cast("string"))
-    spine = d.select(
+    spine = keyed(dashboards).select(
         "key", "product", "cluster",
         F.col("dashboard_group").alias("group_name"),
         F.col("dashboard_name").alias("name"),
@@ -249,76 +251,39 @@ def build_dashboard_documents(dashboards: DataFrame,
         F.col("dashboard_url").alias("url"),
         F.col("key").alias("uri"))
     if usage is not None:
-        u = usage.withColumn("key", keys.dashboard_key(
-            F.col("product"), F.col("cluster"), F.col("dashboard_group_id"),
-            F.col("dashboard_id")))
         spine = spine.join(
-            u.groupBy("key").agg(F.sum("view_count").cast("long")
-                                 .alias("total_usage")), "key", "left")
+            keyed(usage).groupBy("key").agg(
+                F.sum("view_count").cast("long").alias("total_usage")),
+            "key", "left")
     else:
         spine = spine.withColumn("total_usage", F.lit(None).cast("long"))
-    if queries is not None:
-        q = queries.withColumn("key", keys.dashboard_key(
-            F.col("product"), F.col("cluster"), F.col("dashboard_group_id"),
-            F.col("dashboard_id")))
-        spine = spine.join(
-            F.broadcast(q.groupBy("key").agg(
-                F.array_sort(F.collect_set("query_name")).alias("query_names"))),
-            "key", "left")
-    else:
-        spine = spine.withColumn("query_names", F.array().cast("array<string>"))
-    if charts is not None:
-        c = charts.withColumn("key", keys.dashboard_key(
-            F.col("product"), F.col("cluster"), F.col("dashboard_group_id"),
-            F.col("dashboard_id")))
-        spine = spine.join(
-            F.broadcast(c.where(F.col("chart_name").isNotNull())
-                        .groupBy("key").agg(
-                            F.array_sort(F.collect_set("chart_name"))
-                            .alias("chart_names"))),
-            "key", "left")
-    else:
-        spine = spine.withColumn("chart_names", F.array().cast("array<string>"))
-    if tags is not None:
-        tg = tags
-        if "tag_type" in tg.columns:  # reference: WHERE tags.tag_type='default'
-            tg = tg.where(F.col("tag_type") == "default")
-        tg = tg.withColumn("key", keys.dashboard_key(
-            F.col("product"), F.col("cluster"), F.col("dashboard_group_id"),
-            F.col("dashboard_id")))
-        spine = spine.join(
-            F.broadcast(tg.groupBy("key").agg(
-                F.array_sort(F.collect_set("tag")).alias("tags"))),
-            "key", "left")
-    else:
-        spine = spine.withColumn("tags", F.array().cast("array<string>"))
-    if badges is not None:
-        b = badges.withColumn("key", keys.dashboard_key(
-            F.col("product"), F.col("cluster"), F.col("dashboard_group_id"),
-            F.col("dashboard_id")))
-        spine = spine.join(
-            F.broadcast(b.groupBy("key").agg(
-                F.array_sort(F.collect_set("badge")).alias("badges"))),
-            "key", "left")
-    else:
-        spine = spine.withColumn("badges", F.array().cast("array<string>"))
+    if tags is not None and "tag_type" in tags.columns:
+        # reference: WHERE tags.tag_type='default'
+        tags = tags.where(F.col("tag_type") == "default")
+    arrays = {"query_names": (queries, "query_name"),
+              "chart_names": (charts, "chart_name"),
+              "tags": (tags, "tag"),
+              "badges": (badges, "badge")}
+    for name, (rel, value) in arrays.items():
+        if rel is None:
+            spine = spine.withColumn(name, F.lit(None).cast("array<string>"))
+        else:
+            spine = spine.join(
+                F.broadcast(keyed(rel).groupBy("key").agg(
+                    F.array_sort(F.collect_set(value)).alias(name))),
+                "key", "left")
     if last_exec is not None:
-        le = (last_exec
-              .where(F.col("execution_id") == "_last_successful_execution")
-              .withColumn("key", keys.dashboard_key(
-                  F.col("product"), F.col("cluster"),
-                  F.col("dashboard_group_id"), F.col("dashboard_id")))
-              .select("key", F.col("execution_timestamp")
-                      .alias("last_successful_run_timestamp")))
-        spine = spine.join(F.broadcast(le), "key", "left")
+        le = keyed(last_exec.where(
+            F.col("execution_id") == "_last_successful_execution"))
+        spine = spine.join(
+            F.broadcast(le.select("key", F.col("execution_timestamp")
+                                  .alias("last_successful_run_timestamp"))),
+            "key", "left")
     else:
         spine = spine.withColumn("last_successful_run_timestamp",
                                  F.lit(None).cast("long"))
     empty = F.array().cast("array<string>")
     return (spine
             .withColumn("total_usage", F.coalesce("total_usage", F.lit(0)))
-            .withColumn("query_names", F.coalesce("query_names", empty))
-            .withColumn("chart_names", F.coalesce("chart_names", empty))
-            .withColumn("tags", F.coalesce("tags", empty))
-            .withColumn("badges", F.coalesce("badges", empty))
+            .withColumns({name: F.coalesce(name, empty) for name in arrays})
             .orderBy("name"))

@@ -32,8 +32,8 @@ HEADLINE = [
     "quality_metrics",
     "doc_fingerprint",
     "ann_brute_force_topk",
-    # round-1 additions: temporal join, sessions, clustering, scrub/profile,
-    # skew-salted plans, search docs
+    # temporal join, sessions, clustering, scrub/profile, skew-salted
+    # plans, search docs
     "asof_view_before_purchase",
     "sessionize_batch",
     "dedup_clusters",
@@ -46,9 +46,9 @@ HEADLINE = [
     "search_doc_dashboard",
 ]
 
-# Round-3+ operators benched SEPARATELY so the 25-query HEADLINE total
-# stays comparable round-over-round; their medians land in the same
-# "queries" map plus an "extended_total".
+# Benched SEPARATELY so the 25-query HEADLINE total stays comparable
+# across runs; their medians land in the same "queries" map plus an
+# "extended_total". Timed only with SPARK_GRAFT_BENCH_EXTENDED=all.
 EXTENDED = [
     "bm25_topk",
     "langid_nb",
@@ -61,12 +61,12 @@ EXTENDED = [
     "ann_recall_report",
     "ivf_recall_report",
     "ann_ivf_topk",
-    # round-6: HLL sketch (the COUNT-DISTINCT scale path) and the
-    # shortest-path graph surface
+    # HLL sketch (the COUNT-DISTINCT scale path) and the shortest-path
+    # graph surface
     "hll_distinct_sketch",
     "graph_shortest_path",
-    # round-6 second wave: frequency/membership sketches, substring-dedup
-    # spans, and the graph-analytics pair
+    # frequency/membership sketches, substring-dedup spans, and the
+    # graph-analytics pair
     "cms_heavy_hitters",
     "bloom_decontam_membership",
     "duplicate_substring_spans",
@@ -75,7 +75,7 @@ EXTENDED = [
     "funnel_stages",
     "jaccard_prefix_join",
     "inverted_index_postings",
-    # round-6 third/fourth wave (all sub-second to ~3s at sf0.1)
+    # all sub-second to ~3s at sf0.1
     "zorder_layout_stats",
     "scd2_intervals",
     "linear_touch_credit",
@@ -99,7 +99,7 @@ EXTENDED = [
     "class_keywords",
     "markov_transitions_ppm",
     "session_bounce_rate",
-    # round-7: the capped production forms of the exact similarity joins
+    # the capped production forms of the exact similarity joins
     # (collapse + token-DF cap + top-25 partners), their no-silent-caps
     # audit, and the mixed-direction graph pattern
     "jaccard_prefix_join_capped",
@@ -121,11 +121,10 @@ EXTENDED = [
     "skew_report",
     "split_exact_counts",
     "equi_depth_histogram",
-    # round-7 continuation: tokenizer training, hybrid retrieval, robust
-    # profiling, communities, CDC compaction, data contracts, trends,
-    # corpus digests (stream_static_enrich is gate-only like the other
-    # stream_* entries — streaming drains measure trigger latency, not
-    # plan cost)
+    # tokenizer training, hybrid retrieval, robust profiling,
+    # communities, CDC compaction, data contracts, trends, corpus digests
+    # (stream_static_enrich is gate-only like the other stream_* entries
+    # — streaming drains measure trigger latency, not plan cost)
     "bpe_merge_training",
     "hybrid_rrf_fusion",
     "mad_outliers",
@@ -159,13 +158,13 @@ EXTENDED = [
     "equi_depth_boundaries",
     "equi_depth_boundaries_grouped",
     "dedup_incremental_lsh",
-    # round-9: corpus curation (operators/curation.py)
+    # corpus curation (operators/curation.py)
     "leakage_safe_split",
     "epoch_shuffle_shards",
     "ngram_novelty",
     "filter_funnel_report",
     "hll_source_overlap",
-    # round-9: TPC-H shape completion (all 22 classic shapes now covered)
+    # TPC-H shape completion (all 22 classic shapes covered)
     "q2_min_acctbal_supplier", "q8_market_share", "q9_profit_by_nation_year",
     "q11_part_value_share", "q13_custdist", "q14_promo_revenue",
     "q15_top_supplier", "q16_supplier_count_by_part",
@@ -226,7 +225,7 @@ EXTENDED = [
     "stream_minhash_registers",
     "pca_top_components",
     "graph_effective_diameter",
-    # round-10: IR eval triple, signature-space verify tier, curriculum
+    # IR eval triple, signature-space verify tier, curriculum
     # ordering, streaming as-of join
     "search_pr_at_k",
     "dedup_minhash_estimate",
@@ -239,9 +238,8 @@ EXTENDED = [
     "score_calibration",
     "logreg_weight_explain",
     "mixture_reweight_quality",
-    # round-11: the capped/collapsed production twins of the embedding
-    # pairwise family (r10 verdict items #1-2), the cap audit, and the
-    # end-to-end classifier holdout loop
+    # the capped/collapsed production twins of the embedding pairwise
+    # family, the cap audit, and the end-to-end classifier holdout loop
     "mutual_nn_dedup_capped",
     "rhp_cap_audit",
     "hard_negative_banded",
@@ -251,107 +249,35 @@ EXTENDED = [
     "dedup_simhash64_capped",
     "dedup_embedding_bucketed_capped",
     "simhash_cap_audit",
-    # round-11 late wave: community quality, label-noise screen,
-    # active-learning margin sampling
+    # community quality, label-noise screen, active-learning sampling
     "graph_modularity",
     "knn_label_disagreement",
     "uncertainty_sampling",
     "bpe_fertility_report",
     "stream_bottomk_sample",
     "skew_salting_plan",
-    # round-12: recall audit of the production mutual-NN configuration
-    # vs the uncapped pin (r11 verdict item #4)
+    # recall audit of the production mutual-NN configuration vs the
+    # uncapped pin
     "mutual_nn_recall_report",
 ]
 
 
-# Quiet-box reference for the calibration probe (r12 verdict item #4):
-# the r12 authoritative local record measured the pinned 60M-row probe at
-# 0.509s on an idle box (BENCH_LOCAL_r12.json). Every headline line now
-# carries value * (CALIB_REF / calib_seconds) so drift correction is
-# mechanical, not prose — re-base ONLY alongside a probe-workload change
-# (test_calibration_workload_pinned pins the workload itself) or a
-# driver-box generation change, and then ONLY per the re-base protocol
-# documented in BENCH_INDEX.md ("CALIB_REF re-base protocol"): quiet-box
-# n>=5 probe medians committed alongside the new constant, never
-# mid-round.
+# Quiet-box reading of the pinned calibration probe (BENCH_LOCAL_r12.json).
+# Every headline line carries value * (CALIB_REF / calib_mean), so drift
+# correction is mechanical. Re-base only with a probe-workload or
+# driver-box change, per BENCH_INDEX.md's "CALIB_REF re-base protocol".
 CALIB_REF = 0.509
 
-# Extended entries whose plan or semantics changed THIS round (r12
-# verdict item #6: the full 197-entry extended sweep costs ~350s/run and
-# re-measures mostly-unchanged plans; the headline-25 plus the round's
-# changed entries is the signal). Default bench mode re-times HEADLINE +
-# these; SPARK_GRAFT_BENCH_EXTENDED=all runs the full extended set (the
-# every-few-rounds full record and on-demand audits), =none headline only.
-#
-# FRESHNESS CONTRACT (r13 verdict item #3): CHANGED_ROUND must equal the
-# round this list was rebuilt for. tests/test_bench_format.py derives the
-# current round from VERDICT.md's header (round N's verdict exists while
-# round N+1 builds) and fails if the marker is stale — a forgotten
-# rebuild now breaks the suite instead of silently re-timing last
-# round's entries. The marker is also emitted in the headline JSON as
-# ``changed_round`` so the recorded artifact carries the provenance.
-CHANGED_ROUND = 16
-CHANGED_THIS_ROUND: "list[str]" = [
-    # r16 is the second OPTIMIZATION round: entries are added here as
-    # their plans change (outputs stay hash-identical — every optimized
-    # query re-verifies against the DuckDB oracle before it lands).
-    # Wave 1 (inherited commit a19bf0c, verified by this session) —
-    # mutual_nn_pairs mutuality as a canonical-pair count (top1
-    # self-join removed: the whole candidate+scoring+argmax pipeline
-    # previously planned twice); PCA register rounds without per-round
-    # jobs; covariance pair generator parallelized
-    "embedding_covariance",
-    "pca_power_iteration",
-    "pca_explained_variance",
-    "pca_top_components",
-    "mutual_nn_dedup",
-    "mutual_nn_dedup_capped",
-    "mutual_nn_recall_report",
-    # Wave 2 — mutual_nn candidate exchange pinned wide + keyed by src
-    # (AQE byte-coalescing serialized the cosine scoring chain onto one
-    # core; the src key makes the distinct AND the top-1 agg reuse the
-    # one exchange) — covered by the mutual_nn entries above.
-    # logreg_holdout_auc derives its split sides as corpus filters via
-    # leakage_safe_split(keep=...) instead of two corpus-x-corpus
-    # joins. Two logreg_train loop restructurings (label fuse;
-    # persist co-partitioning) were built, measured WORSE in 6
-    # interleaved fresh-JVM A/B rounds, and reverted — the r15 loop
-    # body stands byte-identical, so the other logreg entries' plans
-    # end the round unchanged and are not listed.
-    "logreg_holdout_auc",
-    # Wave 4 — jaccard_prefix_join verify exchange pinned wide + keyed
-    # by doc_a (same AQE byte-coalescing disease as mutual_nn: 965k
-    # array_intersect verifications serialized onto 1-2 tasks; ~10%
-    # quiet win and removes a 7x contention cliff)
-    "jaccard_prefix_join",
-    "jaccard_prefix_join_capped",
-    "jaccard_prefix_join_frac_capped",
-    # Wave 5 — same disease, same fix: embedding_near_duplicates
-    # candidate exchange pinned wide + keyed by id_a (6.2 -> 2.0 s);
-    # triangle_counts' oriented-edge checkpoint pinned wide keyed by
-    # (a, b) — the b-only first cut left the wedge stage skewed
-    # (12.5 -> 7.3 s). dedup_embedding_cosine / _exhaustive_recall /
-    # _clusters also changed but are not bench entries.
-    "triangle_cooccurrence",
-    "dedup_embedding_cosine_bucketed",
-    "dedup_embedding_bucketed_capped",
-]
 
-
-def _extended_to_run() -> "list[str]":
-    mode = os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "changed")
+def _extended_to_run(mode: str) -> "list[str]":
+    """The EXTENDED entries a run times: ``all`` or ``none``. A typo
+    raises rather than being recorded as a deliberate mode."""
     if mode == "all":
         return EXTENDED
     if mode == "none":
         return []
-    if mode != "changed":
-        # fail loudly: a typo ("al", "ALL") silently falling back to the
-        # pruned mode would get recorded as if deliberate (r13 ADVICE)
-        raise ValueError(
-            f"SPARK_GRAFT_BENCH_EXTENDED={mode!r} — expected one of "
-            "'all', 'none', 'changed'")
-    return [q for q in EXTENDED if q in CHANGED_THIS_ROUND]
+    raise ValueError(f"SPARK_GRAFT_BENCH_EXTENDED={mode!r} — expected "
+                     "'all' or 'none'")
 
 
 def _calib_df(spark):
@@ -371,11 +297,10 @@ def _calib_df(spark):
 
 
 def calibration_probe(spark) -> float:
-    """Fixed machine-factor probe (r11 verdict item #2): a deterministic
-    32-way shuffle + hash-aggregate microbenchmark on generated data,
-    identical every run, so cross-boot/VM-drift comparisons divide out the
-    environment mechanically instead of via git-stash A/B archaeology.
-    ~0.5-1s on the reference box. Median of 3 runs."""
+    """Fixed machine-factor probe: a deterministic 32-way shuffle +
+    hash-aggregate microbenchmark on generated data, identical every run,
+    so cross-boot drift divides out mechanically. ~0.5-1s on the
+    reference box. Median of 3 runs."""
     import statistics
     runs = []
     for _ in range(3):
@@ -387,6 +312,8 @@ def calibration_probe(spark) -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    mode = os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "none")
+    extended = _extended_to_run(mode)
     from amundsendatabuilder_spark.plans.oracle_suite import QUERIES
     from amundsendatabuilder_spark.session import get_spark
 
@@ -436,7 +363,6 @@ def main() -> None:
     print(f"# calibration_probe: {calib}s", file=sys.stderr)
 
     calib_mid = 0.0
-    extended = _extended_to_run()
     for i, name in enumerate(HEADLINE + extended):
         timings[name] = bench(name)
         if i == len(HEADLINE) // 2:
@@ -446,7 +372,6 @@ def main() -> None:
     calib_end = calibration_probe(spark)
     print(f"# calibration_probe_end: {calib_end}s", file=sys.stderr)
 
-    mode = os.environ.get("SPARK_GRAFT_BENCH_EXTENDED", "changed")
     for line in summary_lines(timings, sf_dir, n_runs, calib, calib_end,
                               extended_mode=mode, calib_mid=calib_mid):
         print(line)
@@ -459,23 +384,16 @@ def summary_lines(timings: "dict[str, float]", sf_dir: str,
                   calib_mid: float = 0.0) -> "list[str]":
     """The machine-readable stdout contract, pinned by
     tests/test_bench_format.py: per-query detail first, then one
-    ``headline_query_seconds`` line PER headline query (r16, VERDICT r15
-    item #1: PERF_r15 ended with an empty per_query map because the
-    comparator could not extract rows from the detail dict — a one-line
-    record per query is extractable by any tail parser), compact
-    headline LAST. The driver reads the tail of stdout, and round 6
-    proved the detail dict (68+ entries) can outgrow that window and
-    truncate the headline mid-line — so the final line must be the short
-    summary with metric/value/unit/sf, parseable on its own.
+    ``headline_query_seconds`` line per headline query (extractable by
+    any tail parser), compact headline LAST. The driver reads only the
+    tail of stdout, which the detail dict can outgrow, so the final line
+    is the short summary, parseable on its own.
 
-    ``value_calib_adjusted`` (r12 verdict item #4) = value *
-    (CALIB_REF / calib_mean) where calib_mean averages the START and END
-    probe readings when both ran (r13 ADVICE: the r13 record showed 44%
-    within-run probe drift, so a single start reading can carry a
-    transient into the "mechanical" cross-round number; the bracket mean
-    is the robust estimator the run already pays for). Compare ADJUSTED
-    across rounds, RAW within one. ``calib_seconds_mid`` (r16) is the
-    mid-headline probe — detectability only, never in the mean."""
+    ``value_calib_adjusted`` = value * (CALIB_REF / calib_mean), where
+    calib_mean averages the start and end probe readings when both ran:
+    the bracket mean keeps one transient reading out of the cross-run
+    number. Compare adjusted across runs, raw within one.
+    ``calib_seconds_mid`` is reported only, never in the mean."""
     total = round(sum(timings[q] for q in HEADLINE), 3)
     calib_readings = [c for c in (calib, calib_end) if c > 0]
     calib_mean = (sum(calib_readings) / len(calib_readings)
@@ -505,7 +423,6 @@ def summary_lines(timings: "dict[str, float]", sf_dir: str,
                 round(total * CALIB_REF / calib_mean, 3)
                 if calib_mean > 0 else None),
             "calib_ref": CALIB_REF,
-            "changed_round": CHANGED_ROUND,
             "unit": "sec",
             "n": n_runs,
             "n_queries": len(HEADLINE),

@@ -67,9 +67,13 @@ def main(out_dir: str, fixtures_dir: str = FIXTURES) -> dict:
     user_docs = build_user_documents(users, table_usage=usage)
     write_documents(user_docs, os.path.join(out_dir, "es", "user_docs"))
 
+    def written(name: str) -> int:
+        # count the staged lines: counting the DataFrame re-runs its plan
+        return spark.read.text(os.path.join(out_dir, "es", name)).count()
+
     result = {"nodes": summary["nodes"], "rels": summary["rels"],
-              "table_docs": table_docs.count(),
-              "user_docs": user_docs.count(),
+              "table_docs": written("table_docs"),
+              "user_docs": written("user_docs"),
               "status": summary["status"]}
     print(result)
     return result

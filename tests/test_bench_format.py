@@ -1,13 +1,18 @@
 """Pins bench.py's machine-readable stdout contract (the driver parses
-the LAST stdout line as the headline JSON record — r7/r8 verdict item:
-a silent format drift would null the driver's `parsed` field and drop
-the round's benchmark evidence without any visible failure)."""
+the LAST stdout line as the headline JSON record; a silent format drift
+would drop the run's benchmark evidence without any visible failure)
+and the driver's computed certification window."""
 
+import glob
 import json
 import os
+import shutil
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import pytest
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402
 
@@ -18,8 +23,8 @@ def _fake_timings():
 
 def test_headline_is_last_line_and_parses_standalone():
     lines = bench.summary_lines(_fake_timings(), "/root/testdata/sf0.1", 3)
-    # r16: detail line + one headline_query_seconds line per headline
-    # query + the compact headline summary LAST
+    # detail line + one headline_query_seconds line per headline query +
+    # the compact headline summary LAST
     assert len(lines) == 2 + len(bench.HEADLINE)
     head = json.loads(lines[-1])  # the driver's tail-of-stdout read
     assert head["metric"] == "headline_suite_seconds"
@@ -27,31 +32,25 @@ def test_headline_is_last_line_and_parses_standalone():
     assert head["unit"] == "sec"
     assert head["sf"] == 0.1
     assert head["n_queries"] == len(bench.HEADLINE)
-    # r11 verdict item #2: the machine-factor probe rides in the same
-    # JSON line as every bench run so drift-corrected ratios are
-    # computable without same-box A/B archaeology
+    # the machine-factor probe and the drift-corrected value ride in the
+    # same line, so adjusted ratios need no same-box A/B runs
     assert "calib_seconds" in head
-    # r12 verdict item #4: the drift correction is emitted mechanically
-    # — value * (calib_ref / calib_seconds) — not computed in prose
     assert head["calib_ref"] == bench.CALIB_REF
     assert "value_calib_adjusted" in head
     # the headline must never outgrow a tail-read window: it carries no
     # per-query dict (that is the first line's job)
     assert "queries" not in head
     assert len(lines[-1]) < 600
-    # r16 (VERDICT r15 item #1): every headline query gets a standalone
-    # one-line record a tail parser can extract without parsing the
-    # detail dict; each is short, self-describing, and precedes the
-    # headline summary
+    # every headline query gets a standalone one-line record a tail
+    # parser can extract without parsing the detail dict
     per_query = [json.loads(ln) for ln in lines[1:-1]]
     assert [p["query"] for p in per_query] == bench.HEADLINE
     for p in per_query:
         assert p["metric"] == "headline_query_seconds"
         assert isinstance(p["sec"], (int, float))
         assert p["sf"] == 0.1
-    # r16 (VERDICT r15 item #7): the mid-headline calibration probe is
-    # carried in the record (detectability of mid-run storms), and it
-    # must NOT change the pinned bracket-mean adjustment
+    # the mid-headline probe is carried in the record and must NOT change
+    # the pinned bracket-mean adjustment
     assert "calib_seconds_mid" in head
     adj_with_mid = json.loads(bench.summary_lines(
         _fake_timings(), "/root/testdata/sf0.1", 3, calib=1.018,
@@ -64,9 +63,8 @@ def test_calib_adjusted_value_formula():
     lines = bench.summary_lines(_fake_timings(), "/root/testdata/sf0.1",
                                 3, calib=1.018, calib_end=0.509)
     head = json.loads(lines[-1])
-    # r13 ADVICE: the adjustment divides by the MEAN of the start/end
-    # bracket readings, so one transient probe reading cannot skew the
-    # cross-round number (r13's record showed 44% within-run drift)
+    # the adjustment divides by the MEAN of the start/end bracket
+    # readings, so one transient probe reading cannot skew it
     assert abs(head["value_calib_adjusted"]
                - head["value"] * bench.CALIB_REF / 0.7635) < 5e-4
     # end probe missing (crash-truncated run) -> fall back to start alone
@@ -80,73 +78,21 @@ def test_calib_adjusted_value_formula():
     assert no_probe["value_calib_adjusted"] is None
 
 
-def test_changed_this_round_names_are_registered():
-    """A typo in CHANGED_THIS_ROUND would silently drop the entry from
-    the default (pruned) bench run — every name must be a real bench
-    entry AND a registered query."""
-    from amundsendatabuilder_spark.plans.oracle_suite import QUERIES
-    benched = set(bench.HEADLINE) | set(bench.EXTENDED)
-    for name in bench.CHANGED_THIS_ROUND:
-        assert name in benched, name
-        assert name in QUERIES, name
-
-
-def test_changed_this_round_is_fresh():
-    """r13 verdict item #3: nothing failed if a round forgot to rebuild
-    CHANGED_THIS_ROUND — the default bench would silently re-time LAST
-    round's entries and record them as deliberate. The current round is
-    derived from VERDICT.md's header (`# VERDICT — round N` is written
-    AFTER round N, so round N+1 builds while it reads N); a stale
-    CHANGED_ROUND marker now fails the suite."""
-    import re
-    # resolve relative to the repo this test file lives in (not a
-    # hard-coded /root/repo) and anchor to the known header shape so a
-    # reworded first line fails loudly instead of matching a stray
-    # "round N" elsewhere in the sentence (r14 ADVICE). The round
-    # number may carry a trailing parenthetical (the r15 header reads
-    # "round 15 (optimization round 1 of 2)"), so anchor the NUMBER and
-    # allow an optional annotation after it.
-    verdict = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "VERDICT.md")
-    with open(verdict, encoding="utf-8") as f:
-        m = re.match(r"# VERDICT — round (\d+)\s*(\(.*\))?\s*$",
-                     f.readline())
-    assert m, "VERDICT.md header did not match '# VERDICT — round N'"
-    current_round = int(m.group(1)) + 1
-    assert bench.CHANGED_ROUND == current_round, (
-        f"bench.CHANGED_ROUND is {bench.CHANGED_ROUND} but the current "
-        f"round is {current_round} — rebuild CHANGED_THIS_ROUND for "
-        "this round's plan changes (and bump the marker)")
-
-
-def test_extended_pruning_modes(monkeypatch):
-    """r12 verdict item #6: default bench re-times HEADLINE + the
-    round's CHANGED extended entries only; =all keeps the full-record
-    path; summary_lines sums whatever subset actually ran."""
-    monkeypatch.delenv("SPARK_GRAFT_BENCH_EXTENDED", raising=False)
-    changed = bench._extended_to_run()
-    assert set(changed) == set(
-        q for q in bench.EXTENDED if q in bench.CHANGED_THIS_ROUND)
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_EXTENDED", "all")
-    assert bench._extended_to_run() == bench.EXTENDED
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_EXTENDED", "none")
-    assert bench._extended_to_run() == []
-    # r13 ADVICE: a typo must fail loudly, not silently prune
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_EXTENDED", "al")
-    try:
-        bench._extended_to_run()
-    except ValueError as exc:
-        assert "al" in str(exc)
-    else:
-        raise AssertionError("typo'd extended mode did not raise")
-    # a pruned run's summary sums only the entries that ran
-    timings = {q: 0.1 for q in bench.HEADLINE + changed}
+def test_extended_pruning_modes():
+    """=all times every EXTENDED entry, =none the headline only; a typo
+    fails loudly; summary_lines sums whatever subset actually ran."""
+    assert bench._extended_to_run("all") == bench.EXTENDED
+    assert bench._extended_to_run("none") == []
+    with pytest.raises(ValueError, match="'al'"):
+        bench._extended_to_run("al")
+    timings = {q: 0.1 for q in bench.HEADLINE}
     head = json.loads(bench.summary_lines(
         timings, "/root/testdata/sf0.1", 3, calib=0.5,
-        extended_mode="changed")[-1])
-    assert head["n_extended"] == len(changed)
-    assert head["extended_mode"] == "changed"
-    assert abs(head["extended_total"] - 0.1 * len(changed)) < 1e-9
+        extended_mode="none")[-1])
+    assert head["n_extended"] == 0
+    assert head["extended_mode"] == "none"
+    assert head["extended_total"] == 0
+    assert head["value"] == round(0.1 * len(bench.HEADLINE), 3)
 
 
 def test_detail_line_carries_every_query():
@@ -164,21 +110,54 @@ def test_each_line_is_single_line_json():
 
 
 def test_calibration_workload_pinned(spark):
-    """The calib probe's workload is the unit cross-round comparisons
+    """The calib probe's workload is the unit cross-run comparisons
     divide by — pin its result set (exactly 1024 register rows over a
     32-way source) so a silent plan edit cannot re-base the metric."""
     assert bench._calib_df(spark).count() == 1024
 
 
-def test_priority_window_hygiene():
-    """The driver certifies exactly the first 50 of queries() — a typo'd
-    or duplicated _PRIORITY name silently shrinks the round's
-    re-certification window."""
+def _certs(root, rnd, rows):
+    with open(os.path.join(root, f"CORRECTNESS_r{rnd:02d}.json"), "w") as f:
+        json.dump(rows, f)
+
+
+def test_window_orders_oldest_certs_first(tmp_path):
+    """The driver certifies the first 50 of queries(): rows go oldest
+    newest-green-cert first, never-certified first of all, registry
+    order breaking ties."""
     import __spark_entry__ as entry
-    from amundsendatabuilder_spark.plans.oracle_suite import QUERIES
-    pri = entry._PRIORITY
-    assert len(pri) == 50, f"window is {len(pri)} slots, expected 50"
-    assert len(set(pri)) == len(pri), "duplicate window entries"
-    unknown = [q for q in pri if q not in QUERIES]
-    assert not unknown, f"unregistered window entries: {unknown}"
-    assert list(entry.queries())[:50] == pri
+    green = {"err": None, "rows_match": True}
+    registry = dict.fromkeys(["a", "b", "c", "d", "e"], None)
+    _certs(tmp_path, 1, {q: green for q in "abcd"})
+    _certs(tmp_path, 2, {"b": green, "zz": green,
+                         "c": {"err": "boom", "rows_match": True},
+                         "d": {"err": None, "rows_match": False}})
+    (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")
+    assert entry.newest_green_certs(str(tmp_path)) == {
+        "a": 1, "b": 2, "c": 1, "d": 1, "zz": 2}
+    assert list(entry._ordered(registry, str(tmp_path))) == [
+        "e", "a", "c", "d", "b"]
+
+
+def test_window_on_the_real_tree(tmp_path):
+    """queries() and oracle_sql() list every registered name once, in
+    the computed order; a new CORRECTNESS file that certifies the
+    current window moves those rows behind every other row."""
+    import __spark_entry__ as entry
+    from amundsendatabuilder_spark.plans.oracle_suite import ORACLES, QUERIES
+    newest = entry.newest_green_certs()
+    for got, registry in ((entry.queries(), QUERIES),
+                          (entry.oracle_sql(), ORACLES)):
+        assert sorted(got) == sorted(registry)
+        index = {k: i for i, k in enumerate(registry)}
+        keys = [(newest.get(k, 0), index[k]) for k in got]
+        assert keys == sorted(keys)
+
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path)
+    window = list(entry._ordered(QUERIES, str(tmp_path)))[:50]
+    latest = max(entry.newest_green_certs(str(tmp_path)).values())
+    _certs(tmp_path, latest + 1,
+           {q: {"err": None, "rows_match": True} for q in window})
+    after = list(entry._ordered(QUERIES, str(tmp_path)))
+    assert set(after[-50:]) == set(window)

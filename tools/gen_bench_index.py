@@ -154,14 +154,17 @@ def main() -> None:
         "calib_seconds), the cross-round comparable (raw compares within",
         "a run, adjusted across boxes). Also from round 13, the default",
         "bench mode re-times HEADLINE + the round's CHANGED extended",
-        "entries only (`bench.CHANGED_THIS_ROUND`); the full extended",
+        "entries only (a hand-kept list in bench.py); the full extended",
         "record runs with SPARK_GRAFT_BENCH_EXTENDED=all (the builder's",
         "local records and every-few-rounds full sweeps), so an",
         "`extended_total` is only round-comparable at equal",
         "`extended_mode`. From round 14 the adjustment divides by the",
         "MEAN of the start/end probe bracket when both ran (one",
         "transient reading cannot skew it), and the headline carries",
-        "`changed_round`, the round `CHANGED_THIS_ROUND` was built for.",
+        "`changed_round`, the round that list was built for.",
+        "After round 16 the `changed` mode and `changed_round` are gone:",
+        "the default mode (`none`) re-times HEADLINE only, so",
+        "`extended_total` compares only at equal `extended_mode`.",
         "",
         "## CALIB_REF re-base protocol (r13 verdict item #6)",
         "",
