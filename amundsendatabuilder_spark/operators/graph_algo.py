@@ -35,6 +35,24 @@ def _register_parts(spark: SparkSession, n_rows: int,
                       int(n_rows) // rows_per_part + 1))
 
 
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """The undirected simple graph under ``edges``: distinct (u, v) pairs
+    with u < v — self-loops dropped, orientation and parallel edges
+    folded."""
+    return (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+            .where(F.col("u") != F.col("v"))
+            .select(F.least("u", "v").alias("u"),
+                    F.greatest("u", "v").alias("v"))
+            .distinct())
+
+
+def _symmetric(und: DataFrame) -> DataFrame:
+    """Both orientations of ``_undirected`` pairs. The two halves are
+    disjoint (u < v against u > v), so the union needs no distinct."""
+    return und.unionByName(und.select(F.col("v").alias("u"),
+                                      F.col("u").alias("v")))
+
+
 def reachability(edges: DataFrame, sources: DataFrame,
                  max_depth: int = 4,
                  src_col: str = "src", dst_col: str = "dst") -> DataFrame:
@@ -158,14 +176,12 @@ def connected_components_small(edges: DataFrame,
     sym = (edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
            .unionByName(edges.select(F.col(dst_col).alias("a"),
                                      F.col(src_col).alias("b")))).cache()
-    # size the per-iteration partitioning to the graph: the edge count is
-    # known (one count on the cached sym), and a 500-row label table
-    # checkpointed as 32 partitions costs a full task wave per iteration
-    # for nothing. ~200k edges per partition; grows with the graph.
+    # size the per-iteration partitioning to the graph: ~200k edges per
+    # partition (one count on the cached sym)
     n_edges = sym.count()
     edges.unpersist()  # sym is materialized now; the input cache is done
-    n_parts = max(1, min(shuffle_width(sym.sparkSession),
-                         n_edges // 200_000 + 1))
+    n_parts = _register_parts(sym.sparkSession, n_edges,
+                              rows_per_part=200_000)
     labels = (sym.select("a").distinct()
               .select(F.col("a").alias("node"), F.col("a").alias("component")))
     for _ in range(max_iters):
@@ -224,9 +240,6 @@ def pagerank(edges: DataFrame, iters: int = 3,
              .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct().localCheckpoint())
     n = nodes.count()
-    # r15: rank/degree state is (node, long) rows — checkpoint at a
-    # node-count-derived width instead of a full shuffle-width task wave
-    # per iteration (see _register_parts)
     n_parts = _register_parts(edges.sparkSession, n)
     outdeg = (edges.groupBy(F.col("src").alias("node"))
               .agg(F.count(F.lit(1)).alias("outdeg"))
@@ -274,11 +287,7 @@ def triangle_counts(edges: DataFrame,
     # and a cache leaves the full self-join lineage in every branch of the
     # first-run plan (audited at 79 exchanges); checkpointing materializes
     # once and every consumer reads the RDD — the kmeans/pagerank pattern
-    und = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-           .where(F.col("u") != F.col("v"))
-           .select(F.least("u", "v").alias("u"),
-                   F.greatest("u", "v").alias("v"))
-           .distinct().localCheckpoint())
+    und = _undirected(edges, src_col, dst_col).localCheckpoint()
     deg = (und.select(F.col("u").alias("n"))
            .unionByName(und.select(F.col("v").alias("n")))
            .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
@@ -290,20 +299,10 @@ def triangle_counts(edges: DataFrame,
     o = lab.select(
         F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("a"),
         F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"))
-    # r16 (guide §2.5, the mutual_nn_pairs lesson): the oriented edges
-    # are 16 bytes/row, so AQE byte-coalescing materialized this
-    # checkpoint as 1-4 partitions — and the wedge join + closing
-    # semi-join that stream over it (broadcast at small scale) ran the
-    # whole candidate-wedge probe on one core (measured: 8.4 s of
-    # triangle_cooccurrence's 13.9 s in ONE single-task job). Pin the
-    # checkpoint wide. Keyed by BOTH endpoints, not the wedge key b
-    # alone: forward-orientation still leaves hot b nodes (in-degree is
-    # not bounded by the min-deg trick), and a b-keyed first cut
-    # measured the widened wedge stage skewed onto a few tasks
-    # (3.6 s/32 tasks vs 1.3 s spread). The (a, b) key spreads wedge
-    # work evenly; at cluster scale the wedge join re-exchanges these
-    # 16-byte rows by its own keys regardless, so the even spread costs
-    # nothing extra. Width = the live session's shuffle width.
+    # the 16-byte oriented rows would byte-coalesce to a few partitions
+    # and run the wedge join on one core, so the checkpoint is pinned at
+    # the shuffle width — keyed by both endpoints, since hot wedge
+    # centers b would skew a b-keyed spread
     o = (o.repartition(shuffle_width(o.sparkSession), "a", "b")
          .localCheckpoint())
     w = (o.alias("e1")
@@ -336,13 +335,7 @@ def label_propagation(edges: DataFrame, iters: int = 3,
     throughout; label state is 16 bytes/node. localCheckpoint per sweep
     truncates the iterative lineage (the pagerank/kmeans pattern).
     """
-    sym = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-           .where(F.col("u") != F.col("v")))
-    sym = (sym.unionByName(sym.select(F.col("v").alias("u"),
-                                      F.col("u").alias("v")))
-           .distinct().localCheckpoint())
-    # r15: label state is (node, long) — size its per-sweep checkpoints
-    # to the materialized edge count, not the shuffle-width constant
+    sym = _symmetric(_undirected(edges, src_col, dst_col)).localCheckpoint()
     n_parts = _register_parts(sym.sparkSession, sym.count())
     labels = (sym.select(F.col("u").alias("node")).distinct()
               .select("node", F.col("node").alias("label")))
@@ -380,11 +373,7 @@ def link_prediction_scores(edges: DataFrame, min_common: int = 2,
     anti-join and degree joins shuffle id pairs only; Jaccard is integer
     cross-multiplied (|∩|·1e6 DIV (deg_u + deg_v − |∩|)).
     """
-    und = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-           .where(F.col("u") != F.col("v")))
-    sym = (und.unionByName(und.select(F.col("v").alias("u"),
-                                      F.col("u").alias("v")))
-           .distinct().localCheckpoint())
+    sym = _symmetric(_undirected(edges, src_col, dst_col)).localCheckpoint()
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     # wedges: center c with neighbors a < b -> candidate pair (a, b)
     n1 = sym.select(F.col("u").alias("c"), F.col("v").alias("a"))
@@ -429,18 +418,12 @@ def hash_walks(edges: DataFrame, walk_len: int = 3,
     nodes cost nothing extra (their array is large but the lookup is
     O(1)). ``starts`` defaults to every node.
     """
-    und = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-           .where(F.col("u") != F.col("v")))
-    sym = (und.unionByName(und.select(F.col("v").alias("u"),
-                                      F.col("u").alias("v")))
-           .distinct())
+    sym = _symmetric(_undirected(edges, src_col, dst_col))
     adj = (sym.groupBy("u")
            .agg(F.sort_array(F.collect_list("v")).alias("nbrs"),
                 F.count(F.lit(1)).alias("deg")).localCheckpoint())
     start_df = (starts if starts is not None
                 else adj.select(F.col("u").alias("start")))
-    # r15: the frontier is (start, walk, cur) — ~walks_per_node x nodes
-    # small rows; size its per-step checkpoints to that count
     n_parts = _register_parts(adj.sparkSession,
                               adj.count() * walks_per_node)
     frontier = (start_df.select(
@@ -492,12 +475,7 @@ def feature_propagation(edges: DataFrame, feats: DataFrame,
     partitioned by src + one map-side-combinable sum — identical scale
     shape to pagerank (16-byte state rows, localCheckpoint truncating
     the iterative lineage)."""
-    und = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-           .where(F.col("u") != F.col("v")))
-    sym = (und.unionByName(und.select(F.col("v").alias("u"),
-                                      F.col("u").alias("v")))
-           .distinct().localCheckpoint())
-    # r15: feature state is (node, long) — register-sized checkpoints
+    sym = _symmetric(_undirected(edges, src_col, dst_col)).localCheckpoint()
     n_parts = _register_parts(sym.sparkSession, sym.count())
     deg = sym.groupBy(F.col("u").alias(node_col)).agg(
         F.count(F.lit(1)).alias("deg"))
@@ -547,8 +525,6 @@ def temporal_reachability(edges: DataFrame, sources: DataFrame,
                      F.col(ts_col).cast("long").alias("t")).localCheckpoint()
     state = sources.select(F.col("node"),
                            F.lit(0).cast("long").alias("arrival"))
-    # r15: arrival state is (node, long), bounded by reached nodes —
-    # register-sized checkpoints (see _register_parts)
     n_parts = _register_parts(e.sparkSession, e.count())
     for _ in range(rounds):
         relaxed = (e.join(state, e["u"] == state["node"])
@@ -593,13 +569,7 @@ def k_core(edges: DataFrame, k: int = 3, rounds: int = 5,
     localCheckpoint truncates the per-sweep lineage like every
     iterative operator here. No windows, no driver collect.
     """
-    e = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-         .where(F.col("u") != F.col("v")))
-    sym = (e.unionByName(e.select(F.col("v").alias("u"),
-                                  F.col("u").alias("v")))
-           .distinct().localCheckpoint())
-    # r15: survivor edge state only shrinks — checkpoint at an
-    # edge-count-derived width, not the shuffle-width constant
+    sym = _symmetric(_undirected(edges, src_col, dst_col)).localCheckpoint()
     n_parts = _register_parts(sym.sparkSession, sym.count())
     for _ in range(rounds):
         keep = (sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
@@ -880,11 +850,7 @@ def modularity(edges: DataFrame, labels: DataFrame,
     from amundsendatabuilder_spark.functions.scalars import round_half_away
     from amundsendatabuilder_spark.operators.profiling import (
         guard_register_domain)
-    und = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-           .where(F.col("u") != F.col("v"))
-           .select(F.least("u", "v").alias("u"),
-                   F.greatest("u", "v").alias("v"))
-           .distinct().localCheckpoint())
+    und = _undirected(edges, src_col, dst_col).localCheckpoint()
     lab_u = labels.select(F.col(node_col).alias("u"),
                           F.col(label_col).alias("cu"))
     lab_v = labels.select(F.col(node_col).alias("v"),

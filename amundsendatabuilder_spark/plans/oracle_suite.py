@@ -50,6 +50,34 @@ def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [dfs[n] for n in names] if names else list(dfs.values())
 
 
+def _key_edges(key_df: DataFrame, *targets) -> DataFrame:
+    """The synthesized key graphs' edges: (src, dst, pos) for every key k
+    of ``key_df`` and every ``targets[pos]`` (an expression over k) that
+    is itself a key, plus key_df's other columns. One posexplode and one
+    semi-join in place of a self-join per edge rule; a NULL target emits
+    nothing. Keys must be distinct: the semi-join emits each (k, pos) at
+    most once, as the per-rule inner self-joins then do, so the edge
+    multiset is their union's."""
+    rest = [c for c in key_df.columns if c != "k"]
+    return (key_df.select(F.col("k").alias("src"), *rest,
+                          F.posexplode(F.array(*targets)).alias("pos", "dst"))
+            .join(key_df.select(F.col("k").alias("dst")), "dst", "left_semi")
+            .select("src", "dst", "pos", *rest))
+
+
+def _dag_targets():
+    """The ternary lineage DAG: k -> 2k, 2k+1, 3k."""
+    k = F.col("k")
+    return k * 2, k * 2 + 1, k * 3
+
+
+def _star_edges(key_df: DataFrame) -> DataFrame:
+    """The star graph: hub k - k%10 -> each spoke k (k%10 != 0)."""
+    k = F.col("k")
+    return _key_edges(key_df, F.when(k % 10 != 0, k - k % 10)).select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"))
+
+
 # ---------------------------------------------------------------------------
 # 1. Scans / projection / filter / scalar functions
 # ---------------------------------------------------------------------------
@@ -1830,13 +1858,8 @@ def lineage_reachability(spark, sf_dir):
     from amundsendatabuilder_spark.operators.graph_algo import reachability
     (orders,) = _t(spark, sf_dir, "orders")
     keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct().cache()
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-    edges = (
-        a.join(b, F.col("b.k") == F.col("a.k") * 2)
-        .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst"))
-        .unionByName(
-            a.join(b, F.col("b.k") == F.col("a.k") * 2 + 1)
-            .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst"))))
+    k = F.col("k")
+    edges = _key_edges(keys_df, k * 2, k * 2 + 1).select("src", "dst")
     sources = keys_df.where(F.col("k") <= 8).select(F.col("k").alias("src"))
     return reachability(edges, sources, max_depth=4)
 
@@ -2459,25 +2482,20 @@ def graph_shortest_path(spark, sf_dir):
     oracle is the recursive-CTE BFS with the same 4-hop bound."""
     from amundsendatabuilder_spark.sources.graph import match_shortest
     (orders,) = _t(spark, sf_dir, "orders")
-    keys = (orders.where(F.col("o_orderkey") <= 400)
-            .select(F.col("o_orderkey").alias("k")).distinct())
-    nodes = keys.select(
+    key_df = (orders.where(F.col("o_orderkey") <= 400)
+              .select(F.col("o_orderkey").alias("k")).distinct())
+    nodes = key_df.select(
         F.col("k").cast("string").alias("KEY"), F.lit("Node").alias("LABEL"),
         F.create_map().cast("map<string,string>").alias("props"))
-    a, b = keys.alias("a"), keys.alias("b")
-    empty_props = F.create_map().cast("map<string,string>")
-
-    def edge(cond):
-        return (a.join(b, cond)
-                .select(F.col("a.k").cast("string").alias("START_KEY"),
-                        F.lit("Node").alias("START_LABEL"),
-                        F.col("b.k").cast("string").alias("END_KEY"),
-                        F.lit("Node").alias("END_LABEL"),
-                        F.lit("FLOWS").alias("TYPE"),
-                        F.lit("FLOWED").alias("REVERSE_TYPE"),
-                        empty_props.alias("props")))
-    rels = edge(F.col("b.k") == F.col("a.k") + 1).unionByName(
-        edge(F.col("b.k") == F.col("a.k") * 2))
+    k = F.col("k")
+    rels = _key_edges(key_df, k + 1, k * 2).select(
+        F.col("src").cast("string").alias("START_KEY"),
+        F.lit("Node").alias("START_LABEL"),
+        F.col("dst").cast("string").alias("END_KEY"),
+        F.lit("Node").alias("END_LABEL"),
+        F.lit("FLOWS").alias("TYPE"),
+        F.lit("FLOWED").alias("REVERSE_TYPE"),
+        F.create_map().cast("map<string,string>").alias("props"))
     return (match_shortest(nodes, rels, start_label="Node",
                            rel_type="FLOWS", max_hops=4)
             .select("n0_key", "n_key", "n_label", "distance"))
@@ -2520,26 +2538,21 @@ def graph_path_rel_props(spark, sf_dir):
     pruning."""
     from amundsendatabuilder_spark.sources.graph import match_var_path_rels
     (orders,) = _t(spark, sf_dir, "orders")
-    keys = (orders.where(F.col("o_orderkey") <= 300)
-            .select(F.col("o_orderkey").alias("k")).distinct())
-    nodes = keys.select(
+    key_df = (orders.where(F.col("o_orderkey") <= 300)
+              .select(F.col("o_orderkey").alias("k")).distinct())
+    nodes = key_df.select(
         F.col("k").cast("string").alias("KEY"), F.lit("Node").alias("LABEL"),
         F.create_map().cast("map<string,string>").alias("props"))
-    a, b = keys.alias("a"), keys.alias("b")
-
-    def edge(cond, w):
-        return (a.join(b, cond)
-                .select(F.col("a.k").cast("string").alias("START_KEY"),
-                        F.lit("Node").alias("START_LABEL"),
-                        F.col("b.k").cast("string").alias("END_KEY"),
-                        F.lit("Node").alias("END_LABEL"),
-                        F.lit("FLOWS").alias("TYPE"),
-                        F.lit("FLOWED").alias("REVERSE_TYPE"),
-                        F.create_map(F.lit("weight"),
-                                     w.cast("string")).alias("props")))
-    rels = edge(F.col("b.k") == F.col("a.k") + 1,
-                F.col("a.k") % 7 + 1).unionByName(
-        edge(F.col("b.k") == F.col("a.k") * 2, F.col("a.k") % 5 + 10))
+    k, src = F.col("k"), F.col("src")
+    w = F.when(F.col("pos") == 0, src % 7 + 1).otherwise(src % 5 + 10)
+    rels = _key_edges(key_df, k + 1, k * 2).select(
+        src.cast("string").alias("START_KEY"),
+        F.lit("Node").alias("START_LABEL"),
+        F.col("dst").cast("string").alias("END_KEY"),
+        F.lit("Node").alias("END_LABEL"),
+        F.lit("FLOWS").alias("TYPE"),
+        F.lit("FLOWED").alias("REVERSE_TYPE"),
+        F.create_map(F.lit("weight"), w.cast("string")).alias("props"))
     paths = match_var_path_rels(
         nodes, rels, start_label="Node", rel_type="FLOWS",
         min_hops=1, max_hops=3, rel_prop="weight",
@@ -4469,14 +4482,8 @@ def graph_pagerank(spark, sf_dir):
     map-side-combinable sum — rank state never exceeds 16 bytes/node."""
     from amundsendatabuilder_spark.operators.graph_algo import pagerank
     (orders,) = _t(spark, sf_dir, "orders")
-    keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct().cache()
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(mult: int, add: int = 0):
-        return (a.join(b, F.col("b.k") == F.col("a.k") * mult + add)
-                .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst")))
-
-    edges = em(2).unionByName(em(2, 1)).unionByName(em(3))
+    keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
+    edges = _key_edges(keys_df, *_dag_targets()).select("src", "dst")
     return pagerank(edges, iters=3).orderBy("node")
 
 
@@ -5640,14 +5647,10 @@ def lineage_asof_diff(spark, sf_dir):
     from amundsendatabuilder_spark.operators.graph_algo import reachability
     (orders,) = _t(spark, sf_dir, "orders")
     keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct().cache()
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-    e1 = (a.join(b, F.col("b.k") == F.col("a.k") * 2)
-          .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst"),
-                  (F.col("a.k") % 20).alias("valid_from_day")))
-    e2 = (a.join(b, F.col("b.k") == F.col("a.k") * 2 + 1)
-          .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst"),
-                  ((F.col("a.k") + 7) % 20).alias("valid_from_day")))
-    edges = e1.unionByName(e2)
+    k = F.col("k")
+    edges = _key_edges(keys_df, k * 2, k * 2 + 1).select(
+        "src", "dst",
+        ((F.col("src") + 7 * F.col("pos")) % 20).alias("valid_from_day"))
     sources = keys_df.where(F.col("k") <= 8).select(F.col("k").alias("src"))
 
     def snap(day):
@@ -6629,11 +6632,7 @@ def graph_modularity_query(spark, sf_dir):
         label_propagation, modularity)
     (orders,) = _t(spark, sf_dir, "orders")
     keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-    edges = (a.where(F.col("a.k") % 10 != 0)
-             .join(b, F.col("b.k") == F.col("a.k") - (F.col("a.k") % 10))
-             .select(F.col("b.k").alias("src"), F.col("a.k").alias("dst")))
-    edges = edges.localCheckpoint()
+    edges = _star_edges(keys_df).localCheckpoint()
     labels = label_propagation(edges, iters=3)
     return modularity(edges, labels, top_n=10)
 
@@ -6652,10 +6651,7 @@ def graph_label_propagation(spark, sf_dir):
         label_propagation)
     (orders,) = _t(spark, sf_dir, "orders")
     keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-    edges = (a.where(F.col("a.k") % 10 != 0)
-             .join(b, F.col("b.k") == F.col("a.k") - (F.col("a.k") % 10))
-             .select(F.col("b.k").alias("src"), F.col("a.k").alias("dst")))
+    edges = _star_edges(keys_df)
     return label_propagation(edges, iters=3).orderBy("node")
 
 
@@ -7144,14 +7140,8 @@ def graph_link_prediction(spark, sf_dir):
     from amundsendatabuilder_spark.operators.graph_algo import (
         link_prediction_scores)
     (orders,) = _t(spark, sf_dir, "orders")
-    keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct().cache()
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(mult: int, add: int = 0):
-        return (a.join(b, F.col("b.k") == F.col("a.k") * mult + add)
-                .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst")))
-
-    edges = em(2).unionByName(em(2, 1)).unionByName(em(3))
+    keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
+    edges = _key_edges(keys_df, *_dag_targets()).select("src", "dst")
     return link_prediction_scores(edges, min_common=2, k=50)
 
 
@@ -7261,13 +7251,7 @@ def graph_hash_walks(spark, sf_dir):
     from amundsendatabuilder_spark.operators.graph_algo import hash_walks
     (orders,) = _t(spark, sf_dir, "orders")
     keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct().cache()
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(mult: int, add: int = 0):
-        return (a.join(b, F.col("b.k") == F.col("a.k") * mult + add)
-                .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst")))
-
-    edges = em(2).unionByName(em(2, 1)).unionByName(em(3))
+    edges = _key_edges(keys_df, *_dag_targets()).select("src", "dst")
     # every key is a graph node (k >= 2 has parent k DIV 2; k = 1 has
     # children), so starts come straight off the key table instead of
     # re-deriving the symmetrized node set (saves a full graph rebuild)
@@ -7565,10 +7549,7 @@ def graph_feature_propagation(spark, sf_dir):
         feature_propagation)
     (orders,) = _t(spark, sf_dir, "orders")
     keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-    edges = (a.where(F.col("a.k") % 10 != 0)
-             .join(b, F.col("b.k") == F.col("a.k") - (F.col("a.k") % 10))
-             .select(F.col("b.k").alias("src"), F.col("a.k").alias("dst")))
+    edges = _star_edges(keys_df)
     feats = orders.select(
         F.col("o_orderkey").alias("node"),
         F.floor(F.col("o_totalprice") * 100).cast("long").alias("f"))
@@ -7621,14 +7602,8 @@ def temporal_reachability_query(spark, sf_dir):
         F.col("o_orderkey").alias("k"),
         F.unix_timestamp(F.col("o_orderdate")).cast("long").alias("te"))
         .distinct().cache())
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(mult: int, add: int = 0):
-        return (a.join(b, F.col("b.k") == F.col("a.k") * mult + add)
-                .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst"),
-                        F.col("a.te").alias("t")))
-
-    edges = em(2).unionByName(em(2, 1)).unionByName(em(3))
+    edges = _key_edges(keys_df, *_dag_targets()).select(
+        "src", "dst", F.col("te").alias("t"))
     sources = keys_df.where(F.col("k") < 21).select(F.col("k").alias("node"))
     return (temporal_reachability(edges, sources, rounds=3)
             .orderBy("node"))
@@ -8780,26 +8755,12 @@ def graph_k_core(spark, sf_dir):
     keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
     nv = keys_df.agg(
         (F.expr("(max(k) DIV 10) * 10 + 10")).alias("n"))
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(cond, flt):
-        return (a.where(flt).join(b, cond)
-                .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst")))
-
-    def hub(off):
-        return (a.where(F.col("a.k") % 10 == 0)
-                .crossJoin(F.broadcast(nv))
-                .join(b, F.col("b.k") == (F.col("a.k") + off) % F.col("n"))
-                .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst")))
-
-    edges = (em(F.col("b.k") == F.col("a.k") - (F.col("a.k") % 10),
-                F.col("a.k") % 10 != 0)
-             .unionByName(em(F.col("b.k") == F.col("a.k") + 1,
-                             F.col("a.k") % 10 != 9))
-             .unionByName(em(F.col("b.k") == F.col("a.k") + 2,
-                             F.col("a.k") % 10 <= 7))
-             .unionByName(hub(10)).unionByName(hub(20))
-             .unionByName(hub(30)))
+    k, d = F.col("k"), F.col("k") % 10
+    edges = _key_edges(
+        keys_df.crossJoin(F.broadcast(nv)),
+        F.when(d != 0, k - d), F.when(d != 9, k + 1), F.when(d <= 7, k + 2),
+        *[F.when(d == 0, (k + off) % F.col("n")) for off in (10, 20, 30)],
+    ).select("src", "dst")
     return k_core(edges, k=4, rounds=6)
 
 
@@ -10094,16 +10055,8 @@ def hyperball_reach_query(spark, sf_dir):
     from amundsendatabuilder_spark.operators.graph_algo import (
         hyperball_neighborhood)
     (orders,) = _t(spark, sf_dir, "orders")
-    keys_df = (orders.select(F.col("o_orderkey").alias("k"))
-               .distinct().cache())
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(mult: int, add: int = 0):
-        return (a.join(b, F.col("b.k") == F.col("a.k") * mult + add)
-                .select(F.col("a.k").alias("src"),
-                        F.col("b.k").alias("dst")))
-
-    edges = em(2).unionByName(em(2, 1)).unionByName(em(3))
+    keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
+    edges = _key_edges(keys_df, *_dag_targets()).select("src", "dst")
     return hyperball_neighborhood(edges, iters=3, p=4)
 
 
@@ -10143,16 +10096,8 @@ def degree_assortativity_query(spark, sf_dir):
     from amundsendatabuilder_spark.operators.graph_algo import (
         degree_assortativity)
     (orders,) = _t(spark, sf_dir, "orders")
-    keys_df = (orders.select(F.col("o_orderkey").alias("k"))
-               .distinct().cache())
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(mult: int, add: int = 0):
-        return (a.join(b, F.col("b.k") == F.col("a.k") * mult + add)
-                .select(F.col("a.k").alias("src"),
-                        F.col("b.k").alias("dst")))
-
-    edges = em(2).unionByName(em(2, 1)).unionByName(em(3))
+    keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
+    edges = _key_edges(keys_df, *_dag_targets()).select("src", "dst")
     return degree_assortativity(edges)
 
 
@@ -10247,16 +10192,8 @@ def hyperball_harmonic_query(spark, sf_dir):
     from amundsendatabuilder_spark.operators.graph_algo import (
         hyperball_harmonic)
     (orders,) = _t(spark, sf_dir, "orders")
-    keys_df = (orders.select(F.col("o_orderkey").alias("k"))
-               .distinct().cache())
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(mult: int, add: int = 0):
-        return (a.join(b, F.col("b.k") == F.col("a.k") * mult + add)
-                .select(F.col("a.k").alias("src"),
-                        F.col("b.k").alias("dst")))
-
-    edges = em(2).unionByName(em(2, 1)).unionByName(em(3))
+    keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
+    edges = _key_edges(keys_df, *_dag_targets()).select("src", "dst")
     return hyperball_harmonic(edges, iters=3, p=4, k=10)
 
 
@@ -11343,16 +11280,8 @@ def graph_effective_diameter_query(spark, sf_dir):
     from amundsendatabuilder_spark.operators.graph_algo import (
         hyperball_effective_diameter)
     (orders,) = _t(spark, sf_dir, "orders")
-    keys_df = (orders.select(F.col("o_orderkey").alias("k"))
-               .distinct().cache())
-    a, b = keys_df.alias("a"), keys_df.alias("b")
-
-    def em(mult: int, add: int = 0):
-        return (a.join(b, F.col("b.k") == F.col("a.k") * mult + add)
-                .select(F.col("a.k").alias("src"),
-                        F.col("b.k").alias("dst")))
-
-    edges = em(2).unionByName(em(2, 1)).unionByName(em(3))
+    keys_df = orders.select(F.col("o_orderkey").alias("k")).distinct()
+    edges = _key_edges(keys_df, *_dag_targets()).select("src", "dst")
     return hyperball_effective_diameter(edges, iters=3, p=4, q=0.9)
 
 

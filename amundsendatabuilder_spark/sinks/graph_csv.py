@@ -43,8 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark.models.base import (
-    GraphOutput, ShardProfile, _empty_nodes, _empty_rels, graph_profile,
-    props_key_hash)
+    GraphOutput, ShardProfile, graph_profile, props_key_hash)
 
 # property-name -> neo4j-unquoted type, per the models in models/*.py
 # (reference derives this from Python int/bool values at serialize time,
@@ -164,17 +163,3 @@ def write_graph(out: GraphOutput, out_dir: str,
                 dst, os.path.splitext(os.path.basename(part))[0] + ".csv"))
     shutil.rmtree(tmp)
     return staged
-
-
-def write_nodes_csv(nodes: DataFrame, out_dir: str) -> list[str]:
-    """Write per-(label, column-set) node CSV shard directories under
-    ``out_dir/nodes``. Returns the shard paths written."""
-    return write_graph(GraphOutput(nodes, _empty_rels(nodes.sparkSession)),
-                       out_dir)["nodes"]
-
-
-def write_rels_csv(rels: DataFrame, out_dir: str) -> list[str]:
-    """Write per-(start,end,type,column-set) relationship CSV shards under
-    ``out_dir/rels`` (reference loader :141-177)."""
-    return write_graph(GraphOutput(_empty_nodes(rels.sparkSession), rels),
-                       out_dir)["rels"]

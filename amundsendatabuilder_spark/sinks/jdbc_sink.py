@@ -41,15 +41,3 @@ def publish_relational(tables: dict[str, DataFrame],
                 upsert_batch(_name, batch)
 
         df.foreachPartition(send)
-
-
-def write_jdbc_append(df: DataFrame, url: str, table: str,
-                      batch_size: int = 10_000, **options) -> None:
-    """Plain append write (for fresh staging tables); real upsert goes
-    through publish_relational's injected writer."""
-    w = (df.write.format("jdbc").option("url", url)
-         .option("dbtable", table).option("batchsize", batch_size)
-         .mode("append"))
-    for k, v in options.items():
-        w = w.option(k, v)
-    w.save()

@@ -39,11 +39,6 @@ def is_client_side_error(e: Exception) -> bool:
     return e.__class__.__name__ in CLIENT_ERRORS
 
 
-def is_retriable_error(e: Exception) -> bool:
-    """reference :27-33."""
-    return not is_client_side_error(e)
-
-
 @dataclass
 class FileMetadata:
     """databuilder/filesystem/metadata.py:7-20."""

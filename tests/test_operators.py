@@ -1335,6 +1335,50 @@ def test_triangle_counts_duplicate_and_reversed_edges(spark):
     assert got == [(1, 1), (2, 1), (3, 1)]
 
 
+def test_undirected_and_symmetric_match_python_twin(spark):
+    from amundsendatabuilder_spark.operators.graph_algo import (
+        _symmetric, _undirected)
+    # self-loops, parallel edges, both orientations of one pair
+    e = [(1, 2), (2, 1), (1, 2), (3, 3), (2, 3), (3, 2), (4, 4), (5, 1),
+         (1, 5), (6, 7)]
+    df = spark.createDataFrame(e, "a long, b long")
+    und = {(min(u, v), max(u, v)) for u, v in e if u != v}
+    got = _undirected(df, "a", "b")
+    assert got.columns == ["u", "v"]
+    assert sorted(map(tuple, got.collect())) == sorted(und)
+    sym = sorted(und | {(v, u) for u, v in und})
+    assert sorted(map(tuple, _symmetric(got).collect())) == sym
+
+
+def test_key_edges_equals_per_target_self_join_union(spark):
+    from amundsendatabuilder_spark.plans.oracle_suite import _key_edges
+    # keys with gaps; extra column te rides along
+    ks = [1, 2, 3, 5, 6, 7, 10, 11, 14, 15, 20, 21, 30]
+    key_df = spark.createDataFrame([(k, 100 + k) for k in ks],
+                                   "k long, te long")
+    # k = 1 reaches 3 twice (2k+1 and 3k); the last target is NULL unless
+    # k % 5 == 0
+    rules = [lambda k: k * 2, lambda k: k * 2 + 1, lambda k: k * 3,
+             lambda k: F.when(k % 5 == 0, k + 1)]
+    a, b = key_df.alias("a"), key_df.alias("b")
+    want = None
+    for pos, rule in enumerate(rules):
+        part = (a.join(b, F.col("b.k") == rule(F.col("a.k")))
+                .select(F.col("a.k").alias("src"), F.col("b.k").alias("dst"),
+                        F.lit(pos).alias("pos"), F.col("a.te").alias("te")))
+        want = part if want is None else want.unionByName(part)
+    got = _key_edges(key_df, *[rule(F.col("k")) for rule in rules])
+    assert got.columns == ["src", "dst", "pos", "te"]
+    got_rows = sorted(map(tuple, got.collect()))
+    assert got_rows == sorted(map(tuple, want.collect()))
+    assert [r for r in got_rows if r[0] == 1] == [
+        (1, 2, 0, 101), (1, 3, 1, 101), (1, 3, 2, 101)]
+    # the NULL-able target fires only where k % 5 == 0 and k + 1 is a key
+    # (16 and 31 are not)
+    assert [r for r in got_rows if r[2] == 3] == [
+        (5, 6, 3, 105), (10, 11, 3, 110), (20, 21, 3, 120)]
+
+
 # ---------------------------------------------------------------------------
 # Prefix-filtered exact Jaccard join (operators/dedup.jaccard_prefix_join)
 # ---------------------------------------------------------------------------
