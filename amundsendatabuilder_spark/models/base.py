@@ -8,6 +8,11 @@ REVERSE_TYPE, attributes...). Attributes ride in a map<string,string>
 column; sinks pivot the map to per-label columns (ragged attribute sets are
 a write-time concern — SURVEY §7.4).
 
+Expansions state each input row's ``node`` and ``rel`` elements (struct
+Columns); ``graph_from`` explodes them once per graph side, the per-record
+iterator of graph_serializable.py:21-66 as one generator. ``union_graphs``
+is the one dedup, keeping the first-emitted row per key.
+
 Validation mirrors graph_serializable.py:68-91: node key non-null, label
 Title-cased, relation type UPPER-cased, relation endpoints non-null. The
 four checks are written once, in ``_CHECKS``. ``graph_profile`` is the one
@@ -27,6 +32,7 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 NODE_KEY, NODE_LABEL = "KEY", "LABEL"
 REL_START_KEY, REL_START_LABEL = "START_KEY", "START_LABEL"
@@ -49,35 +55,28 @@ def _props_map(props: dict[str, Column]) -> Column:
     return F.map_filter(F.create_map(*pairs), lambda _, v: v.isNotNull())
 
 
-def make_nodes(df: DataFrame, label: str, key: Column,
-               props: dict[str, Column] | None = None) -> DataFrame:
-    """Project a model DataFrame into standardized node rows, dropping
-    null keys. Rows are not deduped here: ``union_graphs`` is the one
-    dedup, once per graph side."""
-    return df.select(
-        key.alias(NODE_KEY),
-        F.lit(label).alias(NODE_LABEL),
-        _props_map(props or {}).alias("props"),
-    ).where(F.col(NODE_KEY).isNotNull())
+def node(key: Column, label: str | Column,
+         props: dict[str, Column] | None = None) -> Column:
+    """One node element: a (KEY, LABEL, props) struct. A label may be a
+    Column, picked per row."""
+    return F.struct(key.alias(NODE_KEY),
+                    F.lit(label).alias(NODE_LABEL),
+                    _props_map(props or {}).alias("props"))
 
 
-def make_rels(df: DataFrame, start_label: str, end_label: str,
-              start_key: Column, end_key: Column,
-              rel_type: str, reverse_type: str,
-              props: dict[str, Column] | None = None) -> DataFrame:
-    """Project a model DataFrame into standardized relationship rows,
-    dropping null endpoints; ``union_graphs`` dedups them (the
-    bidirectional pair is materialized by the sink, reference:
-    publisher/neo4j_csv_publisher.py:235-287)."""
-    return df.select(
-        start_key.alias(REL_START_KEY),
-        F.lit(start_label).alias(REL_START_LABEL),
-        end_key.alias(REL_END_KEY),
-        F.lit(end_label).alias(REL_END_LABEL),
-        F.lit(rel_type).alias(REL_TYPE),
-        F.lit(reverse_type).alias(REL_REVERSE_TYPE),
-        _props_map(props or {}).alias("props"),
-    ).where(F.col(REL_START_KEY).isNotNull() & F.col(REL_END_KEY).isNotNull())
+def rel(start_key: Column, start_label: str | Column,
+        end_key: Column, end_label: str | Column,
+        rel_type: str, reverse_type: str,
+        props: dict[str, Column] | None = None) -> Column:
+    """One relationship element (the bidirectional pair is materialized by
+    the sink, reference: publisher/neo4j_csv_publisher.py:235-287)."""
+    return F.struct(start_key.alias(REL_START_KEY),
+                    F.lit(start_label).alias(REL_START_LABEL),
+                    end_key.alias(REL_END_KEY),
+                    F.lit(end_label).alias(REL_END_LABEL),
+                    F.lit(rel_type).alias(REL_TYPE),
+                    F.lit(reverse_type).alias(REL_REVERSE_TYPE),
+                    _props_map(props or {}).alias("props"))
 
 
 def _empty_nodes(spark) -> DataFrame:
@@ -92,20 +91,72 @@ def _empty_rels(spark) -> DataFrame:
             "props map<string,string>")
 
 
+def _generate(df: DataFrame, entries: list[Column], empty: Callable,
+              keys: list[str]) -> DataFrame:
+    """One side of ``graph_from``: a row's entries concatenated and
+    exploded once, ``_pos`` being each element's position; NULL elements
+    and NULL keys are dropped."""
+    if not entries:
+        return empty(df.sparkSession)
+    # the schema tells single elements from arrays; a NULL array would null
+    # the whole concat, so it counts as empty
+    types = [f.dataType for f in df.select(*entries).schema]
+    arrays = [F.coalesce(e, F.array().cast(t)) if isinstance(t, T.ArrayType)
+              else F.array(e) for e, t in zip(entries, types)]
+    return (df.select(F.posexplode(F.concat(*arrays)).alias("_pos", "_e"))
+            .where(F.col("_e").isNotNull())
+            .select("_pos", "_e.*")
+            .dropna(subset=keys))
+
+
+def graph_from(df: DataFrame, nodes: list[Column],
+               rels: list[Column]) -> GraphOutput:
+    """Expand each row of ``df`` into its graph elements, one generator per
+    side. Each entry is one ``node``/``rel`` element (NULL when
+    conditional: ``F.when(cond, node(...))``) or an array of them
+    (``F.transform`` over tags, columns or badges); a row emits them in
+    entry order. Ends in ``union_graphs``: the first-emitted element wins
+    per key."""
+    return union_graphs(GraphOutput(
+        _generate(df, nodes, _empty_nodes, [NODE_KEY]),
+        _generate(df, rels, _empty_rels, [REL_START_KEY, REL_END_KEY])))
+
+
+def _first_per_key(frames: list[DataFrame], key: list[str]) -> DataFrame:
+    """The least-ranked row per ``key`` over ``frames``, ranked by (frame
+    index, ``_pos`` or 0, sorted props entries, the other columns)."""
+    cols = [c for c in frames[0].columns if c != "_pos"]
+    rest = [c for c in cols if c not in key]
+    ranked = []
+    for i, df in enumerate(frames):
+        pos = F.col("_pos") if "_pos" in df.columns else F.lit(0)
+        ranked.append(df.select(*cols, F.struct(
+            F.lit(i).alias("input"), pos.alias("pos"),
+            F.array_sort(F.map_entries("props")).alias("props"),
+            *[c for c in rest if c != "props"]).alias("_rank")))
+    return (functools.reduce(DataFrame.unionByName, ranked)
+            .groupBy(*key)
+            .agg(F.min_by(F.struct(*rest), "_rank").alias("_row"))
+            .select(*key, "_row.*")
+            .select(*cols))
+
+
 def union_graphs(*outputs: GraphOutput) -> GraphOutput:
     """Union model expansions into one graph and dedup it: the one dedup of
     the model layer, once per side on (KEY, LABEL) and (START_KEY, END_KEY,
     TYPE). It is the set-level form of the reference's class-level
     serialized-key set (databuilder/models/table_metadata.py:323-326), so it
     also collapses cross-model repeats (e.g. the same User emitted by users
-    and usage). Differing props for one key resolve to one arbitrary row.
-    unionByName keeps this safe as models evolve."""
+    and usage). Per key the first-emitted row wins, whatever the
+    partitioning: least output index, then element position ``_pos`` (0
+    when absent), then sorted props entries. unionByName keeps this safe
+    as models evolve."""
     if not outputs:
         raise ValueError("union_graphs needs at least one model expansion")
-    nodes = functools.reduce(DataFrame.unionByName, (o.nodes for o in outputs))
-    rels = functools.reduce(DataFrame.unionByName, (o.rels for o in outputs))
-    return GraphOutput(nodes.dropDuplicates([NODE_KEY, NODE_LABEL]),
-                       rels.dropDuplicates([REL_START_KEY, REL_END_KEY, REL_TYPE]))
+    return GraphOutput(
+        _first_per_key([o.nodes for o in outputs], [NODE_KEY, NODE_LABEL]),
+        _first_per_key([o.rels for o in outputs],
+                       [REL_START_KEY, REL_END_KEY, REL_TYPE]))
 
 
 def _label_not_title() -> Column:

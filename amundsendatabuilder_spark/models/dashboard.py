@@ -1,8 +1,10 @@
 """Dashboard model family (reference: databuilder/models/dashboard/*):
 group/dashboard metadata, owner, usage, query, execution (with the
 '_last_execution' / '_last_successful_execution' sentinel keys), last
-modified timestamp, dashboard->table links. Each expansion projects its rows
-and ends in ``union_graphs``, the one dedup per graph side.
+modified timestamp, dashboard->table links. Each expansion states its
+``node`` and ``rel`` elements per input row; ``graph_from`` explodes them
+once per graph side and ends in ``union_graphs``, the one dedup per graph
+side.
 """
 
 from __future__ import annotations
@@ -11,7 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark import keys
-from amundsendatabuilder_spark.models.base import GraphOutput, make_nodes, make_rels, union_graphs
+from amundsendatabuilder_spark.models.base import GraphOutput, graph_from, node, rel
 from amundsendatabuilder_spark.models.misc import USER_LABEL
 from amundsendatabuilder_spark.models.table_metadata import TABLE_LABEL
 
@@ -35,77 +37,68 @@ def expand_dashboards(df: DataFrame) -> GraphOutput:
     cluster, dashboard_group, dashboard_group_id,
     dashboard_group_description, dashboard_group_url, dashboard_name,
     dashboard_id, description, created_timestamp, dashboard_url."""
-    d = _dash_keys(df)
-    group_nodes = make_nodes(
-        d, DASHBOARD_GROUP_LABEL, F.col("_group_key"),
-        {"name": F.col("dashboard_group"),
-         "dashboard_group_url": F.col("dashboard_group_url")})
-    dash_nodes = make_nodes(
-        d, DASHBOARD_LABEL, F.col("_dash_key"),
-        {"name": F.col("dashboard_name"),
-         "dashboard_url": F.col("dashboard_url"),
-         "created_timestamp": F.col("created_timestamp")})
-    desc = d.where(F.col("description").isNotNull() & (F.col("description") != ""))
-    desc_key = F.concat(F.col("_dash_key"), F.lit("/_description"))
-    desc_nodes = make_nodes(desc, "Description", desc_key,
-                            {"description": F.col("description")})
-    group_desc = d.where(F.col("dashboard_group_description").isNotNull()
-                         & (F.col("dashboard_group_description") != ""))
-    gdesc_key = F.concat(F.col("_group_key"), F.lit("/_description"))
-    gdesc_nodes = make_nodes(group_desc, "Description", gdesc_key,
-                             {"description": F.col("dashboard_group_description")})
-
-    group_dash = make_rels(d, DASHBOARD_GROUP_LABEL, DASHBOARD_LABEL,
-                           F.col("_group_key"), F.col("_dash_key"),
-                           "DASHBOARD", "DASHBOARD_OF")
-    dash_desc = make_rels(desc, DASHBOARD_LABEL, "Description",
-                          F.col("_dash_key"), desc_key,
-                          "DESCRIPTION", "DESCRIPTION_OF")
-    group_desc_rel = make_rels(group_desc, DASHBOARD_GROUP_LABEL, "Description",
-                               F.col("_group_key"), gdesc_key,
-                               "DESCRIPTION", "DESCRIPTION_OF")
-    nodes = group_nodes.unionByName(dash_nodes).unionByName(desc_nodes) \
-        .unionByName(gdesc_nodes)
-    rels = group_dash.unionByName(dash_desc).unionByName(group_desc_rel)
-    return union_graphs(GraphOutput(nodes, rels))
+    group_key, dash_key = F.col("_group_key"), F.col("_dash_key")
+    has_desc = F.col("description").isNotNull() & (F.col("description") != "")
+    desc_key = F.concat(dash_key, F.lit("/_description"))
+    has_gdesc = (F.col("dashboard_group_description").isNotNull()
+                 & (F.col("dashboard_group_description") != ""))
+    gdesc_key = F.concat(group_key, F.lit("/_description"))
+    return graph_from(
+        _dash_keys(df),
+        [node(group_key, DASHBOARD_GROUP_LABEL,
+              {"name": F.col("dashboard_group"),
+               "dashboard_group_url": F.col("dashboard_group_url")}),
+         node(dash_key, DASHBOARD_LABEL,
+              {"name": F.col("dashboard_name"),
+               "dashboard_url": F.col("dashboard_url"),
+               "created_timestamp": F.col("created_timestamp")}),
+         F.when(has_desc, node(desc_key, "Description",
+                               {"description": F.col("description")})),
+         F.when(has_gdesc, node(
+             gdesc_key, "Description",
+             {"description": F.col("dashboard_group_description")}))],
+        [rel(group_key, DASHBOARD_GROUP_LABEL, dash_key, DASHBOARD_LABEL,
+             "DASHBOARD", "DASHBOARD_OF"),
+         F.when(has_desc, rel(dash_key, DASHBOARD_LABEL, desc_key,
+                              "Description", "DESCRIPTION", "DESCRIPTION_OF")),
+         F.when(has_gdesc, rel(group_key, DASHBOARD_GROUP_LABEL, gdesc_key,
+                               "Description", "DESCRIPTION", "DESCRIPTION_OF"))])
 
 
 def expand_dashboard_owners(df: DataFrame) -> GraphOutput:
     """DashboardOwner (reference: models/dashboard/dashboard_owner.py).
     Input: product, cluster, dashboard_group_id, dashboard_id, email."""
-    d = _dash_keys(df)
-    nodes = make_nodes(d, USER_LABEL, F.col("email"), {"email": F.col("email")})
-    rels = make_rels(d, USER_LABEL, DASHBOARD_LABEL, F.col("email"),
-                     F.col("_dash_key"), "OWNER", "OWNER_OF")
-    return union_graphs(GraphOutput(nodes, rels))
+    return graph_from(
+        _dash_keys(df),
+        [node(F.col("email"), USER_LABEL, {"email": F.col("email")})],
+        [rel(F.col("email"), USER_LABEL, F.col("_dash_key"), DASHBOARD_LABEL,
+             "OWNER", "OWNER_OF")])
 
 
 def expand_dashboard_usage(df: DataFrame) -> GraphOutput:
     """DashboardUsage (reference: models/dashboard/dashboard_usage.py —
     READ_BY edges carrying view_count). Input: product, cluster,
     dashboard_group_id, dashboard_id, view_count, email."""
-    d = _dash_keys(df)
-    nodes = make_nodes(d, USER_LABEL, F.col("email"), {"email": F.col("email")})
-    rels = make_rels(d, DASHBOARD_LABEL, USER_LABEL, F.col("_dash_key"),
-                     F.col("email"), "READ_BY", "READ",
-                     {"read_count": F.col("view_count")})
-    return union_graphs(GraphOutput(nodes, rels))
+    return graph_from(
+        _dash_keys(df),
+        [node(F.col("email"), USER_LABEL, {"email": F.col("email")})],
+        [rel(F.col("_dash_key"), DASHBOARD_LABEL, F.col("email"), USER_LABEL,
+             "READ_BY", "READ", {"read_count": F.col("view_count")})])
 
 
 def expand_dashboard_queries(df: DataFrame) -> GraphOutput:
     """DashboardQuery (reference: models/dashboard/dashboard_query.py).
     Input: product, cluster, dashboard_group_id, dashboard_id, query_name,
     query_id, url, query_text."""
-    d = _dash_keys(df).withColumn(
-        "_query_key", F.format_string("%s/query/%s", F.col("_dash_key"),
-                                      F.col("query_id")))
-    nodes = make_nodes(
-        d, "Query", F.col("_query_key"),
-        {"name": F.col("query_name"), "id": F.col("query_id"),
-         "url": F.col("url"), "query_text": F.col("query_text")})
-    rels = make_rels(d, DASHBOARD_LABEL, "Query", F.col("_dash_key"),
-                     F.col("_query_key"), "HAS_QUERY", "QUERY_OF")
-    return union_graphs(GraphOutput(nodes, rels))
+    query_key = F.format_string("%s/query/%s", F.col("_dash_key"),
+                                F.col("query_id"))
+    return graph_from(
+        _dash_keys(df),
+        [node(query_key, "Query",
+              {"name": F.col("query_name"), "id": F.col("query_id"),
+               "url": F.col("url"), "query_text": F.col("query_text")})],
+        [rel(F.col("_dash_key"), DASHBOARD_LABEL, query_key, "Query",
+             "HAS_QUERY", "QUERY_OF")])
 
 
 def expand_dashboard_charts(df: DataFrame) -> GraphOutput:
@@ -119,23 +112,17 @@ def expand_dashboard_charts(df: DataFrame) -> GraphOutput:
     attributes (name/type/url) are emitted as-is — the ragged-label CSV
     sink drops nulls per shard, matching the reference's conditional
     attribute dict (:63-75)."""
-    d = _dash_keys(df).withColumn(
-        "_chart_id", F.coalesce(
-            F.when(F.col("chart_id") != "", F.col("chart_id")),
-            F.col("chart_name")))
-    d = d.withColumn(
-        "_query_key", F.format_string("%s/query/%s", F.col("_dash_key"),
-                                      F.col("query_id"))
-    ).withColumn(
-        "_chart_key", F.format_string("%s/chart/%s", F.col("_query_key"),
-                                      F.col("_chart_id")))
-    nodes = make_nodes(
-        d, "Chart", F.col("_chart_key"),
-        {"id": F.col("_chart_id"), "name": F.col("chart_name"),
-         "type": F.col("chart_type"), "url": F.col("chart_url")})
-    rels = make_rels(d, "Query", "Chart", F.col("_query_key"),
-                     F.col("_chart_key"), "HAS_CHART", "CHART_OF")
-    return union_graphs(GraphOutput(nodes, rels))
+    chart_id = F.coalesce(F.when(F.col("chart_id") != "", F.col("chart_id")),
+                          F.col("chart_name"))
+    query_key = F.format_string("%s/query/%s", F.col("_dash_key"),
+                                F.col("query_id"))
+    chart_key = F.format_string("%s/chart/%s", query_key, chart_id)
+    return graph_from(
+        _dash_keys(df),
+        [node(chart_key, "Chart",
+              {"id": chart_id, "name": F.col("chart_name"),
+               "type": F.col("chart_type"), "url": F.col("chart_url")})],
+        [rel(query_key, "Query", chart_key, "Chart", "HAS_CHART", "CHART_OF")])
 
 
 def expand_dashboard_executions(df: DataFrame) -> GraphOutput:
@@ -144,31 +131,29 @@ def expand_dashboard_executions(df: DataFrame) -> GraphOutput:
     '_last_execution'/'_last_successful_execution' at :26-32). Input:
     product, cluster, dashboard_group_id, dashboard_id, execution_id,
     execution_timestamp, execution_state."""
-    d = _dash_keys(df).withColumn(
-        "_exec_key", keys.dashboard_execution_key(F.col("_dash_key"),
-                                                  F.col("execution_id")))
-    nodes = make_nodes(
-        d, "Execution", F.col("_exec_key"),
-        {"timestamp": F.col("execution_timestamp"),
-         "state": F.col("execution_state")})
-    rels = make_rels(d, DASHBOARD_LABEL, "Execution", F.col("_dash_key"),
-                     F.col("_exec_key"), "EXECUTED", "EXECUTION_OF")
-    return union_graphs(GraphOutput(nodes, rels))
+    exec_key = keys.dashboard_execution_key(F.col("_dash_key"),
+                                            F.col("execution_id"))
+    return graph_from(
+        _dash_keys(df),
+        [node(exec_key, "Execution",
+              {"timestamp": F.col("execution_timestamp"),
+               "state": F.col("execution_state")})],
+        [rel(F.col("_dash_key"), DASHBOARD_LABEL, exec_key, "Execution",
+             "EXECUTED", "EXECUTION_OF")])
 
 
 def expand_dashboard_last_modified(df: DataFrame) -> GraphOutput:
     """DashboardLastModifiedTimestamp (reference:
     models/dashboard/dashboard_last_modified.py). Input: product, cluster,
     dashboard_group_id, dashboard_id, last_modified_timestamp."""
-    d = _dash_keys(df).withColumn(
-        "_ts_key", F.concat(F.col("_dash_key"), F.lit("/_last_modified_timestamp")))
-    nodes = make_nodes(
-        d, "Timestamp", F.col("_ts_key"),
-        {"timestamp": F.col("last_modified_timestamp"),
-         "name": F.lit("last_updated_timestamp")})
-    rels = make_rels(d, DASHBOARD_LABEL, "Timestamp", F.col("_dash_key"),
-                     F.col("_ts_key"), "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF")
-    return union_graphs(GraphOutput(nodes, rels))
+    ts_key = F.concat(F.col("_dash_key"), F.lit("/_last_modified_timestamp"))
+    return graph_from(
+        _dash_keys(df),
+        [node(ts_key, "Timestamp",
+              {"timestamp": F.col("last_modified_timestamp"),
+               "name": F.lit("last_updated_timestamp")})],
+        [rel(F.col("_dash_key"), DASHBOARD_LABEL, ts_key, "Timestamp",
+             "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF")])
 
 
 def expand_dashboard_tables(df: DataFrame, spark) -> GraphOutput:
@@ -176,11 +161,9 @@ def expand_dashboard_tables(df: DataFrame, spark) -> GraphOutput:
     comma-separated full table keys fan out to DASHBOARD_WITH_TABLE
     edges). Input: product, cluster, dashboard_group_id, dashboard_id,
     table_ids."""
-    from amundsendatabuilder_spark.models.base import _empty_nodes
-    d = (_dash_keys(df)
-         .select("_dash_key", F.explode(F.split(F.col("table_ids"), ",")).alias("tbl"))
-         .select("_dash_key", F.trim("tbl").alias("tbl"))
-         .where(F.col("tbl") != ""))
-    rels = make_rels(d, DASHBOARD_LABEL, TABLE_LABEL, F.col("_dash_key"),
-                     F.col("tbl"), "DASHBOARD_WITH_TABLE", "TABLE_OF_DASHBOARD")
-    return union_graphs(GraphOutput(_empty_nodes(spark), rels))
+    tables = F.filter(F.transform(F.split(F.col("table_ids"), ","),
+                                  lambda t: F.trim(t)),
+                      lambda t: t != "")
+    return graph_from(_dash_keys(df), [], [F.transform(tables, lambda t: rel(
+        F.col("_dash_key"), DASHBOARD_LABEL, t, TABLE_LABEL,
+        "DASHBOARD_WITH_TABLE", "TABLE_OF_DASHBOARD"))])

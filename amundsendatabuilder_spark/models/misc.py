@@ -1,25 +1,33 @@
 """Mechanical model expansions (SURVEY §7.3 phase 2): watermark, stats,
 last-updated, owner, source, application, usage, lineage, schema
 description, standalone badges/tags. Each mirrors one reference model's
-node/relationship emission with the documented input schema, projects its
-rows and ends in ``union_graphs``, the one dedup per graph side.
+node/relationship emission with the documented input schema as ``node`` and
+``rel`` elements per input row, which ``graph_from`` explodes once per graph
+side and ends in ``union_graphs``, the one dedup per graph side. Their
+``spark`` parameters are unused, kept for callers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark import keys
-from amundsendatabuilder_spark.models.base import GraphOutput, make_nodes, make_rels, union_graphs
+from amundsendatabuilder_spark.models.base import GraphOutput, graph_from, node, rel
 from amundsendatabuilder_spark.models.table_metadata import COLUMN_LABEL, TABLE_LABEL
 
 USER_LABEL = "User"  # reference: models/user.py:22
 
 
-def _table_key_col(df: DataFrame, db="database", cluster="cluster",
-                   schema="schema", table="table_name"):
+def _table_key_col(db="database", cluster="cluster", schema="schema",
+                   table="table_name"):
     return keys.table_key(F.col(db), F.col(cluster), F.col(schema), F.col(table))
+
+
+def _listed(csv: Column) -> Column:
+    """A comma-separated list, trimmed and lower-cased, blanks dropped."""
+    return F.filter(F.transform(F.split(csv, ","), lambda x: F.lower(F.trim(x))),
+                    lambda x: x != "")
 
 
 def expand_watermarks(df: DataFrame) -> GraphOutput:
@@ -31,15 +39,14 @@ def expand_watermarks(df: DataFrame) -> GraphOutput:
     wk = keys.watermark_key(F.col("database"), F.col("cluster"),
                             F.col("schema"), F.col("table_name"),
                             F.col("part_type"))
-    d = df.withColumn("_wm_key", wk).withColumn("_tbl_key", _table_key_col(df))
-    nodes = make_nodes(
-        d, "Watermark", F.col("_wm_key"),
-        {"partition_key": F.split(F.col("part_name"), "=")[0],
-         "partition_value": F.regexp_extract(F.col("part_name"), r"^[^=]+=(.*)$", 1),
-         "create_time": F.col("create_time")})
-    rels = make_rels(d, "Watermark", TABLE_LABEL, F.col("_wm_key"),
-                     F.col("_tbl_key"), "BELONG_TO_TABLE", "WATERMARK")
-    return union_graphs(GraphOutput(nodes, rels))
+    return graph_from(
+        df,
+        [node(wk, "Watermark",
+              {"partition_key": F.split(F.col("part_name"), "=")[0],
+               "partition_value": F.regexp_extract(F.col("part_name"), r"^[^=]+=(.*)$", 1),
+               "create_time": F.col("create_time")})],
+        [rel(wk, "Watermark", _table_key_col(), TABLE_LABEL,
+             "BELONG_TO_TABLE", "WATERMARK")])
 
 
 def expand_column_stats(df: DataFrame) -> GraphOutput:
@@ -51,14 +58,12 @@ def expand_column_stats(df: DataFrame) -> GraphOutput:
                              F.col("stat_name"))
     col_key = keys.column_key(F.col("db"), F.col("cluster"), F.col("schema"),
                               F.col("table_name"), F.col("col_name"))
-    d = df.withColumn("_stat_key", stat_key).withColumn("_col_key", col_key)
-    nodes = make_nodes(
-        d, "Stat", F.col("_stat_key"),
-        {"stat_type": F.col("stat_name"), "stat_val": F.col("stat_val"),
-         "start_epoch": F.col("start_epoch"), "end_epoch": F.col("end_epoch")})
-    rels = make_rels(d, "Stat", COLUMN_LABEL, F.col("_stat_key"),
-                     F.col("_col_key"), "STAT_OF", "STAT")
-    return union_graphs(GraphOutput(nodes, rels))
+    return graph_from(
+        df,
+        [node(stat_key, "Stat",
+              {"stat_type": F.col("stat_name"), "stat_val": F.col("stat_val"),
+               "start_epoch": F.col("start_epoch"), "end_epoch": F.col("end_epoch")})],
+        [rel(stat_key, "Stat", col_key, COLUMN_LABEL, "STAT_OF", "STAT")])
 
 
 def expand_last_updated(df: DataFrame) -> GraphOutput:
@@ -67,16 +72,14 @@ def expand_last_updated(df: DataFrame) -> GraphOutput:
     db, cluster, schema, table_name, last_updated_time_epoch long."""
     ts_key = keys.timestamp_key(F.col("db"), F.col("cluster"),
                                 F.col("schema"), F.col("table_name"))
-    d = (df.withColumn("_ts_key", ts_key)
-         .withColumn("_tbl_key", _table_key_col(df, db="db")))
-    nodes = make_nodes(
-        d, "Timestamp", F.col("_ts_key"),
-        {"timestamp": F.col("last_updated_time_epoch"),
-         "last_updated_timestamp": F.col("last_updated_time_epoch"),
-         "name": F.lit("last_updated_timestamp")})
-    rels = make_rels(d, TABLE_LABEL, "Timestamp", F.col("_tbl_key"),
-                     F.col("_ts_key"), "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF")
-    return union_graphs(GraphOutput(nodes, rels))
+    return graph_from(
+        df,
+        [node(ts_key, "Timestamp",
+              {"timestamp": F.col("last_updated_time_epoch"),
+               "last_updated_timestamp": F.col("last_updated_time_epoch"),
+               "name": F.lit("last_updated_timestamp")})],
+        [rel(_table_key_col(db="db"), TABLE_LABEL, ts_key, "Timestamp",
+             "LAST_UPDATED_AT", "LAST_UPDATED_TIME_OF")])
 
 
 def expand_table_source(df: DataFrame) -> GraphOutput:
@@ -85,32 +88,26 @@ def expand_table_source(df: DataFrame) -> GraphOutput:
     src_key = F.format_string("%s://%s.%s/%s/_source", F.col("db_name"),
                               F.col("cluster"), F.col("schema"),
                               F.col("table_name"))
-    tbl_key = keys.table_key(F.col("db_name"), F.col("cluster"),
-                             F.col("schema"), F.col("table_name"))
-    d = df.withColumn("_src_key", src_key).withColumn("_tbl_key", tbl_key)
-    nodes = make_nodes(
-        d, "Source", F.col("_src_key"),
-        {"source": F.col("source"), "source_type": F.col("source_type")})
-    rels = make_rels(d, "Source", TABLE_LABEL, F.col("_src_key"),
-                     F.col("_tbl_key"), "SOURCE_OF", "SOURCE")
-    return union_graphs(GraphOutput(nodes, rels))
+    tbl_key = _table_key_col(db="db_name")
+    return graph_from(
+        df,
+        [node(src_key, "Source",
+              {"source": F.col("source"), "source_type": F.col("source_type")})],
+        [rel(src_key, "Source", tbl_key, TABLE_LABEL, "SOURCE_OF", "SOURCE")])
 
 
 def expand_table_owners(df: DataFrame) -> GraphOutput:
     """TableOwner (reference: models/table_owner.py:20-105 — comma-separated
     owner emails fan out to User nodes + OWNER rels). Input: db_name,
     schema, cluster, table_name, owners (comma-separated string)."""
-    tbl_key = keys.table_key(F.col("db_name"), F.col("cluster"),
-                             F.col("schema"), F.col("table_name"))
-    d = (df.withColumn("_tbl_key", tbl_key)
-         .select("_tbl_key", F.explode(F.split(F.col("owners"), ",")).alias("email"))
-         .select("_tbl_key", F.lower(F.trim("email")).alias("email"))
-         .where(F.col("email") != ""))
-    nodes = make_nodes(d, USER_LABEL, keys.user_key(F.col("email")),
-                       {"email": F.col("email")})
-    rels = make_rels(d, USER_LABEL, TABLE_LABEL, F.col("email"),
-                     F.col("_tbl_key"), "OWNER", "OWNER_OF")
-    return union_graphs(GraphOutput(nodes, rels))
+    tbl_key = _table_key_col(db="db_name")
+    emails = _listed(F.col("owners"))
+    return graph_from(
+        df,
+        [F.transform(emails, lambda e: node(keys.user_key(e), USER_LABEL,
+                                            {"email": e}))],
+        [F.transform(emails, lambda e: rel(e, USER_LABEL, tbl_key, TABLE_LABEL,
+                                           "OWNER", "OWNER_OF"))])
 
 
 def expand_applications(df: DataFrame) -> GraphOutput:
@@ -119,19 +116,17 @@ def expand_applications(df: DataFrame) -> GraphOutput:
     db_name, schema, table_name, cluster."""
     app_key = F.format_string("application://%s.airflow/%s/%s",
                               F.col("cluster"), F.col("dag_id"), F.col("task_id"))
-    tbl_key = keys.table_key(F.col("db_name"), F.col("cluster"),
-                             F.col("schema"), F.col("table_name"))
+    tbl_key = _table_key_col(db="db_name")
     url = F.replace(F.col("application_url_template"), F.lit("{dag_id}"),
                     F.col("dag_id"))
-    d = df.withColumn("_app_key", app_key).withColumn("_tbl_key", tbl_key)
-    nodes = make_nodes(
-        d, "Application", F.col("_app_key"),
-        {"application_url": url, "apache_airflow": F.lit(True),
-         "id": F.format_string("%s/%s", F.col("dag_id"), F.col("task_id")),
-         "name": F.lit("Airflow"), "description": F.lit("Airflow with id")})
-    rels = make_rels(d, TABLE_LABEL, "Application", F.col("_tbl_key"),
-                     F.col("_app_key"), "DERIVED_FROM", "GENERATES")
-    return union_graphs(GraphOutput(nodes, rels))
+    return graph_from(
+        df,
+        [node(app_key, "Application",
+              {"application_url": url, "apache_airflow": F.lit(True),
+               "id": F.format_string("%s/%s", F.col("dag_id"), F.col("task_id")),
+               "name": F.lit("Airflow"), "description": F.lit("Airflow with id")})],
+        [rel(tbl_key, TABLE_LABEL, app_key, "Application",
+             "DERIVED_FROM", "GENERATES")])
 
 
 def expand_column_usage(df: DataFrame, spark=None) -> GraphOutput:
@@ -139,50 +134,44 @@ def expand_column_usage(df: DataFrame, spark=None) -> GraphOutput:
     table-level usage edges Table-[READ_BY]->User with read_count; user
     node emitted too). Input: database, cluster, schema, table_name,
     column_name ('*'), user_email, read_count long."""
-    d = df.withColumn("_tbl_key", _table_key_col(df))
-    nodes = make_nodes(d, USER_LABEL, keys.user_key(F.col("user_email")),
-                       {"email": F.col("user_email")})
-    rels = make_rels(d, TABLE_LABEL, USER_LABEL, F.col("_tbl_key"),
-                     F.col("user_email"), "READ_BY", "READ",
-                     {"read_count": F.col("read_count")})
-    return union_graphs(GraphOutput(nodes, rels))
+    return graph_from(
+        df,
+        [node(keys.user_key(F.col("user_email")), USER_LABEL,
+              {"email": F.col("user_email")})],
+        [rel(_table_key_col(), TABLE_LABEL, F.col("user_email"), USER_LABEL,
+             "READ_BY", "READ", {"read_count": F.col("read_count")})])
 
 
 def expand_table_lineage(df: DataFrame, spark) -> GraphOutput:
     """TableLineage (reference: models/table_lineage.py:18-90): pure edge
     model Table-[HAS_DOWNSTREAM]->Table. Input: source_table_key,
     target_table_key (full keys)."""
-    from amundsendatabuilder_spark.models.base import _empty_nodes
-    rels = make_rels(df, TABLE_LABEL, TABLE_LABEL,
-                     F.col("source_table_key"), F.col("target_table_key"),
-                     "HAS_DOWNSTREAM", "HAS_UPSTREAM")
-    return union_graphs(GraphOutput(_empty_nodes(spark), rels))
+    return graph_from(df, [], [rel(
+        F.col("source_table_key"), TABLE_LABEL, F.col("target_table_key"),
+        TABLE_LABEL, "HAS_DOWNSTREAM", "HAS_UPSTREAM")])
 
 
 def expand_column_lineage(df: DataFrame, spark) -> GraphOutput:
     """ColumnLineage (reference: models/table_lineage.py:93-130). Input:
     source_column_key, target_column_key."""
-    from amundsendatabuilder_spark.models.base import _empty_nodes
-    rels = make_rels(df, COLUMN_LABEL, COLUMN_LABEL,
-                     F.col("source_column_key"), F.col("target_column_key"),
-                     "HAS_DOWNSTREAM", "HAS_UPSTREAM")
-    return union_graphs(GraphOutput(_empty_nodes(spark), rels))
+    return graph_from(df, [], [rel(
+        F.col("source_column_key"), COLUMN_LABEL, F.col("target_column_key"),
+        COLUMN_LABEL, "HAS_DOWNSTREAM", "HAS_UPSTREAM")])
 
 
 def expand_schema_descriptions(df: DataFrame) -> GraphOutput:
     """SchemaModel (reference: models/schema/schema.py). Input: schema_key
     ('{db}://{cluster}.{schema}'), schema, description."""
-    d = df.where(F.col("description").isNotNull() & (F.col("description") != ""))
+    has_desc = F.col("description").isNotNull() & (F.col("description") != "")
     desc_key = F.concat(F.col("schema_key"), F.lit("/_description"))
-    nodes = make_nodes(
-        d, "Description", desc_key,
-        {"description": F.col("description"),
-         "description_source": F.lit("description")})
-    schema_nodes = make_nodes(df, "Schema", F.col("schema_key"),
-                              {"name": F.col("schema")})
-    rels = make_rels(d, "Schema", "Description", F.col("schema_key"),
-                     desc_key, "DESCRIPTION", "DESCRIPTION_OF")
-    return union_graphs(GraphOutput(schema_nodes.unionByName(nodes), rels))
+    return graph_from(
+        df,
+        [node(F.col("schema_key"), "Schema", {"name": F.col("schema")}),
+         F.when(has_desc, node(desc_key, "Description",
+                               {"description": F.col("description"),
+                                "description_source": F.lit("description")}))],
+        [F.when(has_desc, rel(F.col("schema_key"), "Schema", desc_key,
+                              "Description", "DESCRIPTION", "DESCRIPTION_OF"))])
 
 
 def expand_badges(df: DataFrame, spark) -> GraphOutput:
@@ -190,17 +179,13 @@ def expand_badges(df: DataFrame, spark) -> GraphOutput:
     out to Badge nodes + HAS_BADGE rels on the table. Input: name
     (comma-separated badges), category, database, cluster, schema,
     table_name."""
-    tbl_key = _table_key_col(df)
-    d = (df.withColumn("_tbl_key", tbl_key)
-         .select("_tbl_key", "category",
-                 F.explode(F.split(F.col("name"), ",")).alias("badge"))
-         .select("_tbl_key", "category", F.lower(F.trim("badge")).alias("badge"))
-         .where(F.col("badge") != ""))
-    nodes = make_nodes(d, "Badge", F.col("badge"),
-                       {"category": F.col("category")})
-    rels = make_rels(d, TABLE_LABEL, "Badge", F.col("_tbl_key"),
-                     F.col("badge"), "HAS_BADGE", "BADGE_FOR")
-    return union_graphs(GraphOutput(nodes, rels))
+    badges = _listed(F.col("name"))
+    return graph_from(
+        df,
+        [F.transform(badges, lambda b: node(b, "Badge",
+                                            {"category": F.col("category")}))],
+        [F.transform(badges, lambda b: rel(_table_key_col(), TABLE_LABEL, b,
+                                           "Badge", "HAS_BADGE", "BADGE_FOR"))])
 
 
 # Badge start-key patterns per start label (reference: models/badge.py:52-59
@@ -243,17 +228,18 @@ def expand_users(df: DataFrame) -> GraphOutput:
     edge (:207-212). Input: email, first_name, last_name, full_name,
     github_username, team_name, employee_type, manager_email, slack_id,
     role_name."""
-    nodes = make_nodes(
-        df, USER_LABEL, keys.user_key(F.col("email")),
-        {"email": F.col("email"), "first_name": F.col("first_name"),
-         "last_name": F.col("last_name"), "full_name": F.col("full_name"),
-         "github_username": F.col("github_username"),
-         "team_name": F.col("team_name"),
-         "employee_type": F.col("employee_type"),
-         "slack_id": F.col("slack_id"), "role_name": F.col("role_name"),
-         "is_active": F.lit(True), "updated_at": F.lit(0)})
-    managers = df.where(F.col("manager_email").isNotNull()
-                        & (F.col("manager_email") != ""))
-    rels = make_rels(managers, USER_LABEL, USER_LABEL, F.col("email"),
-                     F.col("manager_email"), "MANAGE_BY", "MANAGE")
-    return union_graphs(GraphOutput(nodes, rels))
+    has_manager = (F.col("manager_email").isNotNull()
+                   & (F.col("manager_email") != ""))
+    return graph_from(
+        df,
+        [node(keys.user_key(F.col("email")), USER_LABEL,
+              {"email": F.col("email"), "first_name": F.col("first_name"),
+               "last_name": F.col("last_name"), "full_name": F.col("full_name"),
+               "github_username": F.col("github_username"),
+               "team_name": F.col("team_name"),
+               "employee_type": F.col("employee_type"),
+               "slack_id": F.col("slack_id"), "role_name": F.col("role_name"),
+               "is_active": F.lit(True), "updated_at": F.lit(0)})],
+        [F.when(has_manager, rel(F.col("email"), USER_LABEL,
+                                 F.col("manager_email"), USER_LABEL,
+                                 "MANAGE_BY", "MANAGE"))])

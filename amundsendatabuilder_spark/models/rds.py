@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark import keys
+from amundsendatabuilder_spark.models.table_metadata import _with_keys
 
 # parents before children — mirrors Base.metadata.sorted_tables semantics
 FK_ORDER = ["database", "cluster", "schema", "table", "table_description",
@@ -25,12 +26,7 @@ FK_ORDER = ["database", "cluster", "schema", "table", "table_description",
 def expand_relational(tables: DataFrame) -> dict[str, DataFrame]:
     """TableMetadata input -> {table_name: normalized rows} with the key
     scheme of §1.4 as primary/foreign keys."""
-    db, cl, sc, tb = (F.col(c) for c in ("database", "cluster", "schema", "name"))
-    t = (tables
-         .withColumn("_db_key", keys.database_key(db))
-         .withColumn("_cluster_key", keys.cluster_key(db, cl))
-         .withColumn("_schema_key", keys.schema_key(db, cl, sc))
-         .withColumn("_table_key", keys.table_key(db, cl, sc, tb)))
+    t = _with_keys(tables)
 
     out: dict[str, DataFrame] = {}
     out["database"] = t.select(F.col("_db_key").alias("rk"),

@@ -13,23 +13,24 @@ sources/csv_source.py produce exactly this):
     columns array<struct<name string, description string, col_type string,
                          sort_order int, badges array<string>>>
 
-The expansion is pure column algebra: key templates from keys.py, one
-``explode`` for columns, one for tags/badges. It only projects rows: the
-low-cardinality parents repeat once per table until the closing
-``union_graphs``, the one dedup per graph side (set-level replacement for
-the reference's class-level serialized-key set, table_metadata.py:323-326 —
-SURVEY §7.4).
+The expansion is pure column algebra: key templates from keys.py and, per
+table row, the reference's emission as ``node``/``rel`` elements (the
+table, its description, ``transform`` over tags, and over columns with
+their descriptions and badges, then the parents), which ``graph_from``
+explodes once per graph side. The low-cardinality parents repeat once per
+table until the closing ``union_graphs``, the one dedup per graph side
+(set-level replacement for the reference's class-level serialized-key set,
+table_metadata.py:323-326 — SURVEY §7.4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from amundsendatabuilder_spark import keys
 from amundsendatabuilder_spark.functions.scalars import normalize_tags
-from amundsendatabuilder_spark.models.base import GraphOutput, make_nodes, make_rels, union_graphs
+from amundsendatabuilder_spark.models.base import GraphOutput, graph_from, node, rel
 
 # labels / relation types — reference: databuilder/models/table_metadata.py
 TABLE_LABEL = "Table"                       # :295
@@ -41,14 +42,6 @@ PROG_DESCRIPTION_LABEL = "Programmatic_Description"  # :122
 COLUMN_LABEL = "Column"                     # :248
 TAG_LABEL = "Tag"                           # :45
 BADGE_LABEL = "Badge"                       # models/badge.py:37
-
-COLUMNS_FIELD_SCHEMA = T.ArrayType(T.StructType([
-    T.StructField("name", T.StringType()),
-    T.StructField("description", T.StringType()),
-    T.StructField("col_type", T.StringType()),
-    T.StructField("sort_order", T.IntegerType()),
-    T.StructField("badges", T.ArrayType(T.StringType())),
-]))
 
 
 def _with_keys(tables: DataFrame) -> DataFrame:
@@ -65,117 +58,88 @@ def _with_keys(tables: DataFrame) -> DataFrame:
     return out
 
 
+def _badges(c: Column) -> Column:
+    """A column's badges, trimmed and lower-cased, blanks dropped."""
+    badges = F.coalesce(c["badges"], F.array().cast("array<string>"))
+    return F.filter(F.transform(badges, lambda b: F.lower(F.trim(b))),
+                    lambda b: b != "")
+
+
 def expand_tables(tables: DataFrame) -> GraphOutput:
     """TableMetadata DataFrame -> (nodes, rels), semantics of
     databuilder/models/table_metadata.py:427-598."""
     t = _with_keys(tables)
-
-    # --- nodes ------------------------------------------------------------
-    table_nodes = make_nodes(
-        t, TABLE_LABEL, F.col("_table_key"),
-        {"name": F.col("name"),
-         "is_view": F.coalesce(F.col("is_view"), F.lit(False))})
-    # low-cardinality parents (reference :490-509)
-    db_nodes = make_nodes(t, DATABASE_LABEL, F.col("_db_key"),
-                          {"name": F.col("database")})
-    cluster_nodes = make_nodes(t, CLUSTER_LABEL, F.col("_cluster_key"),
-                               {"name": F.col("cluster")})
-    schema_nodes = make_nodes(t, SCHEMA_LABEL, F.col("_schema_key"),
-                              {"name": F.col("schema")})
+    table_key = F.col("_table_key")
 
     # description node: default source -> Description; other source ->
     # Programmatic_Description (reference :143-150,176-183)
-    desc = t.where(F.col("description").isNotNull() & (F.col("description") != ""))
-    is_default_src = (F.col("description_source").isNull()
-                      | (F.col("description_source") == "")
-                      | (F.col("description_source") == "description"))
-    desc_nodes = desc.select(
-        keys.description_key(F.col("_table_key"), F.col("description_source"))
-        .alias("KEY"),
-        F.when(is_default_src, F.lit(DESCRIPTION_LABEL))
-        .otherwise(F.lit(PROG_DESCRIPTION_LABEL)).alias("LABEL"),
-        F.map_filter(
-            F.create_map(
-                F.lit("description"), F.col("description"),
-                F.lit("description_source"),
-                F.coalesce(F.col("description_source"), F.lit("description"))),
-            lambda _, v: v.isNotNull()).alias("props"))
+    has_desc = F.col("description").isNotNull() & (F.col("description") != "")
+    desc_key = keys.description_key(table_key, F.col("description_source"))
+    desc_label = F.when(
+        F.col("description_source").isNull()
+        | F.col("description_source").isin("", "description"),
+        F.lit(DESCRIPTION_LABEL)).otherwise(F.lit(PROG_DESCRIPTION_LABEL))
 
-    tag_rows = t.select("_table_key", F.explode("tags").alias("tag"))
-    tag_nodes = make_nodes(tag_rows, TAG_LABEL, keys.tag_key(F.col("tag")),
-                           {"tag_type": F.lit("default")})
+    def col_key(c: Column) -> Column:
+        return keys.column_key(F.col("database"), F.col("cluster"),
+                               F.col("schema"), F.col("name"), c["name"])
 
-    cols = t.select(
-        "_db_key", "_cluster_key", "_schema_key", "_table_key",
-        "database", "cluster", "schema", "name",
-        F.explode("columns").alias("c"))
-    cols = cols.withColumn(
-        "_col_key",
-        keys.column_key(F.col("database"), F.col("cluster"), F.col("schema"),
-                        F.col("name"), F.col("c.name")))
-    col_nodes = make_nodes(
-        cols, COLUMN_LABEL, F.col("_col_key"),
-        {"name": F.col("c.name"), "col_type": F.col("c.col_type"),
-         "sort_order": F.col("c.sort_order")})
-    col_desc = cols.where(F.col("c.description").isNotNull()
-                          & (F.col("c.description") != ""))
-    col_desc_nodes = make_nodes(
-        col_desc, DESCRIPTION_LABEL,
-        keys.description_key(F.col("_col_key")),
-        {"description": F.col("c.description"),
-         "description_source": F.lit("description")})
+    def col_has_desc(c: Column) -> Column:
+        return c["description"].isNotNull() & (c["description"] != "")
 
-    badge_rows = cols.select(
-        "_col_key", F.explode(F.coalesce(F.col("c.badges"),
-                                         F.array().cast("array<string>"))).alias("badge"))
-    badge_rows = badge_rows.select(
-        "_col_key", F.lower(F.trim("badge")).alias("badge")).where(F.col("badge") != "")
-    badge_nodes = make_nodes(badge_rows, BADGE_LABEL, F.col("badge"),
-                             {"category": F.lit("column")})
+    def per_column(elements) -> Column:
+        """Every column's elements, in column order."""
+        return F.flatten(F.transform("columns", elements))
 
-    # --- relationships (reference :517-598) --------------------------------
-    db_cluster = make_rels(t, DATABASE_LABEL, CLUSTER_LABEL,
-                           F.col("_db_key"), F.col("_cluster_key"),
-                           "CLUSTER", "CLUSTER_OF")
-    cluster_schema = make_rels(t, CLUSTER_LABEL, SCHEMA_LABEL,
-                               F.col("_cluster_key"), F.col("_schema_key"),
-                               "SCHEMA", "SCHEMA_OF")
-    schema_table = make_rels(t, SCHEMA_LABEL, TABLE_LABEL,
-                             F.col("_schema_key"), F.col("_table_key"),
-                             "TABLE", "TABLE_OF")
-    table_desc = desc.select(
-        F.col("_table_key").alias("START_KEY"),
-        F.lit(TABLE_LABEL).alias("START_LABEL"),
-        keys.description_key(F.col("_table_key"), F.col("description_source"))
-        .alias("END_KEY"),
-        F.when(is_default_src, F.lit(DESCRIPTION_LABEL))
-        .otherwise(F.lit(PROG_DESCRIPTION_LABEL)).alias("END_LABEL"),
-        F.lit("DESCRIPTION").alias("TYPE"),
-        F.lit("DESCRIPTION_OF").alias("REVERSE_TYPE"),
-        F.create_map().cast("map<string,string>").alias("props"))
-    # reference :534-543: Table-[TAGGED_BY]->Tag, reverse TAG
-    table_tag = make_rels(tag_rows, TABLE_LABEL, TAG_LABEL,
-                          F.col("_table_key"), F.col("tag"),
-                          "TAGGED_BY", "TAG")
-    table_col = make_rels(cols, TABLE_LABEL, COLUMN_LABEL,
-                          F.col("_table_key"), F.col("_col_key"),
-                          "COLUMN", "COLUMN_OF")
-    col_desc_rel = make_rels(col_desc, COLUMN_LABEL, DESCRIPTION_LABEL,
-                             F.col("_col_key"),
-                             keys.description_key(F.col("_col_key")),
-                             "DESCRIPTION", "DESCRIPTION_OF")
-    col_badge = make_rels(badge_rows, COLUMN_LABEL, BADGE_LABEL,
-                          F.col("_col_key"), F.col("badge"),
-                          "HAS_BADGE", "BADGE_FOR")
-
-    all_nodes = [table_nodes, db_nodes, cluster_nodes, schema_nodes,
-                 desc_nodes, tag_nodes, col_nodes, col_desc_nodes, badge_nodes]
-    all_rels = [db_cluster, cluster_schema, schema_table, table_desc,
-                table_tag, table_col, col_desc_rel, col_badge]
-    nodes = all_nodes[0]
-    for n in all_nodes[1:]:
-        nodes = nodes.unionByName(n)
-    rels = all_rels[0]
-    for r in all_rels[1:]:
-        rels = rels.unionByName(r)
-    return union_graphs(GraphOutput(nodes, rels))
+    nodes = [
+        node(table_key, TABLE_LABEL,
+             {"name": F.col("name"),
+              "is_view": F.coalesce(F.col("is_view"), F.lit(False))}),
+        F.when(has_desc, node(desc_key, desc_label, {
+            "description": F.col("description"),
+            "description_source": F.coalesce(F.col("description_source"),
+                                             F.lit("description"))})),
+        F.transform("tags", lambda tag: node(keys.tag_key(tag), TAG_LABEL,
+                                             {"tag_type": F.lit("default")})),
+        per_column(lambda c: F.concat(
+            F.array(
+                node(col_key(c), COLUMN_LABEL,
+                     {"name": c["name"], "col_type": c["col_type"],
+                      "sort_order": c["sort_order"]}),
+                F.when(col_has_desc(c), node(
+                    keys.description_key(col_key(c)), DESCRIPTION_LABEL,
+                    {"description": c["description"],
+                     "description_source": F.lit("description")}))),
+            F.transform(_badges(c), lambda b: node(
+                b, BADGE_LABEL, {"category": F.lit("column")})))),
+        # low-cardinality parents (reference :490-509)
+        node(F.col("_db_key"), DATABASE_LABEL, {"name": F.col("database")}),
+        node(F.col("_cluster_key"), CLUSTER_LABEL, {"name": F.col("cluster")}),
+        node(F.col("_schema_key"), SCHEMA_LABEL, {"name": F.col("schema")}),
+    ]
+    # relationships (reference :517-598)
+    rels = [
+        rel(F.col("_schema_key"), SCHEMA_LABEL, table_key, TABLE_LABEL,
+            "TABLE", "TABLE_OF"),
+        F.when(has_desc, rel(table_key, TABLE_LABEL, desc_key, desc_label,
+                             "DESCRIPTION", "DESCRIPTION_OF")),
+        # reference :534-543: Table-[TAGGED_BY]->Tag, reverse TAG
+        F.transform("tags", lambda tag: rel(table_key, TABLE_LABEL, tag,
+                                            TAG_LABEL, "TAGGED_BY", "TAG")),
+        per_column(lambda c: F.concat(
+            F.array(
+                rel(table_key, TABLE_LABEL, col_key(c), COLUMN_LABEL,
+                    "COLUMN", "COLUMN_OF"),
+                F.when(col_has_desc(c), rel(
+                    col_key(c), COLUMN_LABEL,
+                    keys.description_key(col_key(c)), DESCRIPTION_LABEL,
+                    "DESCRIPTION", "DESCRIPTION_OF"))),
+            F.transform(_badges(c), lambda b: rel(
+                col_key(c), COLUMN_LABEL, b, BADGE_LABEL,
+                "HAS_BADGE", "BADGE_FOR")))),
+        rel(F.col("_db_key"), DATABASE_LABEL, F.col("_cluster_key"),
+            CLUSTER_LABEL, "CLUSTER", "CLUSTER_OF"),
+        rel(F.col("_cluster_key"), CLUSTER_LABEL, F.col("_schema_key"),
+            SCHEMA_LABEL, "SCHEMA", "SCHEMA_OF"),
+    ]
+    return graph_from(t, nodes, rels)

@@ -33,14 +33,7 @@ def get_spark(app_name: str = "amundsendatabuilder_spark",
                 str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r15 (guide §2.2/§9 + Spark's own tuning doc): respect the
-        # advisory partition size when coalescing instead of maximizing
-        # parallelism — post-shuffle partitions target
-        # advisoryPartitionSizeInBytes (64 MB default) at every scale,
-        # so register-sized shuffles collapse to one partition locally
-        # AND cluster shuffles keep the 64 MB-1 GB-range partitions §2.2
-        # calls for. Measured ≥ neutral on every probe query (q1
-        # 0.70→0.44 min, flagship 0.57→0.53, sessionize ~flat).
+        # coalesce to the advisory partition size, not to max parallelism
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
                 "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

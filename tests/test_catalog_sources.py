@@ -409,3 +409,84 @@ def test_delta_catalog_walk(spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS cat_test.t1")
         spark.sql("DROP DATABASE IF EXISTS cat_test")
+
+
+def test_hive_last_updated_split(spark, tmp_path):
+    """HiveTableLastUpdated: partitioned tables take MAX(create_time);
+    the rest (left_anti) take the newest file mtime under their location,
+    in epoch seconds."""
+    import os
+
+    from amundsendatabuilder_spark.sources.hive import (
+        last_updated_from_files, last_updated_from_partitions,
+        non_partitioned_tables)
+    parts = spark.createDataFrame(
+        [("s", "p1", 10), ("s", "p1", 30), ("s", "p2", 20)],
+        "schema string, table_name string, create_time long")
+    assert sorted(tuple(r) for r in last_updated_from_partitions(parts).collect()) \
+        == [("s", "p1", 30), ("s", "p2", 20)]
+
+    locs = {}
+    for name, mtimes in (("t1", [1_600_000_000, 1_600_000_500]),
+                         ("t2", [1_700_000_000])):
+        d = tmp_path / name
+        d.mkdir()
+        for i, m in enumerate(mtimes):
+            f = d / f"part-{i}"
+            f.write_text("x")
+            os.utime(f, (m, m))
+        locs[name] = str(d)
+    tables = spark.createDataFrame(
+        [("s", "p1", "unused"), ("s", "t1", locs["t1"]), ("s", "t2", locs["t2"])],
+        "schema string, table_name string, location string")
+    rest = non_partitioned_tables(tables, parts)
+    assert sorted(r["table_name"] for r in rest.collect()) == ["t1", "t2"]
+    got = {r["location"]: r["last_updated_time_epoch"]
+           for r in last_updated_from_files(spark, rest).collect()}
+    assert got == {locs["t1"]: 1_600_000_500, locs["t2"]: 1_700_000_000}
+    empty = last_updated_from_files(spark, rest.limit(0))
+    assert empty.columns == ["location", "last_updated_time_epoch"]
+    assert empty.count() == 0
+
+
+def test_bigquery_usage_counts_filters_and_counts(spark):
+    from amundsendatabuilder_spark.sources.bigquery import usage_counts
+    done = "jobservice.jobcompleted"
+    logs = spark.createDataFrame(
+        [("p", "d", "t", "a@x.com", done, "bigquery_resource", 1),
+         ("p", "d", "t", "a@x.com", "google.cloud.bigquery.v2.JobService.InsertJob",
+          "bigquery_resource", 2),
+         ("p", "d", "t", "b@x.com", done, "bigquery_resource", 3),
+         ("p", "d", "t", "not-an-email", done, "bigquery_resource", 4),
+         ("p", "d", "t", "c@x.com", "tabledata.list", "bigquery_resource", 5),
+         ("p", "d", "t", "c@x.com", done, "gce_instance", 6)],
+        "project_id string, dataset_id string, table_id string, email string, "
+        "method string, resource_type string, ts long")
+    assert sorted(tuple(r) for r in usage_counts(logs).collect()) == [
+        ("p", "d", "t", "a@x.com", 2), ("p", "d", "t", "b@x.com", 1)]
+
+
+def test_tableau_metadata_query_flattens_payload(spark):
+    from amundsendatabuilder_spark.sources.dashboards import tableau_metadata_query
+    sent = []
+
+    def post(query):
+        sent.append(query)
+        return {"data": {"workbooks": [{"id": "w1", "name": "A"},
+                                       {"id": "w2", "name": "B"}, "skip"],
+                         "count": 2}}
+
+    df = tableau_metadata_query(spark, post, "{ workbooks { id name } }")
+    assert sent == ["{ workbooks { id name } }"]
+    assert sorted((r["id"], r["name"]) for r in df.collect()) == [
+        ("w1", "A"), ("w2", "B")]
+    for payload in ({}, {"data": {}}, None):
+        empty = tableau_metadata_query(spark, lambda q: payload, "q")
+        assert empty.columns == ["id"] and empty.count() == 0
+
+
+def test_es_last_updated_single_record(spark):
+    from amundsendatabuilder_spark.sources.catalog_apis import es_last_updated
+    df = es_last_updated(spark, 1_700_000_000)
+    assert df.schema.simpleString() == "struct<timestamp:bigint>"
+    assert [tuple(r) for r in df.collect()] == [(1_700_000_000,)]

@@ -131,6 +131,35 @@ def test_chained_fanout_ordering(spark):
     assert filtered.count() == 4
 
 
+def test_job_first_added_model_wins_user_props(spark, tmp_path, fixtures_dir):
+    """The directory users and the usage readers emit the same User keys:
+    the model added first keeps its row, so the one staged User shard
+    with ``first_name`` holds exactly the 4 directory users, full props."""
+    import csv
+    import glob
+    import os
+
+    from amundsendatabuilder_spark.jobs import CatalogJob
+    from amundsendatabuilder_spark.models.misc import expand_column_usage, expand_users
+    from amundsendatabuilder_spark.sources.csv_source import read_csv
+    fx = os.path.join(fixtures_dir, "reference_sample_data")
+    job = (CatalogJob(spark, publish_tag="first_wins")
+           .add(expand_users(read_csv(spark, f"{fx}/sample_user.csv")))
+           .add(expand_column_usage(read_csv(spark, f"{fx}/sample_column_usage.csv"))))
+    out = tmp_path / "g"
+    job.run(stage_dir=str(out))
+    full = []
+    for part in glob.glob(f"{out}/nodes/User_*/part*.csv"):
+        with open(part) as fh:
+            rows = list(csv.DictReader(fh))
+        if rows and "first_name" in rows[0]:
+            full.append(rows)
+    assert len(full) == 1
+    with open(f"{fx}/sample_user.csv") as fh:
+        directory = {r["email"]: r["first_name"] for r in csv.DictReader(fh)}
+    assert {r["KEY"]: r["first_name"] for r in full[0]} == directory
+
+
 def test_golden_end_to_end_reference_sample_scenario(spark, tmp_path,
                                                      fixtures_dir):
     """The reference's golden scenario as ONE test (r9 verdict item #8):

@@ -516,3 +516,100 @@ def test_match_path_rel_property_predicate(tables_df):
                             {"read_count": (">", 10)})]).collect()
     assert [r.n1_key for r in got] == ["u2"]
     assert got[0].r1_props["read_count"] == "50"
+
+
+_NODE_SCHEMA = "KEY string, LABEL string, props map<string,string>"
+_REL_SCHEMA = ("START_KEY string, START_LABEL string, END_KEY string, "
+               "END_LABEL string, TYPE string, REVERSE_TYPE string, "
+               "props map<string,string>")
+
+
+def _winners(out):
+    return ({r["KEY"]: r["props"] for r in out.nodes.collect()},
+            {r["START_KEY"]: r["props"] for r in out.rels.collect()})
+
+
+def test_union_graphs_winner_ignores_row_order_and_partitioning(spark):
+    """Two rows with one key and different props: the same row wins
+    whatever the input order and partitioning (least sorted props here,
+    since neither frame carries an element position)."""
+    from amundsendatabuilder_spark.models.base import GraphOutput, union_graphs
+    node_rows = [("k", "User", {"email": "b@x", "name": "B"}),
+                 ("k", "User", {"email": "a@x"})]
+    rel_rows = [("k", "User", "t", "Table", "OWNER", "OWNER_OF", {"w": "2"}),
+                ("k", "User", "t", "Table", "OWNER", "OWNER_OF", {"w": "1"})]
+    got = set()
+    for order in (1, -1):
+        nodes = spark.createDataFrame(node_rows[::order], _NODE_SCHEMA)
+        rels = spark.createDataFrame(rel_rows[::order], _REL_SCHEMA)
+        for parts in (1, 8):
+            n, r = _winners(union_graphs(GraphOutput(
+                nodes.repartition(parts), rels.repartition(parts))))
+            got.add((tuple(sorted(n["k"].items())), tuple(r["k"].items())))
+    assert got == {((("email", "a@x"),), (("w", "1"),))}
+
+
+def test_union_graphs_element_position_beats_props(spark):
+    """Within one frame the least element position ``_pos`` wins; the
+    column never leaves ``union_graphs``."""
+    from amundsendatabuilder_spark.models.base import GraphOutput, union_graphs
+    nodes = spark.createDataFrame(
+        [(0, "k", "User", {"email": "b@x"}), (3, "k", "User", {"email": "a@x"})],
+        "_pos int, " + _NODE_SCHEMA)
+    rels = spark.createDataFrame(
+        [(2, "k", "User", "t", "Table", "OWNER", "OWNER_OF", {"w": "1"}),
+         (1, "k", "User", "t", "Table", "OWNER", "OWNER_OF", {"w": "2"})],
+        "_pos int, " + _REL_SCHEMA)
+    out = union_graphs(GraphOutput(nodes.repartition(8), rels.repartition(8)))
+    assert out.nodes.columns == ["KEY", "LABEL", "props"]
+    assert out.rels.columns == ["START_KEY", "START_LABEL", "END_KEY",
+                                "END_LABEL", "TYPE", "REVERSE_TYPE", "props"]
+    assert _winners(out) == ({"k": {"email": "b@x"}}, {"k": {"w": "2"}})
+
+
+def test_union_graphs_first_input_wins(spark):
+    """Across inputs the first one passed wins, for nodes and for rels,
+    whatever its props."""
+    from amundsendatabuilder_spark.models.base import GraphOutput, union_graphs
+
+    def graph(email, w):
+        return GraphOutput(
+            spark.createDataFrame([("k", "User", {"email": email})],
+                                  _NODE_SCHEMA),
+            spark.createDataFrame(
+                [("k", "User", "t", "Table", "OWNER", "OWNER_OF", {"w": w})],
+                _REL_SCHEMA))
+
+    first, second = graph("z@x", "9"), graph("a@x", "1")
+    assert _winners(union_graphs(first, second)) == (
+        {"k": {"email": "z@x"}}, {"k": {"w": "9"}})
+    assert _winners(union_graphs(second, first)) == (
+        {"k": {"email": "a@x"}}, {"k": {"w": "1"}})
+
+
+def test_graph_from_drops_null_elements_and_keys(spark):
+    """``graph_from`` explodes single elements and element arrays once per
+    side; NULL elements, NULL arrays and NULL keys emit nothing, and an
+    expansion with no nodes gets the standard empty node schema."""
+    from amundsendatabuilder_spark.models.base import graph_from, node, rel
+    df = spark.createDataFrame(
+        [("t1", ["a", None]), ("t2", None), (None, ["b"])],
+        "name string, tags array<string>")
+    out = graph_from(
+        df,
+        [node(F.col("name"), "Table"),
+         F.when(F.col("name") == "t1", node(F.lit("d1"), "Description")),
+         F.transform("tags", lambda t: node(t, "Tag", {"n": F.col("name")}))],
+        [F.transform("tags", lambda t: rel(F.col("name"), "Table", t, "Tag",
+                                           "TAGGED_BY", "TAG"))])
+    assert sorted((r["KEY"], r["LABEL"], dict(r["props"]))
+                  for r in out.nodes.collect()) == [
+        ("a", "Tag", {"n": "t1"}), ("b", "Tag", {}), ("d1", "Description", {}),
+        ("t1", "Table", {}), ("t2", "Table", {})]
+    assert [(r["START_KEY"], r["END_KEY"]) for r in out.rels.collect()] == [
+        ("t1", "a")]
+    rels_only = graph_from(df, [], [rel(F.col("name"), "Table", F.lit("x"),
+                                        "Thing", "HAS", "HAS_OF")])
+    assert rels_only.nodes.schema.simpleString() == (
+        "struct<KEY:string,LABEL:string,props:map<string,string>>")
+    assert rels_only.nodes.count() == 0
