@@ -957,11 +957,10 @@ def logreg_train(docs: DataFrame, iters: int = 4, lr: float = 0.5,
                                   hex_chars=hex_chars)).localCheckpoint()
     y = docs.select(F.col(id_col).alias("doc_id"),
                     y_expr.cast("int").alias("y"))
-    # r15: materialize the 1-row corpus count ONCE — it is broadcast
-    # into every GD round's update, and an unmaterialized agg re-counts
-    # the corpus per round (iters extra corpus scans for one long)
-    n1 = (docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-          .coalesce(1).localCheckpoint())
+    # materialize the 1-row corpus count ONCE — it is broadcast into
+    # every GD round's update, and an unmaterialized agg re-counts the
+    # corpus per round (iters extra corpus scans for one long)
+    n1 = docs.agg(F.count(F.lit(1)).cast("long").alias("n")).localCheckpoint()
     # runtime half of the contract (r12 verdict item #5): the plan-time
     # check trusts the DECLARED width, but the register row count is
     # data-dependent (a featurizer emitting buckets outside its declared
@@ -971,15 +970,13 @@ def logreg_train(docs: DataFrame, iters: int = 4, lr: float = 0.5,
     # single-partition BY DESIGN: it runs over the register (<= declared
     # rows by contract), never the corpus, and the localCheckpoint
     # materializes it exactly once.
-    # one-partition checkpoints (here and per round below): each round
-    # runs one task over the register, not a shuffle-width task wave
     w = (feats.select("bucket").distinct()
          .select("bucket", guard_register_domain(
              F.lit(0).cast("long"),
              F.row_number().over(Window.orderBy("bucket")),
              "logreg weight register (distinct buckets)",
              limit=declared).alias("w_e9"))
-         .coalesce(1).localCheckpoint())
+         .localCheckpoint())
     for _ in range(int(iters)):
         m = (feats.join(F.broadcast(w), "bucket")
              .groupBy("doc_id")
@@ -1010,7 +1007,7 @@ def logreg_train(docs: DataFrame, iters: int = 4, lr: float = 0.5,
                  F.coalesce(F.col("g_e9"), F.lit(0)).cast("double")
                  * lr / F.col("n").cast("double"), 0).cast("long"))
                  .cast("long").alias("w_e9"))
-             .coalesce(1).localCheckpoint())
+             .localCheckpoint())
     return w.select(
         "bucket",
         round_half_away(F.col("w_e9").cast("double") / 1e9, 6)

@@ -16,23 +16,10 @@ checkpoint every few hops to cut the lineage of the growing plan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark.session import shuffle_width
-
-
-def _register_parts(spark: SparkSession, n_rows: int,
-                    rows_per_part: int = 2_000_000) -> int:
-    """Partition count for an n_rows iteration-state checkpoint.
-    localCheckpoint materializes the pre-AQE-coalesce partitioning, so a
-    small label/rank/register table checkpointed every round at the full
-    shuffle width costs a task wave per round for nothing. State rows
-    are ~16-50 bytes, so ~2M rows per partition keeps partitions in the
-    tens of MB; the cap at the live session's shuffle width keeps
-    cluster-scale graphs fully parallel."""
-    return max(1, min(shuffle_width(spark),
-                      int(n_rows) // rows_per_part + 1))
 
 
 def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -176,12 +163,8 @@ def connected_components_small(edges: DataFrame,
     sym = (edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
            .unionByName(edges.select(F.col(dst_col).alias("a"),
                                      F.col(src_col).alias("b")))).cache()
-    # size the per-iteration partitioning to the graph: ~200k edges per
-    # partition (one count on the cached sym)
-    n_edges = sym.count()
-    edges.unpersist()  # sym is materialized now; the input cache is done
-    n_parts = _register_parts(sym.sparkSession, n_edges,
-                              rows_per_part=200_000)
+    sym.count()  # fill sym's cache before the input cache is released
+    edges.unpersist()
     labels = (sym.select("a").distinct()
               .select(F.col("a").alias("node"), F.col("a").alias("component")))
     for _ in range(max_iters):
@@ -192,16 +175,14 @@ def connected_components_small(edges: DataFrame,
         # re-run) all k-1 predecessors
         new_comp = F.least(F.col("component"),
                            F.coalesce("nmin", F.col("component")))
-        # the convergence flag rides INSIDE the cached rows, so the "did
-        # anything change" probe scans the materialized cache, not a second
-        # join/recompute. cache() (not localCheckpoint) keeps AQE active —
-        # RDD checkpointing materializes pre-coalesce partitioning and
-        # costs a full task wave per iteration on small graphs.
+        # the convergence flag rides INSIDE the checkpointed rows, so the
+        # "did anything change" probe scans the materialized state, not a
+        # second join/recompute
         updated = (labels.join(neighbor_min,
                                labels["node"] == neighbor_min["a"], "left")
                    .select("node", new_comp.alias("component"),
                            (new_comp != F.col("component")).alias("_changed"))
-                   .coalesce(n_parts).localCheckpoint())
+                   .localCheckpoint())
         converged = updated.where(F.col("_changed")).isEmpty()
         labels = updated.drop("_changed")
         if converged:
@@ -240,10 +221,11 @@ def pagerank(edges: DataFrame, iters: int = 3,
              .unionByName(edges.select(F.col("dst").alias("node")))
              .distinct().localCheckpoint())
     n = nodes.count()
-    n_parts = _register_parts(edges.sparkSession, n)
+    # over edges already partitioned by src this groupBy runs no exchange
+    # and keeps their width: narrow it to the AQE-sized nodes checkpoint
     outdeg = (edges.groupBy(F.col("src").alias("node"))
               .agg(F.count(F.lit(1)).alias("outdeg"))
-              .coalesce(n_parts).localCheckpoint())
+              .coalesce(nodes.rdd.getNumPartitions()).localCheckpoint())
     r0 = unit // n
     total = n * r0
     base = (total * (damping_den - damping_num)) // (damping_den * n)
@@ -265,7 +247,7 @@ def pagerank(edges: DataFrame, iters: int = 3,
                          (F.lit(base) + share
                           + F.coalesce(F.col("in_mass"), F.lit(0)))
                          .cast("long").alias("r"))
-                 .coalesce(n_parts).localCheckpoint())
+                 .localCheckpoint())
     edges.unpersist()
     return state
 
@@ -336,7 +318,6 @@ def label_propagation(edges: DataFrame, iters: int = 3,
     truncates the iterative lineage (the pagerank/kmeans pattern).
     """
     sym = _symmetric(_undirected(edges, src_col, dst_col)).localCheckpoint()
-    n_parts = _register_parts(sym.sparkSession, sym.count())
     labels = (sym.select(F.col("u").alias("node")).distinct()
               .select("node", F.col("node").alias("label")))
     for _ in range(iters):
@@ -349,7 +330,7 @@ def label_propagation(edges: DataFrame, iters: int = 3,
                                       F.col("label"))).alias("m"))
                   .select(F.col("n").alias("node"),
                           F.col("m.label").alias("label"))
-                  .coalesce(n_parts).localCheckpoint())
+                  .localCheckpoint())
     sym.unpersist()
     return labels
 
@@ -424,15 +405,15 @@ def hash_walks(edges: DataFrame, walk_len: int = 3,
                 F.count(F.lit(1)).alias("deg")).localCheckpoint())
     start_df = (starts if starts is not None
                 else adj.select(F.col("u").alias("start")))
-    n_parts = _register_parts(adj.sparkSession,
-                              adj.count() * walks_per_node)
+    # the frontier keeps its input's width (no exchange above it): narrow
+    # it to the AQE-sized adj checkpoint
     frontier = (start_df.select(
         "start",
         F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1)))
         .alias("walk"))
         .select("start", F.col("walk").cast("long").alias("walk"),
                 F.col("start").alias("cur"))
-        .coalesce(n_parts).localCheckpoint())
+        .coalesce(adj.rdd.getNumPartitions()).localCheckpoint())
     out = frontier.select("start", "walk", F.lit(0).alias("step"),
                           F.col("cur").alias("node"))
     for t in range(1, walk_len + 1):
@@ -448,7 +429,7 @@ def hash_walks(edges: DataFrame, walk_len: int = 3,
                     # materialize each level: the final union otherwise
                     # re-evaluates every prefix of the join chain
                     # (O(len²) joins — the match_var_path lesson)
-                    .coalesce(n_parts).localCheckpoint())
+                    .localCheckpoint())
         out = out.unionByName(frontier.select(
             "start", "walk", F.lit(t).alias("step"),
             F.col("cur").alias("node")))
@@ -476,11 +457,13 @@ def feature_propagation(edges: DataFrame, feats: DataFrame,
     shape to pagerank (16-byte state rows, localCheckpoint truncating
     the iterative lineage)."""
     sym = _symmetric(_undirected(edges, src_col, dst_col)).localCheckpoint()
-    n_parts = _register_parts(sym.sparkSession, sym.count())
     deg = sym.groupBy(F.col("u").alias(node_col)).agg(
-        F.count(F.lit(1)).alias("deg"))
-    state = feats.select(F.col(node_col),
-                         F.col(feat_col).cast("long").alias("f"))
+        F.count(F.lit(1)).alias("deg")).localCheckpoint()
+    # the state keeps feats' width through broadcast joins: narrow it to
+    # the AQE-sized deg checkpoint
+    state = (feats.select(F.col(node_col),
+                          F.col(feat_col).cast("long").alias("f"))
+             .coalesce(deg.rdd.getNumPartitions()))
     for _ in range(iters):
         nbr_sum = (sym.join(state, sym["v"] == state[node_col])
                    .groupBy(F.col("u").alias(node_col))
@@ -494,7 +477,7 @@ def feature_propagation(edges: DataFrame, feats: DataFrame,
                          F.expr("(f + coalesce(nsum, CAST(0 AS BIGINT)))"
                                 " DIV (1 + coalesce(deg,"
                                 " CAST(0 AS BIGINT)))").alias("f"))
-                 .coalesce(n_parts).localCheckpoint())
+                 .localCheckpoint())
     return state
 
 
@@ -525,7 +508,6 @@ def temporal_reachability(edges: DataFrame, sources: DataFrame,
                      F.col(ts_col).cast("long").alias("t")).localCheckpoint()
     state = sources.select(F.col("node"),
                            F.lit(0).cast("long").alias("arrival"))
-    n_parts = _register_parts(e.sparkSession, e.count())
     for _ in range(rounds):
         relaxed = (e.join(state, e["u"] == state["node"])
                    .where(F.col("t") >= F.col("arrival"))
@@ -533,7 +515,7 @@ def temporal_reachability(edges: DataFrame, sources: DataFrame,
                            F.col("t").alias("arrival")))
         state = (state.unionByName(relaxed)
                  .groupBy("node").agg(F.min("arrival").alias("arrival"))
-                 .coalesce(n_parts).localCheckpoint())
+                 .localCheckpoint())
     return state
 
 
@@ -570,13 +552,12 @@ def k_core(edges: DataFrame, k: int = 3, rounds: int = 5,
     iterative operator here. No windows, no driver collect.
     """
     sym = _symmetric(_undirected(edges, src_col, dst_col)).localCheckpoint()
-    n_parts = _register_parts(sym.sparkSession, sym.count())
     for _ in range(rounds):
         keep = (sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
                 .where(F.col("deg") >= k).select("u"))
         sym = (sym.join(keep, "u", "left_semi")
                .join(keep.withColumnRenamed("u", "v"), "v", "left_semi")
-               .select("u", "v").coalesce(n_parts).localCheckpoint())
+               .select("u", "v").localCheckpoint())
     return (sym.groupBy(F.col("u").alias("node"))
             .agg(F.count(F.lit(1)).cast("long").alias("core_degree")))
 
@@ -612,16 +593,13 @@ def _hyperball_estimates(edges: DataFrame, iters: int, p: int,
     regs = (hll_terms(nodes, "node", p)
             .groupBy("node", "bucket").agg(F.max("rho").alias("r"))
             .localCheckpoint())
-    n_parts = _register_parts(edges.sparkSession, regs.count())
     allr = regs.withColumn("radius", F.lit(0))
     for radius in range(1, iters + 1):
         nbr = (e.join(regs.withColumnRenamed("node", "e_dst"), "e_dst")
                .select(F.col("e_src").alias("node"), "bucket", "r"))
-        # repartition above the max-merge, not coalesce: the merge reads
-        # |edges| x 2^p rows and must keep its AQE width
         regs = (regs.unionByName(nbr)
                 .groupBy("node", "bucket").agg(F.max("r").alias("r"))
-                .repartition(n_parts, "node", "bucket").localCheckpoint())
+                .localCheckpoint())
         allr = allr.unionByName(regs.withColumn("radius", F.lit(radius)))
     return (hll_estimate(allr, ("radius", "node"), p)
             .select("radius", "node",

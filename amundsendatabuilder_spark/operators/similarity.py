@@ -436,9 +436,7 @@ def kmeans_fit(corpus: DataFrame, k: int = 16, max_iters: int = 5,
                                     F.col("old.embedding")).alias("embedding")))
         # k×dim values — kilobytes; materialize so the next iteration's
         # broadcast doesn't drag the whole previous lineage along
-        # (r15: one partition — a k-row register checkpointed at shuffle
-        # width cost a full task wave per Lloyd iteration)
-        cents = cents.coalesce(1).localCheckpoint()
+        cents = cents.localCheckpoint()
     final_counts = (assign_centroids(corpus, cents, id_col=id_col,
                                      vec_col=vec_col, metric=metric)
                     .groupBy("cent_id")
@@ -519,7 +517,7 @@ def pq_train(corpus: DataFrame, m: int = 4, ksub: int = 16, dim: int = 64,
     cents = (init_ids.join(sliced, id_col)
              .withColumn("cent_id", F.row_number().over(w0) - 1)
              .select("sub_id", "cent_id", F.col("sv").alias("cv"))
-             .coalesce(1).localCheckpoint())
+             .localCheckpoint())
 
     def assign(cs: DataFrame) -> DataFrame:
         # (r15: an array-register argmin projection was MEASURED SLOWER
@@ -548,8 +546,7 @@ def pq_train(corpus: DataFrame, m: int = 4, ksub: int = 16, dim: int = 64,
                  .select("sub_id", "cent_id",
                          F.coalesce(F.col("new.cv"), F.col("old.cv"))
                          .alias("cv"))
-                 # r15: m*ksub-row register — one-partition checkpoint
-                 .coalesce(1).localCheckpoint())
+                 .localCheckpoint())
     return cents.select("sub_id", "cent_id", F.col("cv").alias("embedding"))
 
 

@@ -62,7 +62,8 @@ def hll_terms(df: DataFrame, col: str, p: int = 8) -> DataFrame:
     """Append the per-row sketch terms (bucket, rho) for ``col`` — the
     stateless stage shared by batch ``hll_registers`` and the streaming
     windowed sketch (it composes with any watermark/window grouping)."""
-    assert p % 4 == 0 and 4 <= p <= 16, "p must be a multiple of 4 in [4,16]"
+    if not (p % 4 == 0 and 4 <= p <= 16):
+        raise ValueError("p must be a multiple of 4 in [4,16]")
     from amundsendatabuilder_spark.operators.profiling import (
         require_register_width)
     require_register_width(1 << p, f"hll registers (2^p, p={p})")

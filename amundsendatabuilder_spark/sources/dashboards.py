@@ -384,11 +384,22 @@ def tableau_metadata_query(spark: SparkSession,
     """Tableau metadata-API GraphQL (reference:
     extractor/dashboard/tableau/tableau_dashboard_utils.py:68-111): POST a
     GraphQL query, iterate the JSON result into a DataFrame. The transport
-    is injected; pagination loops live in the caller-provided function."""
+    is injected; pagination loops live in the caller-provided function.
+
+    A response with no ``data`` but with ``errors`` (e.g. an expired
+    token) raises ``ValueError`` carrying the error messages, so a failed
+    query never reads as an empty catalog; partial ``data`` that comes
+    with ``errors`` is flattened like any other."""
     payload = graphql_post(query)
+    if not isinstance(payload, dict):
+        payload = {}
+    data, errors = payload.get("data"), payload.get("errors") or []
+    if data is None and errors:
+        raise ValueError("Tableau metadata query failed: " + "; ".join(
+            str(e.get("message", e)) if isinstance(e, dict) else str(e)
+            for e in errors))
     records = []
-    data = payload.get("data", {}) if isinstance(payload, dict) else {}
-    for _, items in data.items():
+    for _, items in (data or {}).items():
         if isinstance(items, list):
             records.extend(i for i in items if isinstance(i, dict))
     if not records:

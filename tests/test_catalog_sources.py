@@ -1,6 +1,7 @@
 """API-walk source tests with injected fake clients (the reference mocks
 the same boundaries — SURVEY §5)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -480,9 +481,22 @@ def test_tableau_metadata_query_flattens_payload(spark):
     assert sent == ["{ workbooks { id name } }"]
     assert sorted((r["id"], r["name"]) for r in df.collect()) == [
         ("w1", "A"), ("w2", "B")]
-    for payload in ({}, {"data": {}}, None):
+    for payload in ({}, {"data": {}}, None, {"data": None},
+                    {"data": None, "errors": []}):
         empty = tableau_metadata_query(spark, lambda q: payload, "q")
         assert empty.columns == ["id"] and empty.count() == 0
+    # a GraphQL error response with no data is a failure, not an empty
+    # catalog — with data null or missing alike
+    for payload in ({"data": None, "errors": [{"message": "Signed out"},
+                                              {"message": "Retry"}]},
+                    {"errors": [{"message": "Signed out"}, "Retry"]}):
+        with pytest.raises(ValueError, match="Signed out; Retry"):
+            tableau_metadata_query(spark, lambda q: payload, "q")
+    # partial data alongside errors is still flattened
+    partial = tableau_metadata_query(spark, lambda q: {
+        "data": {"workbooks": [{"id": "w3"}]},
+        "errors": [{"message": "field 'owner' denied"}]}, "q")
+    assert [r["id"] for r in partial.collect()] == ["w3"]
 
 
 def test_es_last_updated_single_record(spark):

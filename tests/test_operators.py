@@ -4993,6 +4993,71 @@ def test_register_guard_graph_family(spark, monkeypatch):
         graph_algo.hyperball_effective_diameter(edges, iters=1, p=4)
 
 
+def test_hll_precision_outside_hex_layout_raises_value_error(spark):
+    """A p the md5 hex-digit bucket layout cannot represent raises
+    ValueError (not an assert, which ``python -O`` strips and which
+    would leave p // 4 hex digits feeding an m = 2^p estimator)."""
+    from amundsendatabuilder_spark.operators import graph_algo, sketches
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    with pytest.raises(ValueError, match="multiple of 4"):
+        graph_algo.hyperball_neighborhood(edges, iters=1, p=5)
+    df = spark.createDataFrame([(i,) for i in range(5)], "v long")
+    with pytest.raises(ValueError, match="multiple of 4"):
+        sketches.hll_distinct(df, "v", p=6)
+
+
+def test_iterative_state_width_is_aqe_sized(spark, monkeypatch):
+    """Iteration state takes the width AQE gives the shuffle it comes
+    out of; state with no shuffle above it narrows to the checkpoint it
+    derives from. Inputs come from a cached 8-partition frame, so a state
+    that kept its input's width would show 8 partitions."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from amundsendatabuilder_spark.operators import graph_algo
+    pairs = [(i, i % 8 + 1) for i in range(1, 9)] + [(1, 5), (2, 6)]
+    # partitioned by src, so pagerank's out-degree count runs no exchange
+    edges = (spark.createDataFrame(
+        [(u, v, 10 * u) for u, v in pairs], "src long, dst long, t long")
+        .repartition(8, "src").cache())
+    nodes = (spark.createDataFrame([(i,) for i in range(1, 9)], "node long")
+             .repartition(8).cache())
+    assert edges.count() == 10 and nodes.count() == 8
+    assert edges.rdd.getNumPartitions() == nodes.rdd.getNumPartitions() == 8
+    widths = []
+    checkpoint = ClassicDataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        widths.append(out.rdd.getNumPartitions())
+        return out
+
+    try:
+        monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", recording)
+        graph_algo.pagerank(edges, iters=3)
+        monkeypatch.undo()
+        # nodes, out-degrees, then one rank state per iteration (the last
+        # is the output)
+        assert widths == [1] * (2 + 3)
+        outs = {
+            "label_propagation": graph_algo.label_propagation(edges),
+            "feature_propagation": graph_algo.feature_propagation(
+                edges, nodes.select("node", (F.col("node") * 10).alias("f"))),
+            "temporal_reachability": graph_algo.temporal_reachability(
+                edges, nodes.where(F.col("node") <= 2)),
+        }
+        for name, out in outs.items():
+            assert out.rdd.getNumPartitions() == 1, name
+        # one partition per frontier: the starts' 8-wide input narrows
+        walks = graph_algo.hash_walks(
+            edges, walk_len=3, starts=nodes.select(F.col("node").alias("start")))
+        assert walks.rdd.getNumPartitions() == 3 + 1
+        est = graph_algo._hyperball_estimates(edges, 2, 4, "src", "dst")
+        assert est.rdd.getNumPartitions() == 1
+    finally:
+        edges.unpersist()
+        nodes.unpersist()
+
+
 def test_ensure_parallelism_follows_live_shuffle_width(spark):
     from amundsendatabuilder_spark.session import (
         ensure_parallelism, shuffle_width)
