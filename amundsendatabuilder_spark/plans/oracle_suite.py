@@ -30,7 +30,7 @@ from amundsendatabuilder_spark.functions.scalars import (
 )
 from amundsendatabuilder_spark.functions.text import STOPWORDS
 from amundsendatabuilder_spark.operators import dedup, similarity, textops
-from amundsendatabuilder_spark.session import load_tables
+from amundsendatabuilder_spark.session import TPCH_TABLES, load_tables
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -46,8 +46,9 @@ def query(name: str, oracle: str | None = None):
 
 
 def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    dfs = load_tables(spark, sf_dir, names or None)
-    return [dfs[n] for n in names] if names else list(dfs.values())
+    names = names or TPCH_TABLES
+    dfs = load_tables(spark, sf_dir, names)
+    return [dfs[n] for n in names]
 
 
 def _key_edges(key_df: DataFrame, *targets) -> DataFrame:

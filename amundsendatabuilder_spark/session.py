@@ -10,9 +10,11 @@ ANSI-SQL oracle.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "amundsendatabuilder_spark",
@@ -85,6 +87,54 @@ TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
 NANO_TS_COLS = {"events": ("ts",)}
 
 
+# a parquet file's identity -> the schema Spark inferred for it. A schema
+# belongs to no session, so an entry stays right across stop and rebuild;
+# a rewritten file or a changed inference conf makes a new key.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+# the confs that change what parquet schema inference returns
+_INFERENCE_CONFS = ("spark.sql.legacy.parquet.nanosAsLong",
+                    "spark.sql.parquet.inferTimestampNTZ.enabled",
+                    "spark.sql.parquet.binaryAsString",
+                    "spark.sql.parquet.int96AsTimestamp")
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(size, mtime_ns) of a local file, the sorted (relpath, size,
+    mtime_ns) of a local directory's files, or None when ``os.stat``
+    cannot see the path (a non-local URI)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
+        files = []
+        for d, _, names in os.walk(path):
+            for n in names:
+                f = os.path.join(d, n)
+                fst = os.stat(f)
+                files.append((os.path.relpath(f, path), fst.st_size,
+                              fst.st_mtime_ns))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)``, inferring the schema (one Spark job)
+    only on the first read of this file under these confs in the process;
+    later reads pass the remembered schema and start no job."""
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), ident,
+           tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load_tables(spark: SparkSession, sf_dir: str,
                 names: tuple[str, ...] = TPCH_TABLES) -> dict:
     """Read the driver-provided parquet tables as DataFrames and register
@@ -99,7 +149,7 @@ def load_tables(spark: SparkSession, sf_dir: str,
         pass  # static conf in some builds; events read then needs our session
     out = {}
     for name in names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
         # nanosAsLong surfaces TIMESTAMP(NANOS) columns as bigint; restore
         # them to timestamps at microsecond precision (floor division —
         # matches DuckDB's TIMESTAMP_NS -> TIMESTAMP truncation).

@@ -52,3 +52,14 @@ def test_attribution_and_asof_run_on_driver_parquet(spark):
     for name in ("asof_view_before_purchase", "conversion_attribution",
                  "event_interarrival"):
         assert qs[name](spark, SF_DIR).count() >= 0, name
+
+
+def test_t_with_no_names_loads_every_table(spark):
+    """``_t(spark, sf_dir)`` with no table names resolves every table of
+    ``TPCH_TABLES``, in that order."""
+    from amundsendatabuilder_spark.plans.oracle_suite import _t
+    from amundsendatabuilder_spark.session import TPCH_TABLES
+    dfs = _t(spark, SF_DIR)
+    assert len(dfs) == len(TPCH_TABLES)
+    assert [df.columns[0] for df in dfs[:2]] == ["r_regionkey", "n_nationkey"]
+    assert dfs[TPCH_TABLES.index("events")].count() > 0

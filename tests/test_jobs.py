@@ -181,7 +181,14 @@ def test_golden_end_to_end_reference_sample_scenario(spark, tmp_path,
     spec.loader.exec_module(mod)
     fx = os.path.join(fixtures_dir, "reference_sample_data")
     out = str(tmp_path / "golden")
-    got = mod.main(out, fx)
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        got = mod.main(out, fx)
+    finally:
+        # main's get_spark("sample_job") re-applies its default width to
+        # the shared session; later test modules expect conftest's
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
     assert got["status"] == "success"
     assert got == {"nodes": 72, "rels": 79, "table_docs": 5,
                    "user_docs": 4, "status": "success"}
