@@ -11,6 +11,8 @@ from __future__ import annotations
 
 import os
 import stat
+import time
+import uuid
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -64,6 +66,36 @@ def shuffle_width(spark: SparkSession) -> int:
     every pinned repartition uses, so it follows the session a caller
     built (or re-configured), not the env var at import time."""
     return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
+def jobs_started_by(spark: SparkSession, fn):
+    """Run ``fn()`` under a job group of its own and return its result
+    with the sorted ids of the Spark jobs it started.
+
+    The status tracker learns of jobs asynchronously, so a count read
+    right after an action can miss its last job. It learns of them in
+    order, though: a fence job in a second group runs after ``fn``, and
+    the ids are read once the tracker lists the fence. Jobs that run on
+    other threads under their own group (a streaming query's
+    micro-batches) are not counted. The thread's job group is cleared on
+    return."""
+    sc = spark.sparkContext
+    group, fence = f"jobs-{uuid.uuid4()}", f"fence-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setJobGroup(fence, fence)
+        sc.parallelize([0], 1).count()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker, deadline = sc.statusTracker(), time.monotonic() + 60
+    while not tracker.getJobIdsForGroup(fence):
+        if time.monotonic() > deadline:
+            raise RuntimeError("the status tracker never listed the fence "
+                               "job; job counts would be incomplete")
+        time.sleep(0.05)
+    return result, sorted(tracker.getJobIdsForGroup(group))
 
 
 def ensure_parallelism(df, min_partitions: int | None = None):

@@ -89,18 +89,18 @@ def windowed_distinct_registers(events: DataFrame, window: str = "1 hour",
     )
 
 
-# last drained query's progress record, for tools/plan_audit.py's
-# streaming section (state-store shape assertions) — overwritten per
-# drain, read immediately after the suite callable returns
+# last drained query's progress record, for the state-store shape check
+# of tools/plan_manifest.py — overwritten per drain, read immediately
+# after the suite callable returns
 LAST_STREAM_AUDIT: dict = {}
 
 
 def record_stream_audit(q, name: str) -> None:
     """Stash a terminated StreamingQuery's progress (micro-batch count,
-    state operator names, state rows) so the plan audit can assert the
-    state-store SHAPE of every streaming entry — the streaming
-    counterpart of the batch plan-feature counts (r10 verdict item #5).
-    Never raises: the audit is observability, not control flow."""
+    state operator names, state rows) so the plan manifest tool can
+    assert the state-store shape of every streaming entry against its
+    ``STREAM_EXPECT``. Never raises: the check is observability, not
+    control flow."""
     import json as _json
     try:
         progs = [_json.loads(p.json) for p in q.recentProgress]

@@ -6,8 +6,6 @@ import os
 import shutil
 import subprocess
 import sys
-import time
-import uuid
 
 import pytest
 
@@ -42,38 +40,17 @@ needs_testdata = pytest.mark.skipif(not os.path.isdir(SF_DIR),
                                     reason="driver testdata not present")
 
 
-def _jobs_run_by(spark, fn) -> int:
-    """The Spark jobs ``fn()`` starts, counted by the status tracker. A
-    fence job in a group of its own runs last: the tracker learns of jobs
-    in order, so once it lists the fence it lists every job of ``fn``."""
-    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
-    group, fence = f"memo-{uuid.uuid4()}", f"fence-{uuid.uuid4()}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(fence, fence)
-        sc.parallelize([0], 1).count()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    while not st.getJobIdsForGroup(fence):
-        time.sleep(0.05)
-    return len(st.getJobIdsForGroup(group))
-
-
 @needs_testdata
 def test_second_load_of_a_file_runs_no_job(spark, tmp_path):
     """Only the first ``load_tables`` of a file in a process infers its
     schema (one job); the second passes the remembered schema."""
-    from amundsendatabuilder_spark.session import load_tables
+    from amundsendatabuilder_spark.session import jobs_started_by, load_tables
     shutil.copy(f"{SF_DIR}/nation.parquet", tmp_path / "nation.parquet")
-    first = _jobs_run_by(spark, lambda: load_tables(spark, str(tmp_path),
-                                                    ("nation",)))
-    second = _jobs_run_by(spark, lambda: load_tables(spark, str(tmp_path),
-                                                     ("nation",)))
-    assert (first, second) == (1, 0)
-    rows = load_tables(spark, str(tmp_path), ("nation",))["nation"].collect()
-    assert len(rows) == 25
+
+    def load():
+        return load_tables(spark, str(tmp_path), ("nation",))
+    assert [len(jobs_started_by(spark, load)[1]) for _ in range(2)] == [1, 0]
+    assert len(load()["nation"].collect()) == 25
 
 
 def _write_file(spark, path, rows, ddl):
@@ -130,20 +107,16 @@ def test_inference_conf_is_part_of_the_key(spark, tmp_path):
 
 
 _REBUILT_SESSION = f"""
-import hashlib, sys, time
+import hashlib, sys
 sys.path.insert(0, {ROOT!r})
-from amundsendatabuilder_spark.session import get_spark, load_tables
+from amundsendatabuilder_spark.session import (
+    get_spark, jobs_started_by, load_tables)
 
 def digest(spark):
-    sc, st = spark.sparkContext, spark.sparkContext.statusTracker()
-    sc.setJobGroup("load", "load")
-    t = load_tables(spark, {SF_DIR!r}, ("nation", "events"))
-    sc.setJobGroup("rows", "rows")
+    t, jobs = jobs_started_by(
+        spark, lambda: load_tables(spark, {SF_DIR!r}, ("nation", "events")))
     rows = sorted(map(repr, t["nation"].collect() + t["events"].collect()))
-    while not st.getJobIdsForGroup("rows"):  # every load job is listed
-        time.sleep(0.05)
-    return (len(st.getJobIdsForGroup("load")),
-            hashlib.md5("\\n".join(rows).encode()).hexdigest(),
+    return (len(jobs), hashlib.md5("\\n".join(rows).encode()).hexdigest(),
             t["events"].dtypes)
 
 spark = get_spark("memo_first", shuffle_partitions=2)

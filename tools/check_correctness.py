@@ -22,10 +22,6 @@ sys.path.insert(0, ROOT)
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 and "/" in sys.argv[1] else "/root/testdata/sf0.01"
 ONLY = [a for a in sys.argv[1:] if "/" not in a]
 
-TABLES = ("region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings")
-
-
 _DUCK_TO_SPARK = {
     "TINYINT": "tinyint", "SMALLINT": "smallint", "INTEGER": "int",
     "BIGINT": "bigint", "DOUBLE": "double", "FLOAT": "float",
@@ -105,11 +101,11 @@ def main():
     import duckdb
 
     from __spark_entry__ import oracle_sql, queries
-    from amundsendatabuilder_spark.session import get_spark
+    from amundsendatabuilder_spark.session import TPCH_TABLES, get_spark
 
     spark = get_spark("correctness_check")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TPCH_TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
     qs, oracles = queries(), oracle_sql()
