@@ -30,7 +30,9 @@ from amundsendatabuilder_spark.functions.scalars import (
 )
 from amundsendatabuilder_spark.functions.text import STOPWORDS
 from amundsendatabuilder_spark.operators import dedup, similarity, textops
-from amundsendatabuilder_spark.session import TPCH_TABLES, load_tables
+from amundsendatabuilder_spark.session import (
+    TPCH_TABLES, load_tables, read_table_stream)
+from amundsendatabuilder_spark.streaming.events import run_to_memory
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -2689,28 +2691,11 @@ def stream_dedup_first_seen(spark, sf_dir):
     the SQL group-by — the oracle pins the emission set and the keeper
     choice; CROSS-batch state semantics stay pinned in
     tests/test_streaming.py::test_stream_first_seen_dedup."""
-    import tempfile
-
     from amundsendatabuilder_spark.functions.text import fingerprint_md5
     from amundsendatabuilder_spark.streaming.dedup_stream import first_seen_filter
-    stream = (spark.readStream
-              .schema("doc_id long, text string, lang string, source string,"
-                      " n_chars long")
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir)
+    stream = (read_table_stream(spark, sf_dir, "documents")
               .select("doc_id", fingerprint_md5(F.col("text")).alias("fingerprint")))
-    out = first_seen_filter(stream)
-    rows = []
-    q = (out.writeStream
-         .foreachBatch(lambda df, _: rows.extend(df.collect()))
-         .outputMode("update")
-         .option("checkpointLocation", tempfile.mkdtemp())
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    from amundsendatabuilder_spark.streaming.events import record_stream_audit
-    record_stream_audit(q, "stream_dedup_first_seen")
-    return spark.createDataFrame(rows, "fingerprint string, doc_id long, dup_rank long") \
-        if rows else spark.createDataFrame([], "fingerprint string, doc_id long, dup_rank long")
+    return run_to_memory(first_seen_filter(stream), output_mode="update")
 
 
 @query("stream_near_dup", f"""
@@ -2732,29 +2717,11 @@ def stream_near_dup(spark, sf_dir):
     member a (keeper, doc) pair — exactly the SQL twin built on the SAME
     banded-minhash CTE that pins dedup_minhash_lsh. Cross-batch state is
     pinned in tests/test_streaming.py."""
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.dedup_stream import (
         near_dup_candidates)
-    stream = (spark.readStream
-              .schema("doc_id long, text string, lang string, source string,"
-                      " n_chars long")
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir)
+    stream = (read_table_stream(spark, sf_dir, "documents")
               .select("doc_id", "text"))
-    out = near_dup_candidates(stream)
-    rows = []
-    q = (out.writeStream
-         .foreachBatch(lambda df, _: rows.extend(df.collect()))
-         .outputMode("update")
-         .option("checkpointLocation", tempfile.mkdtemp())
-         .trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    from amundsendatabuilder_spark.streaming.events import record_stream_audit
-    record_stream_audit(q, "stream_near_dup")
-    schema = "band int, band_sig string, doc_a long, doc_b long"
-    return spark.createDataFrame(rows, schema) if rows \
-        else spark.createDataFrame([], schema)
+    return run_to_memory(near_dup_candidates(stream), output_mode="update")
 
 
 @query("multimodal_audio_chunks", """
@@ -2805,61 +2772,6 @@ def multimodal_frame_plan(spark, sf_dir):
         frame_sample_plan, synthetic_media)
     return frame_sample_plan(synthetic_media(spark, n=64), every_ms=500)
 
-def _event_stream(spark, sf_dir):
-    """File-source stream over the driver's events.parquet with the ts
-    encoding normalized to TIMESTAMP, whatever the file actually stores.
-    The driver's on-disk format has changed twice (TIMESTAMP(NANOS) read
-    as raw int64, then TIMESTAMP(micros, isAdjustedToUTC=false)), and a
-    user-supplied readStream schema silently reinterprets the physical
-    int64 — reading micros as nanos skews every event time 1000x — so the
-    footer is sniffed with pyarrow and the matching conversion applied."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-    path = f"{sf_dir}/events.parquet"
-    # driver testdata ships a single file; Spark-written copies (e.g. the
-    # sf1 headroom replication) are directories of part files — sniff any
-    # one part (unit is uniform across parts of one write)
-    sniff = path
-    is_dir = os.path.isdir(path)
-    if is_dir:
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        assert parts, f"no parquet parts under {path}"
-        sniff = parts[0]
-
-    def _read(schema: str):
-        rs = spark.readStream.schema(schema)
-        if is_dir:
-            return rs.parquet(path)
-        # the file source requires a directory path; watch sf_dir and
-        # glob-filter down to the single events file
-        return rs.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-
-    # Dispatch needs the PHYSICAL type, not the arrow-reported one:
-    # pyarrow reports both TIMESTAMP(NANOS)/INT64 and legacy INT96 as
-    # 'timestamp[ns...]', but Spark reads INT96 natively as TIMESTAMP
-    # while INT64-nanos surfaces as raw int64 under nanosAsLong — a
-    # declared-TIMESTAMP schema on the latter fails the read (or skews
-    # event times 1000x if coerced).
-    sch = pq.ParquetFile(sniff).schema
-    col = next(sch.column(i) for i in range(len(sch))
-               if sch.column(i).name == "ts")
-    int64_nanos_or_raw = col.physical_type == "INT64" and (
-        "nanoseconds" in str(col.logical_type).lower()
-        or "timestamp" not in str(col.logical_type).lower())
-    if not int64_nanos_or_raw:
-        # INT96, or INT64 micros/millis (NTZ or tz-adjusted): declared
-        # TIMESTAMP reads values directly under the UTC session, matching
-        # load_tables' batch path
-        return _read("event_id long, ts timestamp, user_id long,"
-                     " event_type string, value double, props string")
-    # TIMESTAMP(NANOS) over INT64, or a raw int64-nanos column: read as
-    # long and convert explicitly
-    return (_read("event_id long, ts long, user_id long, event_type string,"
-                  " value double, props string")
-            .withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000"))))
-
 
 @query("stream_windowed_counts", """
 WITH wm AS (SELECT max(ts) - INTERVAL 2 HOUR AS w FROM events),
@@ -2876,16 +2788,12 @@ def stream_windowed_counts(spark, sf_dir):
     watermark (max event time - 2h), so the oracle is the batch hourly
     aggregate RESTRICTED to that emission frontier — pinning both the agg
     values and the watermark semantics."""
-    import tempfile
-
-    from amundsendatabuilder_spark.streaming.events import run_to_memory
-    agg = (_event_stream(spark, sf_dir)
+    agg = (read_table_stream(spark, sf_dir, "events")
            .withWatermark("ts", "2 hours")
            .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
            .agg(F.count("*").alias("n_events"))
            .select(F.col("w.start").alias("window_start"), "event_type", "n_events"))
-    name = "swc_" + next(tempfile._get_candidate_names())  # unique per run
-    return run_to_memory(agg, spark, name, tempfile.mkdtemp())
+    return run_to_memory(agg)
 
 
 def _stream_hll_oracle() -> str:
@@ -2912,14 +2820,11 @@ def stream_windowed_distinct(spark, sf_dir):
     registers and the estimator from the same md5 layout, restricted to
     windows past the final watermark (the append emission frontier), so
     both the sketch math AND the watermark semantics are pinned."""
-    import tempfile
-
     from amundsendatabuilder_spark.operators import sketches
     from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, windowed_distinct_registers)
-    regs = windowed_distinct_registers(_event_stream(spark, sf_dir))
-    name = "swd_" + next(tempfile._get_candidate_names())
-    batch = run_to_memory(regs, spark, name, tempfile.mkdtemp())
+        windowed_distinct_registers)
+    batch = run_to_memory(windowed_distinct_registers(
+        read_table_stream(spark, sf_dir, "events")))
     est = sketches.hll_estimate(batch, ("window_start", "event_type"))
     return est.select(
         "window_start", "event_type",
@@ -2951,13 +2856,9 @@ def stream_sessionize(spark, sf_dir):
     sessionize_batch) and keeps only sessions whose window end
     (last event + gap) has passed the final watermark — the exact
     append-mode emission set."""
-    import tempfile
-
-    from amundsendatabuilder_spark.streaming.events import run_to_memory, sessionize
-    name = "ssn_" + next(tempfile._get_candidate_names())
-    out = run_to_memory(sessionize(_event_stream(spark, sf_dir),
-                                   gap="30 minutes"),
-                        spark, name, tempfile.mkdtemp())
+    from amundsendatabuilder_spark.streaming.events import sessionize
+    out = run_to_memory(sessionize(read_table_stream(spark, sf_dir, "events"),
+                                   gap="30 minutes"))
     return out.select("user_id", "window_start", "n_events",
                       round_half_away(F.col("total_value"), 2).alias("total_value"))
 
@@ -3635,19 +3536,14 @@ def stream_attribution(spark, sf_dir):
     sides are buffered (no watermark holdback for emission, only for state
     eviction), so an AvailableNow drain over a bounded source must produce
     EXACTLY the batch interval join — the oracle is that join verbatim."""
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, stream_stream_attribution)
-    stream = _event_stream(spark, sf_dir)
+        stream_stream_attribution)
+    stream = read_table_stream(spark, sf_dir, "events")
     joined = stream_stream_attribution(
         stream.where(F.col("event_type") == "view"),
         stream.where(F.col("event_type") == "purchase"),
         lookback_minutes=60)
-    name = "sattr_" + next(tempfile._get_candidate_names())
-    import os
-    return run_to_memory(joined, spark, name,
-                         os.path.join(tempfile.mkdtemp(), "ckpt"))
+    return run_to_memory(joined)
 
 
 @query("stream_attribution_outer", """
@@ -3676,19 +3572,14 @@ def stream_attribution_outer(spark, sf_dir):
     event time, because only then can the engine prove no matching view
     is still in flight. Purchases above the frontier stay in state —
     verified exactly (not approximately) against the drained output."""
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, stream_stream_attribution_outer)
-    stream = _event_stream(spark, sf_dir)
+        stream_stream_attribution_outer)
+    stream = read_table_stream(spark, sf_dir, "events")
     joined = stream_stream_attribution_outer(
         stream.where(F.col("event_type") == "view"),
         stream.where(F.col("event_type") == "purchase"),
         lookback_minutes=60)
-    name = "sattro_" + next(tempfile._get_candidate_names())
-    import os
-    return run_to_memory(joined, spark, name,
-                         os.path.join(tempfile.mkdtemp(), "ckpt"))
+    return run_to_memory(joined)
 
 
 @query("stream_asof_join", """
@@ -3711,27 +3602,21 @@ def stream_asof_join_query(spark, sf_dir):
     """Streaming as-of join (streaming/asof_stream.stream_asof_join):
     each purchase enriched with the same user's most recent view at or
     before it (60 min lookback), as an applyInPandasWithState custom
-    stateful operator — the streaming twin of operators/asof.asof_join
-    (r9 verdict item #3). Hash-verified with the emission frontier
-    pinned in SQL: a purchase emits only once the single union-stream
+    stateful operator — the streaming twin of operators/asof.asof_join.
+    Hash-verified with the emission frontier pinned in SQL: a purchase
+    emits only once the single union-stream
     watermark (max event ts over views+purchases minus the 2h delay)
     strictly passes its ts — matched rows hold to the same frontier
     because the most-recent-prior answer can improve until it passes;
     later purchases stay in state, never silently dropped."""
-    import os
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.asof_stream import (
         stream_asof_join)
-    from amundsendatabuilder_spark.streaming.events import run_to_memory
-    stream = _event_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     joined = stream_asof_join(
         stream.where(F.col("event_type") == "view"),
         stream.where(F.col("event_type") == "purchase"),
         horizon_minutes=60)
-    name = "sasof_" + next(tempfile._get_candidate_names())
-    return run_to_memory(joined, spark, name,
-                         os.path.join(tempfile.mkdtemp(), "ckpt"))
+    return run_to_memory(joined)
 
 
 @query("incremental_ingest_anti_join", r"""
@@ -4627,14 +4512,11 @@ def stream_windowed_heavy_hitters(spark, sf_dir):
     replays the per-window register grid from the same md5 coordinates
     and restricts to windows past the final watermark, pinning sketch
     math AND append emission semantics."""
-    import tempfile
-
     from amundsendatabuilder_spark.operators import sketches
     from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, windowed_frequency_registers)
-    regs = windowed_frequency_registers(_event_stream(spark, sf_dir))
-    name = "swhh_" + next(tempfile._get_candidate_names())
-    batch = run_to_memory(regs, spark, name, tempfile.mkdtemp())
+        windowed_frequency_registers)
+    batch = run_to_memory(windowed_frequency_registers(
+        read_table_stream(spark, sf_dir, "events")))
     (events,) = _t(spark, sf_dir, "events")
     users = (events.where(F.col("user_id") < 10)
              .select(F.col("user_id").cast("string").alias("v")).distinct())
@@ -6777,14 +6659,10 @@ def stream_static_enrich_query(spark, sf_dir):
     join+rollup restricted to the append-mode emission frontier
     (window end ≤ max event time − 2h), pinning join, rollup, and
     watermark semantics together."""
-    import tempfile
-
-    from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, stream_static_enrich)
+    from amundsendatabuilder_spark.streaming.events import stream_static_enrich
     (cust,) = _t(spark, sf_dir, "customer")
-    enriched = stream_static_enrich(_event_stream(spark, sf_dir), cust)
-    name = "sse_" + next(tempfile._get_candidate_names())
-    return run_to_memory(enriched, spark, name, tempfile.mkdtemp())
+    return run_to_memory(stream_static_enrich(
+        read_table_stream(spark, sf_dir, "events"), cust))
 
 
 @query("trend_slopes", r"""
@@ -7187,19 +7065,13 @@ def stream_last_writer_upsert(spark, sf_dir):
     equal the batch argmax (max event_id per user) — late/replayed rows
     are absorbed by the seq guard. Cross-batch advancement is pinned in
     tests/test_streaming.py."""
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.dedup_stream import (
         last_writer_filter)
-    from amundsendatabuilder_spark.streaming.events import run_to_memory
-    stream = (_event_stream(spark, sf_dir)
+    stream = (read_table_stream(spark, sf_dir, "events")
               .select(F.col("user_id").alias("k"),
                       F.col("event_id").alias("seq"),
                       F.col("value").alias("val")))
-    out = last_writer_filter(stream)
-    name = "slw_" + next(tempfile._get_candidate_names())
-    drained = run_to_memory(out, spark, name, tempfile.mkdtemp(),
-                            output_mode="update")
+    drained = run_to_memory(last_writer_filter(stream), output_mode="update")
     w = Window.partitionBy("k").orderBy(F.col("seq").desc())
     return (drained.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
@@ -7630,13 +7502,10 @@ def stream_histogram_registers_query(spark, sf_dir):
     state is 64 longs per open window instead of every value.
     Hash-verified against the batch register build restricted to the
     append-mode emission frontier."""
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, windowed_histogram_registers)
-    regs = windowed_histogram_registers(_event_stream(spark, sf_dir))
-    name = "shr_" + next(tempfile._get_candidate_names())
-    return run_to_memory(regs, spark, name, tempfile.mkdtemp())
+        windowed_histogram_registers)
+    return run_to_memory(windowed_histogram_registers(
+        read_table_stream(spark, sf_dir, "events")))
 
 
 @query("quality_decile_profile", r"""
@@ -10619,13 +10488,10 @@ def stream_benford_registers_query(spark, sf_dir):
     string form — benford_audit as a register stream. Hash-verified
     against the batch digit build restricted to the append-mode
     emission frontier."""
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, windowed_benford_registers)
-    regs = windowed_benford_registers(_event_stream(spark, sf_dir))
-    name = "sbr_" + next(tempfile._get_candidate_names())
-    return run_to_memory(regs, spark, name, tempfile.mkdtemp())
+        windowed_benford_registers)
+    return run_to_memory(windowed_benford_registers(
+        read_table_stream(spark, sf_dir, "events")))
 
 
 @query("keyness_g2", (r"""
@@ -11115,13 +10981,10 @@ def stream_bottomk_sample_query(spark, sf_dir):
     max(ts) − delay on the AvailableNow drain) — an all-integer payload,
     so the streaming entry gets a FULL value-hash check, not the weaker
     rows-only one."""
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, windowed_bottomk_sample)
-    sample = windowed_bottomk_sample(_event_stream(spark, sf_dir))
-    name = "sbk_" + next(tempfile._get_candidate_names())
-    out = run_to_memory(sample, spark, name, tempfile.mkdtemp())
+        windowed_bottomk_sample)
+    out = run_to_memory(windowed_bottomk_sample(
+        read_table_stream(spark, sf_dir, "events")))
     return out.orderBy("window_start", "rank")
 
 
@@ -11134,13 +10997,10 @@ def stream_minhash_registers_query(spark, sf_dir):
     compare two windows' signatures position-wise for their Jaccard.
     Hash-verified against the batch per-hour min restricted to the
     append-mode emission frontier."""
-    import tempfile
-
     from amundsendatabuilder_spark.streaming.events import (
-        run_to_memory, windowed_minhash_registers)
-    regs = windowed_minhash_registers(_event_stream(spark, sf_dir))
-    name = "smr_" + next(tempfile._get_candidate_names())
-    return run_to_memory(regs, spark, name, tempfile.mkdtemp())
+        windowed_minhash_registers)
+    return run_to_memory(windowed_minhash_registers(
+        read_table_stream(spark, sf_dir, "events")))
 
 
 def _pca_top_oracle(n_components: int = 2, iters: int = 8) -> str:

@@ -167,39 +167,68 @@ def _read_parquet(spark: SparkSession, path: str):
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TPCH_TABLES) -> dict:
-    """Read the driver-provided parquet tables as DataFrames and register
-    them as temp views (so plans can be written in either API)."""
-    # defensive: queries assume UTC epoch math and nanos-tolerant parquet
-    # reads even when the caller (e.g. the verification driver) built the
-    # session without session.py's defaults
+def _pin_read_confs(spark: SparkSession) -> None:
+    """Pin what both table readers assume even when the caller built the
+    session without ``get_spark``'s defaults: UTC epoch math and
+    nanos-tolerant parquet reads."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass  # static conf in some builds; events read then needs our session
+
+
+def _normalize_times(df, name: str):
+    """Give every time column of table ``name`` the type ``timestamp``."""
+    # nanosAsLong surfaces TIMESTAMP(NANOS) columns as bigint; restore
+    # them to timestamps at microsecond precision (floor division —
+    # matches DuckDB's TIMESTAMP_NS -> TIMESTAMP truncation).
+    for c in NANO_TS_COLS.get(name, ()):
+        if dict(df.dtypes).get(c) == "bigint":
+            # integer division — nanos exceed double's 2^53 mantissa
+            df = df.withColumn(
+                c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
+    # Parquet TIMESTAMP(isAdjustedToUTC=false) infers as TIMESTAMP_NTZ in
+    # Spark 4, which unix_micros()/epoch math reject. The session tz is
+    # pinned to UTC, so casting NTZ -> TIMESTAMP preserves every value
+    # while restoring the full temporal function surface (and DuckDB
+    # oracles, which read the same parquet as naive timestamps, stay in
+    # agreement).
+    for c, dtype in df.dtypes:
+        if dtype == "timestamp_ntz":
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
+    return df
+
+
+def load_tables(spark: SparkSession, sf_dir: str,
+                names: tuple[str, ...] = TPCH_TABLES) -> dict:
+    """Read the parquet tables under ``sf_dir`` as DataFrames and register
+    them as temp views (so plans can be written in either API)."""
+    _pin_read_confs(spark)
     out = {}
     for name in names:
-        df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
-        # nanosAsLong surfaces TIMESTAMP(NANOS) columns as bigint; restore
-        # them to timestamps at microsecond precision (floor division —
-        # matches DuckDB's TIMESTAMP_NS -> TIMESTAMP truncation).
-        if name in NANO_TS_COLS:
-            for c in NANO_TS_COLS[name]:
-                if dict(df.dtypes).get(c) == "bigint":
-                    # integer division — nanos exceed double's 2^53 mantissa
-                    df = df.withColumn(
-                        c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
-        # Parquet TIMESTAMP(isAdjustedToUTC=false) infers as TIMESTAMP_NTZ in
-        # Spark 4, which unix_micros()/epoch math reject. The session tz is
-        # pinned to UTC above, so casting NTZ -> TIMESTAMP preserves every
-        # value while restoring the full temporal function surface (and
-        # DuckDB oracles, which read the same parquet as naive timestamps,
-        # stay in agreement).
-        for c, dtype in df.dtypes:
-            if dtype == "timestamp_ntz":
-                df = df.withColumn(c, F.col(c).cast("timestamp"))
+        df = _normalize_times(
+            _read_parquet(spark, f"{sf_dir}/{name}.parquet"), name)
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str):
+    """The file-source stream twin of ``load_tables``: table ``name`` as a
+    ``readStream`` whose new files become micro-batches, typed as
+    ``load_tables`` types it.
+
+    The declared schema is the one Spark inferred for the file (the
+    ``_read_parquet`` memo), so each column reads with its on-disk
+    encoding — a hand-written schema could reinterpret an int64 column
+    (micros read as nanos skew every event time 1000x)."""
+    _pin_read_confs(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    reader = spark.readStream.schema(_read_parquet(spark, path).schema)
+    if not os.path.isdir(path):
+        # the file source watches a directory (as a Spark-written copy of
+        # a table is): watch sf_dir, glob-filtered down to the one file
+        reader = reader.option("pathGlobFilter", f"{name}.parquet")
+        path = sf_dir
+    return _normalize_times(reader.parquet(path), name)

@@ -9,11 +9,20 @@ so late data is handled and state is bounded:
   late-data watermark;
 - ``sessionize``: session windows per user (gap-based) via
   ``F.session_window``;
-- ``run_to_memory``: AvailableNow drain into an in-memory table for tests
-  and the rows-only correctness check.
+- ``run_to_memory``: the one drain of every streaming registry entry and
+  test — AvailableNow into an in-memory table, with a checkpoint that is
+  removed on return.
+
+The registry entries read their input with ``session.read_table_stream``,
+the stream twin of ``load_tables``; ``read_event_stream`` reads a
+directory of event files with a declared schema.
 """
 
 from __future__ import annotations
+
+import json
+import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -89,41 +98,39 @@ def windowed_distinct_registers(events: DataFrame, window: str = "1 hour",
     )
 
 
-# last drained query's progress record, for the state-store shape check
-# of tools/plan_manifest.py — overwritten per drain, read immediately
-# after the suite callable returns
+# the progress of the last ``run_to_memory`` drain (its only writer) and
+# its sink's view name, for the state-store shape check of
+# tools/plan_manifest.py — overwritten per drain, read right after the
+# suite callable returns
 LAST_STREAM_AUDIT: dict = {}
 
 
-def record_stream_audit(q, name: str) -> None:
-    """Stash a terminated StreamingQuery's progress (micro-batch count,
-    state operator names, state rows) so the plan manifest tool can
-    assert the state-store shape of every streaming entry against its
-    ``STREAM_EXPECT``. Never raises: the check is observability, not
-    control flow."""
-    import json as _json
-    try:
-        progs = [_json.loads(p.json) for p in q.recentProgress]
-    except Exception:
-        progs = []
-    LAST_STREAM_AUDIT.clear()
-    LAST_STREAM_AUDIT.update({"name": name, "progress": progs})
-
-
-def run_to_memory(stream_df: DataFrame, spark: SparkSession,
-                  name: str, checkpoint_dir: str,
+def run_to_memory(stream_df: DataFrame,
                   output_mode: str = "append") -> DataFrame:
-    """Drain the stream with AvailableNow into an in-memory sink and
-    return the resulting batch DataFrame."""
-    q = (stream_df.writeStream.format("memory")
-         .queryName(name)
-         .outputMode(output_mode)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    record_stream_audit(q, name)
-    return spark.table(name)
+    """Drain ``stream_df`` with AvailableNow into a memory sink and return
+    the sink's rows as a batch DataFrame.
+
+    The sink's view gets a fresh name per drain. Its checkpoint lives in
+    a temporary directory that is removed on return: a memory sink holds
+    its rows on the driver and is not durable, so there is nothing to
+    resume from (``kafka_job.run_available_now`` keeps its caller's
+    checkpoint, which is its offset commit). The drain's progress
+    (micro-batches, state operators, state rows) goes to
+    ``LAST_STREAM_AUDIT``."""
+    name = f"stream_{uuid.uuid4().hex}"
+    with tempfile.TemporaryDirectory() as checkpoint_dir:
+        q = (stream_df.writeStream.format("memory")
+             .queryName(name)
+             .outputMode(output_mode)
+             .option("checkpointLocation", checkpoint_dir)
+             .trigger(availableNow=True)
+             .start())
+        q.awaitTermination()
+    LAST_STREAM_AUDIT.clear()
+    LAST_STREAM_AUDIT.update({
+        "name": name,
+        "progress": [json.loads(p.json) for p in q.recentProgress]})
+    return stream_df.sparkSession.table(name)
 
 
 def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
@@ -430,7 +437,7 @@ def _bottomk_fn(k: int, window_us: int):
         # window end. But that invariant leans on Spark's INTERNAL
         # strict-< comparison of timeoutTimestamp vs the eviction
         # watermark; if a version ever makes the boundary inclusive, a
-        # hard assert would kill the production query (r12 advice).
+        # hard assert would kill the production query.
         # Degrade gracefully instead: warn (the invariant check stays,
         # non-fatal) and take the closed path — emit what the register
         # holds and drop the state, exactly what the next watermark tick

@@ -4399,9 +4399,7 @@ def test_ndcg_at_k_known_values(spark):
     assert od.ndcg == 1.0 and od.dcg == out.dcg and od.idcg == out.idcg
 
 
-def test_windowed_benford_registers_stream(spark):
-    import tempfile
-
+def test_windowed_benford_registers_stream(spark, tmp_path):
     from amundsendatabuilder_spark.streaming.events import (
         run_to_memory, windowed_benford_registers)
     # two hourly windows; the second stays open past the watermark
@@ -4413,12 +4411,10 @@ def test_windowed_benford_registers_stream(spark):
     src = spark.createDataFrame(
         rows, "event_id long, ts string, value double").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "value")
-    path = tempfile.mkdtemp()
+    path = str(tmp_path / "events")
     src.write.mode("overwrite").parquet(path)
     stream = (spark.readStream.schema(src.schema).parquet(path))
-    out = run_to_memory(
-        windowed_benford_registers(stream), spark,
-        "benford_test_sink", tempfile.mkdtemp())
+    out = run_to_memory(windowed_benford_registers(stream))
     got = {(r.window_start.hour, r.digit): r.cnt for r in out.collect()}
     # only the closed 00:00 window is emitted in append mode
     assert got == {(0, 1): 2, (0, 9): 1}
@@ -4577,9 +4573,8 @@ def test_power_iterate_matches_python_loop():
         _power_iterate({(0, 0): 1e12}, 1, "t:")
 
 
-def test_windowed_minhash_registers_stream(spark):
+def test_windowed_minhash_registers_stream(spark, tmp_path):
     import hashlib
-    import tempfile
 
     from amundsendatabuilder_spark.functions.hashing import (
         minhash_constants)
@@ -4592,12 +4587,10 @@ def test_windowed_minhash_registers_stream(spark):
     src = spark.createDataFrame(
         rows, "event_id long, ts string, user_id long").select(
         "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id")
-    path = tempfile.mkdtemp()
+    path = str(tmp_path / "events")
     src.write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema(src.schema).parquet(path)
-    out = run_to_memory(
-        windowed_minhash_registers(stream, num_hashes=16), spark,
-        "minhash_test_sink", tempfile.mkdtemp())
+    out = run_to_memory(windowed_minhash_registers(stream, num_hashes=16))
     got = {r.hash_idx: r.min_hash for r in out.collect()
            if r.window_start.hour == 0}
     assert len(got) == 16

@@ -3,6 +3,8 @@ file-source stream (AvailableNow drain -> memory sink)."""
 
 import os
 
+import pytest
+
 
 def test_windowed_counts_stream(spark, tmp_path):
     from amundsendatabuilder_spark.session import load_tables
@@ -15,8 +17,7 @@ def test_windowed_counts_stream(spark, tmp_path):
 
     stream = read_event_stream(spark, src)
     agg = windowed_counts(stream, window="1 hour", watermark="2 hours")
-    got = run_to_memory(agg, spark, "windowed_counts_test",
-                        str(tmp_path / "ckpt"), output_mode="append")
+    got = run_to_memory(agg)
     # batch equivalent for comparison (watermark drops nothing in a
     # bounded replay ordered within one batch)
     from pyspark.sql import functions as F
@@ -51,14 +52,64 @@ def test_sessionize_stream(spark, tmp_path):
     src = str(tmp_path / "sess_src")
     df.write.mode("overwrite").parquet(src)
     stream = read_event_stream(spark, src)
-    got = run_to_memory(sessionize(stream, gap="30 minutes"), spark,
-                        "sessions_test", str(tmp_path / "ckpt2"))
+    got = run_to_memory(sessionize(stream, gap="30 minutes"))
     sessions = {(r["user_id"], str(r["window_start"])): r["n_events"]
                 for r in got.collect()}
     # user 1: events at 0:00+0:10 merge (gap<30m), 2:00 separate
     assert sessions[(1, "2024-01-01 00:00:00")] == 2
     assert sessions[(1, "2024-01-01 02:00:00")] == 1
     assert sessions[(2, "2024-01-01 00:05:00")] == 1
+
+
+def test_registry_stream_leaves_no_checkpoint_behind(spark, tmp_path,
+                                                     monkeypatch):
+    """A registry streaming entry's drain removes its checkpoint: with the
+    temp directory pointed at an empty folder, the folder is still empty
+    once the entry's rows are collected."""
+    import tempfile
+
+    from amundsendatabuilder_spark.plans.oracle_suite import QUERIES
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = QUERIES["stream_windowed_counts"](
+        spark, "/root/testdata/sf0.001").collect()
+    assert rows
+    assert list(tmp_path.iterdir()) == []
+
+
+@pytest.mark.parametrize("encoding", ["int64_nanos", "int64_micros_ntz",
+                                      "int96"])
+def test_read_table_stream_matches_load_tables(spark, tmp_path, encoding):
+    """Whatever the events file's ``ts`` encoding, the stream reader gives
+    the rows and the ``timestamp`` type that ``load_tables`` gives."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from amundsendatabuilder_spark.session import (
+        load_tables, read_table_stream)
+    from amundsendatabuilder_spark.streaming.events import run_to_memory
+    times = [dt.datetime(2024, 1, 1, 0, 0), dt.datetime(2024, 1, 1, 1, 30),
+             dt.datetime(2024, 3, 5, 12, 0, 0, 123456)]
+    unit = "us" if encoding == "int64_micros_ntz" else "ns"
+    table = pa.table({
+        "event_id": pa.array([1, 2, 3], pa.int64()),
+        "ts": pa.array(times, pa.timestamp(unit)),
+        "user_id": pa.array([7, 8, 9], pa.int64()),
+        "event_type": ["view", "click", "purchase"],
+        "value": [1.0, 2.0, 3.0],
+        "props": ["{}", "{}", "{}"]})
+    pq.write_table(table, str(tmp_path / "events.parquet"),
+                   use_deprecated_int96_timestamps=encoding == "int96")
+    sf_dir = str(tmp_path)
+
+    batch = load_tables(spark, sf_dir, ("events",))["events"]
+    stream = run_to_memory(read_table_stream(spark, sf_dir, "events"))
+    assert dict(batch.dtypes)["ts"] == "timestamp"
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    got = sorted(tuple(r) for r in stream.select("event_id", "ts").collect())
+    want = sorted(tuple(r) for r in batch.select("event_id", "ts").collect())
+    assert got == want == list(zip([1, 2, 3], times))
 
 
 def test_stream_first_seen_dedup(spark, tmp_path):
@@ -226,8 +277,7 @@ def test_sessionize_stream_matches_batch(spark, tmp_path):
               .option("maxFilesPerTrigger", 1)  # f2's batch advances the watermark
               .option("pathGlobFilter", "*.parquet")
               .parquet(str(src) + "/*"))
-    out = run_to_memory(sessionize(stream, gap="30 minutes"), spark,
-                        "sess_eq", str(tmp_path / "chk"))
+    out = run_to_memory(sessionize(stream, gap="30 minutes"))
     streamed = {(r.user_id, int(r.window_start.timestamp() * 1_000_000),
                  r.n_events) for r in out.collect() if r.user_id != 99}
     assert streamed == batch
@@ -260,7 +310,7 @@ def test_stream_stream_attribution_interval_join(spark, tmp_path):
         stream.where("event_type = 'view'"),
         stream.where("event_type = 'purchase'"),
         lookback_minutes=60)
-    got = run_to_memory(joined, spark, "attr_test", str(tmp_path / "ckpt_attr"))
+    got = run_to_memory(joined)
     pairs = sorted((r["event_id"], str(r["view_ts"])) for r in got.collect())
     assert pairs == [(10, "2024-01-01 11:50:00")]
 
@@ -293,8 +343,7 @@ def test_stream_stream_attribution_outer_emits_null_rows(spark, tmp_path):
         stream.where("event_type = 'view'"),
         stream.where("event_type = 'purchase'"),
         lookback_minutes=60)
-    got = run_to_memory(joined, spark, "attro_test",
-                        str(tmp_path / "ckpt_attro"))
+    got = run_to_memory(joined)
     pairs = sorted((r["event_id"], str(r["view_ts"])) for r in got.collect())
     # 10 matched, 11 null-extended; 91 held in state (watermark frontier),
     # sentinel 90's view matches purchase 91 only if within window — it is
@@ -332,8 +381,7 @@ def test_sessionize_merges_across_micro_batches(spark, tmp_path):
               .option("maxFilesPerTrigger", 1)
               .option("latestFirst", "false")
               .parquet(str(src) + "/*"))
-    got = run_to_memory(sessionize(stream, gap="30 minutes"), spark,
-                        "merge_sessions_test", str(tmp_path / "ckpt"))
+    got = run_to_memory(sessionize(stream, gap="30 minutes"))
     user1 = [(str(r["window_start"]), r["n_events"])
              for r in got.collect() if r["user_id"] == 1]
     # one MERGED session: fragments from batch 1 and batch 2 fused in state
@@ -364,8 +412,7 @@ def test_windowed_counts_accumulate_across_micro_batches(spark, tmp_path):
               .option("latestFirst", "false")
               .parquet(str(src) + "/*"))
     got = run_to_memory(windowed_counts(stream, window="1 hour",
-                                        watermark="2 hours"),
-                        spark, "merge_windows_test", str(tmp_path / "ckpt"))
+                                        watermark="2 hours"))
     clicks = {str(r["window_start"]): (r["n_events"], r["total_value"])
               for r in got.collect() if r["event_type"] == "click"}
     assert clicks["2024-01-01 05:00:00"] == (3, 7.0)
@@ -396,7 +443,7 @@ def test_windowed_distinct_registers_match_batch_sketch(spark, tmp_path):
         "value double, props string")
         .option("maxFilesPerTrigger", "1").parquet(src))
     regs = windowed_distinct_registers(stream)
-    got = run_to_memory(regs, spark, "wdr_test", str(tmp_path / "ckpt"))
+    got = run_to_memory(regs)
     got_m = {(str(r["window_start"]), r["event_type"], r["bucket"]): r["r"]
              for r in got.collect()}
     assert got_m, "no windows emitted"
@@ -435,7 +482,7 @@ def test_windowed_frequency_registers_match_batch_sketch(spark, tmp_path):
         "value double, props string")
         .option("maxFilesPerTrigger", "1").parquet(src))
     regs = windowed_frequency_registers(stream)
-    got = run_to_memory(regs, spark, "wfr_test", str(tmp_path / "ckpt"))
+    got = run_to_memory(regs)
     got_m = {(str(r["window_start"]), r["j"], r["bucket"]): r["cnt"]
              for r in got.collect()}
     assert got_m, "no windows emitted"
@@ -479,9 +526,7 @@ def test_stream_static_enrich_join_is_stateless_and_exact(spark, tmp_path):
     events.write.mode("overwrite").parquet(src)
 
     stream = read_event_stream(spark, src)
-    got = run_to_memory(
-        stream_static_enrich(stream, cust), spark,
-        "sse_test", str(tmp_path / "ckpt"), output_mode="append")
+    got = run_to_memory(stream_static_enrich(stream, cust))
     want = (events.join(
         cust.select(F.col("c_custkey").alias("user_id"),
                     F.col("c_mktsegment").alias("segment")), "user_id")
@@ -537,8 +582,7 @@ def test_windowed_histogram_registers_match_batch(spark, tmp_path):
     src = str(tmp_path / "events_src")
     events.write.mode("overwrite").parquet(src)
     got = run_to_memory(
-        windowed_histogram_registers(read_event_stream(spark, src)),
-        spark, "shr_test", str(tmp_path / "ckpt"), output_mode="append")
+        windowed_histogram_registers(read_event_stream(spark, src)))
     cents = F.floor(F.col("value") * 100).cast("long")
     b = F.least(F.lit(63).cast("long"),
                 F.greatest(F.lit(0).cast("long"), cents)
@@ -598,8 +642,7 @@ def test_stream_asof_join_cross_batch_state_and_frontier(spark, tmp_path):
     out = run_to_memory(
         stream_asof_join(stream.where("event_type = 'view'"),
                          stream.where("event_type = 'purchase'"),
-                         horizon_minutes=60),
-        spark, "asof_stream_test", str(tmp_path / "ckpt_asof"))
+                         horizon_minutes=60))
     rows = {r.event_id: r for r in out.collect()}
     # purchase 100: answer is the CROSS-BATCH view at 10:25, not 10:20
     assert set(rows) == {100, 101}
@@ -635,8 +678,7 @@ def test_stream_asof_join_horizon_excludes_stale_views(spark, tmp_path):
     out = run_to_memory(
         stream_asof_join(stream.where("event_type = 'view'"),
                          stream.where("event_type = 'purchase'"),
-                         horizon_minutes=60),
-        spark, "asof_stream_test2", str(tmp_path / "ckpt_asof2"))
+                         horizon_minutes=60))
     rows = {r.event_id: r for r in out.collect()}
     assert rows[100].asof_view_ts is None          # only view is > horizon
     assert rows[101].asof_view_ts == t(75)         # tie at purchase ts OK
@@ -722,8 +764,7 @@ def test_stream_bottomk_sample_register_and_frontier(spark, tmp_path):
               .option("maxFilesPerTrigger", 1)
               .option("latestFirst", "false")
               .parquet(str(src) + "/*"))
-    out = run_to_memory(windowed_bottomk_sample(stream, k=3),
-                        spark, "bk_stream_test", str(tmp_path / "ckpt_bk"))
+    out = run_to_memory(windowed_bottomk_sample(stream, k=3))
     rows = out.orderBy("window_start", "rank").collect()
     # expected: the 3 (hv, id)-smallest of ids 1..10 by the same hash
     exp = (spark.createDataFrame([(i,) for i in range(1, 11)], "id long")
@@ -774,8 +815,7 @@ def test_stream_bottomk_sample_drops_late_stragglers(spark, tmp_path):
               .option("maxFilesPerTrigger", 1)
               .option("latestFirst", "false")
               .parquet(str(src) + "/*"))
-    out = run_to_memory(windowed_bottomk_sample(stream, k=3),
-                        spark, "bk_late_test", str(tmp_path / "ckpt_bkl"))
+    out = run_to_memory(windowed_bottomk_sample(stream, k=3))
     rows = out.orderBy("window_start", "rank").collect()
     # exactly one emission of the 10:00 window; the straggler is absent
     assert [r.rank for r in rows] == [1, 2, 3]
@@ -798,9 +838,7 @@ def test_last_writer_seq_tie_breaks_to_larger_value(spark, tmp_path):
         str(src / "b1"))
     stream = (spark.readStream.schema("k long, seq long, val double")
               .parquet(str(src) + "/*"))
-    out = run_to_memory(last_writer_filter(stream), spark,
-                        "lw_tie_test", str(tmp_path / "ckpt_lw_tie"),
-                        output_mode="update")
+    out = run_to_memory(last_writer_filter(stream), output_mode="update")
     rows = out.collect()
     assert len(rows) == 1
     assert (rows[0].k, rows[0].seq, rows[0].val) == (1, 5, 9.0)
