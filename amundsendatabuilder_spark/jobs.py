@@ -18,6 +18,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark.models.base import GraphOutput, graph_profile, union_graphs
 from amundsendatabuilder_spark.plans.publish import stamp_publish_tag
@@ -70,14 +71,17 @@ class CatalogJob:
         (cache and ``graph_profile``), ``stage_s`` and ``publish_s``
         (writers and finalizers); a phase with nothing to do records ~0.
 
-        The cached graph is read twice: once by ``graph_profile``, whose one
-        aggregation validates it (raising before any write, publish or
-        finalizer), gives the ``nodes``/``rels`` counts and finds the shards
+        Both sides are cached as one frame, ``nodes`` and ``rels`` unioned
+        with a ``_side`` tag, so one cache fill computes the sides' shared
+        input (sources, nest, join) once. It is read through per-side
+        projections twice: once by ``graph_profile``, whose one aggregation
+        validates it (raising before any write, publish or finalizer),
+        gives the ``nodes``/``rels`` counts and finds the shards
         ``write_graph`` stages; and once by the writers."""
         t0 = time.time()
         summary: dict = {"publish_tag": self.publish_tag}
         last = t0
-        graph = None
+        cached = None
 
         def lap(phase: str) -> None:
             nonlocal last
@@ -88,7 +92,13 @@ class CatalogJob:
         try:
             graph = self.graph()
             lap("graph_s")
-            graph.nodes.cache(), graph.rels.cache()
+            cached = (graph.nodes.withColumn("_side", F.lit("nodes"))
+                      .unionByName(graph.rels.withColumn("_side", F.lit("rels")),
+                                   allowMissingColumns=True)
+                      .cache())
+            graph = GraphOutput(*(
+                cached.where(F.col("_side") == side).select(*df.columns)
+                for side, df in zip(GraphOutput._fields, graph)))
             profile = graph_profile(graph)
             for side in ("nodes", "rels"):
                 summary[side] = sum(p.rows for p in profile if p.side == side)
@@ -114,8 +124,7 @@ class CatalogJob:
             log.exception("catalog job failed")
             raise
         finally:
-            if graph is not None:
-                graph.nodes.unpersist(blocking=False)
-                graph.rels.unpersist(blocking=False)
+            if cached is not None:
+                cached.unpersist(blocking=False)
             summary["elapsed_sec"] = round(time.time() - t0, 2)
             log.info("job summary: %s", summary)

@@ -10,22 +10,34 @@
 - ``read_lineage``: CsvTable/ColumnLineageExtractor (:261-362) — direct
   edge DataFrames.
 
-All return the documented model input schemas of models/*.py.
+All return the documented model input schemas of models/*.py. Every
+reader shares one header/quote/escape/multiLine CSV reader (``_reader``).
+``read_tables_with_columns`` reads its two model files as text, every field
+a string as the reference's ``csv.DictReader`` gives it, and types only
+``sort_order`` and ``is_view`` itself; Spark's two-job ``inferSchema`` pass
+runs only for ``read_csv`` without a schema.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 
 from amundsendatabuilder_spark.functions.scalars import normalize_tags
 
 
+def _reader(spark: SparkSession) -> DataFrameReader:
+    """A CSV reader with a header row, ``"``-quoted and -escaped fields
+    that may span lines; with no schema or ``inferSchema`` every field
+    reads as a string."""
+    return (spark.read.option("header", True).option("quote", '"')
+            .option("escape", '"').option("multiLine", True))
+
+
 def read_csv(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
     """Schema-on-read CSV (header row). Explicit schema recommended for
     determinism (SURVEY §1.3); inferSchema only when schema is None."""
-    reader = spark.read.option("header", True).option("quote", '"') \
-        .option("escape", '"').option("multiLine", True)
+    reader = _reader(spark)
     if schema:
         reader = reader.schema(schema)
     else:
@@ -48,9 +60,7 @@ def read_csv_with_quarantine(spark: SparkSession, path: str,
     has no bad-row story (csv DictReader raises mid-iteration); this is
     the operational upgrade a lake-scale load needs."""
     full = schema.rstrip() + ", _corrupt_record string"
-    df = (spark.read.option("header", True).option("quote", '"')
-          .option("escape", '"').option("multiLine", True)
-          .option("mode", "PERMISSIVE")
+    df = (_reader(spark).option("mode", "PERMISSIVE")
           .option("columnNameOfCorruptRecord", "_corrupt_record")
           .schema(full).csv(path)
           # input_file_name() must bind at the scan — after the cache
@@ -76,13 +86,17 @@ def read_tables_with_columns(spark: SparkSession, table_csv: str,
     The columns side is pre-aggregated (groupBy key -> sorted struct list)
     then joined; at catalog scale the aggregate side is small, so Catalyst
     broadcasts it — zero shuffles on the table spine.
+
+    Both files read as text, without a schema-inference pass: identifiers
+    such as schema ``007`` keep their digits, and ``sort_order`` and
+    ``is_view`` are the only fields typed here.
     """
-    tables = read_csv(spark, table_csv).withColumn(
+    tables = _reader(spark).csv(table_csv).withColumn(
         "tags", normalize_tags(F.col("tags"))).withColumn(
         "is_view",
-        F.when(F.col("is_view").cast("string").isin("", "False", "false")
+        F.when(F.lower("is_view").isin("", "false")
                | F.col("is_view").isNull(), F.lit(False)).otherwise(F.lit(True)))
-    cols = read_csv(spark, column_csv)
+    cols = _reader(spark).csv(column_csv)
     badges_col = (F.expr("filter(transform(split(badges, ','), b -> lower(trim(b))), b -> b != '')")
                   if "badges" in cols.columns
                   else F.array().cast("array<string>"))

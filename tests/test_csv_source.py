@@ -50,3 +50,31 @@ def test_read_csv_with_quarantine_clean_file_empty_side_channel(
     p.write_text("id,n\n1,10\n2,20\n")
     good, bad = read_csv_with_quarantine(spark, str(p), "id int, n int")
     assert good.count() == 2 and bad.count() == 0
+
+
+def test_model_files_read_as_text(spark, tmp_path):
+    """The table and column files read as text, with no schema-inference
+    pass: numeric-looking identifiers keep their digits, the column join
+    still matches them, and the keys carry them as written."""
+    from amundsendatabuilder_spark.models.table_metadata import expand_tables
+    from amundsendatabuilder_spark.session import jobs_started_by
+    from amundsendatabuilder_spark.sources.csv_source import (
+        read_tables_with_columns)
+    table_csv, column_csv = tmp_path / "table.csv", tmp_path / "col.csv"
+    table_csv.write_text(
+        "database,cluster,schema,name,description,tags,is_view,"
+        "description_source\nhive,gold,007,2024,numbered,,FALSE,\n")
+    column_csv.write_text(
+        "name,description,col_type,sort_order,database,cluster,schema,"
+        "table_name,badges\n01,,int,1,hive,gold,007,2024,\n")
+    tables, jobs = jobs_started_by(spark, lambda: read_tables_with_columns(
+        spark, str(table_csv), str(column_csv)))
+    assert len(jobs) == 2  # one header read per file
+    [row] = tables.collect()
+    assert (row["schema"], row["name"], row["is_view"]) == ("007", "2024",
+                                                            False)
+    assert [(c["name"], c["sort_order"]) for c in row["columns"]] == [
+        ("01", 1)]
+    keys = {r["KEY"] for r in expand_tables(tables).nodes
+            .where(F.col("LABEL").isin("Table", "Column")).collect()}
+    assert keys == {"hive://gold.007/2024", "hive://gold.007/2024/01"}

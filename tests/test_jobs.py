@@ -3,15 +3,27 @@
 import pytest
 
 
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_job_compose_stage_and_finalize(spark, tables_df, tmp_path):
+    """The run caches one frame for both graph sides and drops it on
+    return. On the fixture tables it starts 10 jobs: the one cache fill
+    computes the sides' shared input once."""
     from amundsendatabuilder_spark.jobs import CatalogJob
     from amundsendatabuilder_spark.models.table_metadata import expand_tables
+    from amundsendatabuilder_spark.session import jobs_started_by
+    spark.catalog.clearCache()
     finalized = []
     job = (CatalogJob(spark, publish_tag="t1", epoch_ms=1700000000000)
            .add(expand_tables(tables_df))
            .on_success(lambda: finalized.append(True)))
-    summary = job.run(stage_dir=str(tmp_path / "g"))
+    summary, jobs = jobs_started_by(
+        spark, lambda: job.run(stage_dir=str(tmp_path / "g")))
     assert summary["status"] == "success"
+    assert len(jobs) == 10
+    assert _cache_is_empty(spark)
     assert summary["nodes"] > 0 and summary["rels"] > 0
     assert finalized == [True]
     phases = [summary[k] for k in ("graph_s", "count_s", "stage_s",
@@ -34,9 +46,11 @@ def test_job_validation_failure_skips_finalizers(spark):
     job = (CatalogJob(spark, publish_tag="t2")
            .add(GraphOutput(bad_nodes, _empty_rels(spark)))
            .on_success(lambda: finalized.append(True)))
+    spark.catalog.clearCache()
     with pytest.raises(ValueError, match="node_label_not_title"):
         job.run()
     assert finalized == []
+    assert _cache_is_empty(spark)
 
 
 NODE_SCHEMA = "KEY string, LABEL string, props map<string,string>"

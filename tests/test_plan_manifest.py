@@ -29,6 +29,21 @@ def test_manifest_names_are_the_registry():
     assert list(_manifest()) == list(QUERIES)
 
 
+def test_normalize_strips_rdd_call_site():
+    """An RDD scan's call site depends on what ran earlier in the process,
+    not on the query, so it is no part of the fingerprint."""
+    desc = ("* Scan ExistingRDD (1)\n\n(1) Scan ExistingRDD\n"
+            "Output [1]: [a#{i}]\n"
+            "Arguments: [a#{i}], MapPartitionsRDD[{i}] at "
+            "applySchemaToPythonRDD at {site}, ExistingRDD, "
+            "UnknownPartitioning(0)\n")
+    unknown = plan_manifest.normalize(desc.format(i=13, site="<unknown>:0"))
+    native = plan_manifest.normalize(
+        desc.format(i=1217, site="NativeMethodAccessorImpl.java:0"))
+    assert unknown == native
+    assert "applySchemaToPythonRDD" in unknown and "ExistingRDD" in unknown
+
+
 @pytest.mark.skipif(not os.path.isdir(plan_manifest.SF_DIR),
                     reason="sf0.001 testdata not present")
 def test_registry_prefix_matches_manifest():

@@ -69,13 +69,15 @@ STREAM_EXPECT = {
 }
 
 # what differs between runs of one plan: expression, exchange, codegen,
-# query stage and RDD ids, node ordinals and what points at them, AQE
-# statistics and progress, object hashes, streaming run ids, and every
-# path but a table's file name under SF_DIR
+# query stage and RDD ids, an RDD's creation call site (``at <unknown>:0``
+# or ``at NativeMethodAccessorImpl.java:0``, depending on what ran earlier
+# in the process), node ordinals and what points at them, AQE statistics
+# and progress, object hashes, streaming run ids, and every path but a
+# table's file name under SF_DIR
 _RUN_IDENTITY = re.compile(
     r"#\d+L?|\[plan_id=\d+\]|Statistics\([^)]*\)|\(\d+\)|\[\d+\]"
     r"|\s*\[codegen id : \d+\]|operator id[ :=]+\d+|^Arguments: \d+$"
-    r"|isFinalPlan=\w+|@[0-9a-f]{4,}\b"
+    r"|isFinalPlan=\w+|@[0-9a-f]{4,}\b| at [^\s,]+:\d+\b"
     r"|[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12}|file:[^\s,\]]*")
 _TABLE_PATH = re.compile(r"file:" + re.escape(SF_DIR) + r"/")
 _TREE_NODE = re.compile(r" \((\d+)\)(?:, Statistics\(.*\))?$")
